@@ -1,29 +1,32 @@
-"""Canonicalization: connected-components entity merge (SURVEY.md §2.5 A2).
+"""Canonicalization: entity merge onto ontology terms (SURVEY.md §2.5 A2).
 
 The reference got entity uniqueness for free from DB constraints; at
 transcript scale the engine must *merge* equivalent surface forms
-distributively. Mandated by BASELINE.json: "salted groupBy +
-connected-components-style merge on normalized surface forms".
+distributively (BASELINE.json: "salted groupBy + connected-components-
+style merge on normalized surface forms").
 
-Graph: bipartite surface-node ↔ term-node edges from linked mentions
-(plus optional surface↔surface evidence edges). Components are computed
-with the classic hash-min label-propagation loop expressed purely in
-DataFrames:
+Graph: bipartite surface-node ↔ term-node edges from linked mentions.
+Node ids are prefixed ('0:' terms, '1:' surfaces) so a term id sorts
+below every surface id. canonicalize builds it two ways:
 
-    comp(v) ← min over neighbors-and-self of comp(...)
+- functional dictionary (the default pipeline path): every surface links
+  to exactly one term (Lexicon.is_functional), so the graph is a star
+  forest and each component is a term plus its surfaces. The nodes
+  table is then a rollup by term — one aggregation over the linked
+  mentions, no component labelling at all.
+- ranked, multi-candidate dictionary: components are computed with the
+  classic hash-min label-propagation loop expressed purely in
+  DataFrames, comp(v) ← min over neighbors-and-self of comp(...), with
+  pointer jumping. Each round is one shuffle (groupBy node) followed by
+  a localCheckpoint (lineage cut) and a short-circuit fixpoint probe —
+  the driver-side loop is one Spark job per round and the only loop in
+  the engine (SURVEY.md §3.4); max_iter caps it for general graphs.
 
-Each iteration is one shuffle (groupBy node). Star-shaped components
-around hot entities are exactly the skew case BASELINE.json calls out, so
-the aggregation is *salted*: a two-phase min — partial min on
-(node, salt), final min on node — which bounds any single reducer's input
-to |partition|/n_salt rows. Convergence for the bipartite linking graph is
-≤ 2 hops (diameter 2); the loop still checks a fixpoint via a changed-count
-and caps at max_iter for general graphs. Each iteration localCheckpoints to
-cut lineage (driver-side loop = one Spark job per round, the only loop in
-the engine — SURVEY.md §3.4).
-
-Node ids are prefixed ('0:' terms, '1:' surfaces) so min() always elects a
-term id as the canonical representative when one exists.
+Star components around hot entities are the skew case BASELINE.json
+calls out. Both forms aggregate with plain groupBy: Spark's map-side
+partial aggregation already is the two-phase salted aggregation (each
+map task emits one row per key), so a hot term's reducer receives at
+most #map-tasks rows. salted_min is the explicit two-phase form.
 """
 
 from __future__ import annotations
@@ -77,63 +80,35 @@ def salted_min(df: DataFrame, key: str, val: str, n_salt: int = 8) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 10, n_salt: int = 8,
-    fixed_rounds: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     """edges(src, dst) → (node, component) with component = min node id in
     the component. Deterministic at any parallelism.
 
-    fixed_rounds=N runs exactly N rounds with no per-round localCheckpoint
-    and no convergence-probe job. Use it when the graph's diameter is
-    known (the functional-dictionary linking graph is a star forest —
-    every surface has exactly one term edge and '0:'-prefixed term ids
-    sort below '1:'-prefixed surfaces, so round 1 already elects the term
-    as every member's component). The general loop keeps the
-    changed-count fixpoint probe and per-round checkpoints (lineage cut).
-
-    The SEED checkpoints below stay in both modes: sym/comp are referenced
-    several times per round (push + self-min + pointer-jump self-join),
-    and without materialization the upstream edge derivation re-executes
-    per reference — measured 3× slower than the probe loop it was meant
-    to beat."""
+    The SEED checkpoint stays: sym/comp are referenced several times per
+    round (push + self-min + pointer-jump self-join), and without
+    materialization the upstream edge derivation re-executes per
+    reference — measured 3× slower than the probe loop it was meant to
+    beat."""
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    if fixed_rounds is not None and fixed_rounds <= 0:
-        # degenerate: zero propagation rounds — identity labels
-        return (
-            sym.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("comp", F.col("node"))
-        )
-    sym = sym.localCheckpoint(eager=True)
-    general = fixed_rounds is None
+    ).localCheckpoint(eager=True)
     ctype = dict(sym.dtypes)["src"]
-    n_rounds = fixed_rounds if fixed_rounds is not None else max_iter
     comp = None
-    for r in range(n_rounds):
+    for r in range(max_iter):
         if r == 0:
             # FUSED round 1 (r6 optimization): with the identity seed
             # comp(v)=v the first push+min round equals
             # min(self, min over neighbors), computable as ONE
             # aggregation over sym (every node appears as src in the
             # symmetric relation) — this replaces the seed distinct,
-            # the seed checkpoint AND the round-1 join. A plain
-            # groupBy-min is used instead of salted_min throughout:
-            # Spark's partial (map-side) aggregation already IS the
-            # two-phase salted min — each map task emits one row per
-            # key, so a hot star center receives at most #map-tasks
-            # rows at the reducer (the physical partition is the salt;
-            # n_salt is kept for API compatibility).
+            # the seed checkpoint AND the round-1 join.
             agg = sym.groupBy(F.col("src").alias("node")).agg(
                 F.min("dst").alias("_m")
             )
             new_comp = agg.select(
                 "node",
                 F.least(F.col("node"), F.col("_m")).alias("comp"),
-                *([(F.col("_m") < F.col("node")).alias("_chg")]
-                  if general else []),
+                (F.col("_m") < F.col("node")).alias("_chg"),
             )
         else:
             # push each node's current comp to its neighbors, take min
@@ -152,83 +127,84 @@ def connected_components(
                 F.min("comp").alias("comp"), F.min("_old").alias("_old")
             )
             new_comp = agg.select(
-                "node", "comp",
-                *([(F.col("comp") < F.col("_old")).alias("_chg")]
-                  if general else []),
+                "node", "comp", (F.col("comp") < F.col("_old")).alias("_chg")
             )
         # pointer jumping (path compression): comp(v) ← comp(comp(v)).
         # Neighbor-min alone moves the min one hop per round (O(diameter));
         # with jumping each round roughly halves pointer depth → O(log n)
-        # rounds even on path graphs. In fixed-rounds mode the jump only
-        # helps BETWEEN rounds (after the last min round it is the
-        # identity for any graph whose declared round budget converged —
-        # the star-forest case), and the self-join would double-compute
-        # the un-checkpointed round, so it is skipped on the final round.
-        if general or r < n_rounds - 1:
-            # both self-join sides share the round aggregation's shuffle
-            # via ReuseExchange (same subtree, same partitioning), so the
-            # min step is computed once per round without an explicit
-            # persist — measured: a persist here SERIALIZES the two join
-            # branches on cache materialization locks (7.5-15 s vs 4-5 s
-            # per CC call at bench scale).
-            x, y = new_comp.alias("x"), new_comp.alias("y")
-            jumped = (
-                x.join(y, F.col("x.comp") == F.col("y.node"), "left")
-                .select(
-                    F.col("x.node").alias("node"),
-                    F.coalesce(F.col("y.comp"), F.col("x.comp")).alias("comp"),
-                    *([F.col("x._chg").alias("_chg")] if general else []),
-                )
+        # rounds even on path graphs. Both self-join sides share the
+        # round aggregation's shuffle via ReuseExchange (same subtree,
+        # same partitioning), so the min step is computed once per round
+        # without an explicit persist — measured: a persist here
+        # SERIALIZES the two join branches on cache materialization locks
+        # (7.5-15 s vs 4-5 s per CC call at bench scale).
+        x, y = new_comp.alias("x"), new_comp.alias("y")
+        jumped = (
+            x.join(y, F.col("x.comp") == F.col("y.node"), "left")
+            .select(
+                F.col("x.node").alias("node"),
+                F.coalesce(F.col("y.comp"), F.col("x.comp")).alias("comp"),
+                F.col("x._chg").alias("_chg"),
             )
-        else:
-            jumped = new_comp
-        if general:
-            jumped = jumped.localCheckpoint(eager=True)
-            # fixpoint probe, FUSED into the round aggregation (r6):
-            # labels are monotone non-increasing under both the push-min
-            # and the jump, so "some label strictly decreased in the min
-            # step" (_chg) is equivalent to the old post-jump frame
-            # comparison — min-step identity implies every label already
-            # equals its component minimum (a stable assignment is
-            # constant per component and bounded by the min node's own
-            # monotone label), hence the jump is the identity too. The
-            # probe is a short-circuit scan of the checkpointed frame
-            # instead of a join job per round.
-            changed = jumped.where(F.col("_chg")).limit(1).count()
-            comp = jumped.select("node", "comp")
-            if changed == 0:
-                break
-        else:
-            comp = jumped
+            .localCheckpoint(eager=True)
+        )
+        # fixpoint probe, FUSED into the round aggregation (r6): labels
+        # are monotone non-increasing under both the push-min and the
+        # jump, so "some label strictly decreased in the min step"
+        # (_chg) is equivalent to the old post-jump frame comparison —
+        # min-step identity implies every label already equals its
+        # component minimum (a stable assignment is constant per
+        # component and bounded by the min node's own monotone label),
+        # hence the jump is the identity too. The probe is a
+        # short-circuit scan of the checkpointed frame instead of a join
+        # job per round.
+        changed = jumped.where(F.col("_chg")).limit(1).count()
+        comp = jumped.select("node", "comp")
+        if changed == 0:
+            break
     return comp
 
 
 def canonicalize(
-    linked_mentions: DataFrame, n_salt: int = 8, fixed_rounds: int | None = None
+    linked_mentions: DataFrame, fixed_rounds: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """linked term mentions → (nodes, edges) graph tables.
 
     nodes(node_id, node_kind, canonical_label, aliases, n_mentions)
     edges(src, dst, rel, weight)
 
-    fixed_rounds: forwarded to connected_components — pass 1 for a
-    functional dictionary (star-forest graph, provably converged after one
-    round; see plans/pipeline.annotate), None for the general fixpoint loop.
+    fixed_rounds=1 (the pipeline's value) declares the functional-
+    dictionary star forest (see plans/pipeline.annotate): one propagation
+    round elects every surface's only term as its component, so the nodes
+    table is the closed form of that round — a rollup of the linked
+    mentions by term_id, with no component labelling, checkpoint or join.
+    fixed_rounds=None runs the general connected_components loop (ranked,
+    multi-candidate dictionaries, where one surface may link to several
+    terms and merge them).
     """
-    pairs = linked_mentions.select(
-        F.concat(F.lit("1:"), "match_norm").alias("src"),
-        F.concat(F.lit("0:"), "term_id").alias("dst"),
-        "term_label",
-    )
     edges = (
-        pairs.groupBy("src", "dst")
+        linked_mentions.groupBy(
+            F.concat(F.lit("1:"), "match_norm").alias("src"),
+            F.concat(F.lit("0:"), "term_id").alias("dst"),
+        )
         .agg(F.count("*").cast("double").alias("weight"))
-        .withColumn("rel", F.lit("linksTo"))
-        .select("src", "dst", "rel", "weight")
+        .select("src", "dst", F.lit("linksTo").alias("rel"), "weight")
     )
-    comp = connected_components(
-        edges.select("src", "dst"), n_salt=n_salt, fixed_rounds=fixed_rounds
-    )
+    if fixed_rounds is not None:
+        nodes = linked_mentions.groupBy("term_id").agg(
+            F.min("term_label").alias("canonical_label"),
+            F.sort_array(F.collect_set("match_norm")).alias("aliases"),
+            F.count("*").alias("n_mentions"),
+        ).select(
+            F.col("term_id").alias("node_id"),
+            F.lit("entity").alias("node_kind"),
+            F.coalesce("canonical_label", "term_id").alias("canonical_label"),
+            "aliases",
+            "n_mentions",
+        )
+        return nodes, edges
+
+    comp = connected_components(edges.select("src", "dst"))
 
     # per-component rollup: canonical id = the (term-first) min node id
     members = comp.withColumn(

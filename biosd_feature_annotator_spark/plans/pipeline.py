@@ -125,10 +125,11 @@ def annotate(
     if build_graph:
         # functional dictionary → the linking graph is a star forest
         # (every surface has exactly one term edge and term ids sort below
-        # surface ids), so CC is provably converged after ONE round: run
-        # it probe-free as a single lazy plan instead of the checkpointed
-        # fixpoint loop (several fixed-cost jobs saved per run). The
-        # ranked/multi-candidate path keeps the general loop.
+        # surface ids), so one propagation round already elects each
+        # surface's term: canonicalize builds the nodes as a rollup by
+        # term — one lazy aggregation per table, no component labelling,
+        # checkpoint job or join. The ranked/multi-candidate path runs
+        # the CC loop.
         nodes, edges = canonicalize(
             linked, fixed_rounds=1 if not ranked_linking else None
         )

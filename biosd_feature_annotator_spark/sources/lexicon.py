@@ -86,7 +86,16 @@ class Lexicon:
         only fan-out risk is two distinct terms sharing a normalized
         multi-token label (two 'tokens' rows with the same match_norm in
         lexicon_df). plans/pipeline.annotate consults this to decide
-        whether the zero-shuffle path (no W1 best-link window) is sound."""
+        whether the zero-shuffle path (no W1 best-link window) is sound.
+
+        It also guarantees one term per match_norm ACROSS match kinds —
+        what canonicalize's rollup by term relies on (each surface joins
+        exactly one star). Label and synonym rows share surface_map's
+        keys, so they cannot disagree; a 'tokens' row's match_norm is its
+        own term's normalized label, and surface_map holds that label as
+        a *label* claim (a label displaces a synonym claim), which only a
+        second term with the same multi-token label could own — exactly
+        the case this check rejects."""
         return len({" ".join(toks) for _, toks in self.token_labels}) == len(
             self.token_labels
         )

@@ -49,41 +49,97 @@ def test_salted_min_equals_plain_min(spark):
     assert plain == salted
 
 
-def test_cc_fixed_rounds_matches_loop_on_star_forest(spark):
-    """The probe-free fixed_rounds=1 fast path (functional-dictionary star
-    forest: term ids '0:*' sort below surface ids '1:*') must produce the
-    identical component assignment as the general fixpoint loop."""
-    edges = [
-        ("1:human", "0:T9606"), ("1:homo sapiens", "0:T9606"),
-        ("1:h. sapiens", "0:T9606"), ("1:mouse", "0:T10090"),
-        ("1:mus musculus", "0:T10090"), ("1:rat", "0:T10116"),
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    loop = {(r.node, r.comp) for r in connected_components(df, max_iter=10).collect()}
-    fast = {(r.node, r.comp) for r in connected_components(df, fixed_rounds=1).collect()}
-    assert fast == loop
-    # and every component head is the term node
-    assert all(c.startswith("0:") for _, c in fast)
+# one hot term (T_HS) reached through its label, three synonyms and a
+# tokens match ('sapiens ... homo'), next to lighter terms whose surfaces
+# collide with it in the synonym_lexicon fixture
+_HOT_TERM_TEXTS = [
+    "the donor is Homo sapiens",
+    "a human donor",
+    "H. sapiens tissue sample",
+    "the man was aged 40 years",
+    "sapiens of the genus homo",
+    "human and mouse cells",
+    "a house mouse and a field mouse",
+    "Mus musculus strain, one person enrolled",
+    "musculus mus in reverse",
+    "homo sapiens again, then a human",
+]
 
 
-def test_pipeline_graph_fast_path_matches_general(spark, lexicon):
-    """annotate(build_graph=True) nodes via fixed_rounds=1 == the general
-    CC loop on the same linked mentions (golden corpus)."""
+def _hot_term_transcripts(spark):
+    rows = [(f"h{i:02d}", t % 3, "user", text, None, 1704067200 + 10 * i + t)
+            for i, text in enumerate(_HOT_TERM_TEXTS) for t in range(3)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts_s long")
+    return df.select("conv_id", "turn_idx", "role", "text", "tool",
+                     F.timestamp_seconds("ts_s").alias("ts"))
+
+
+def _fast_and_general_graphs(spark, lex, tr):
+    """canonicalize's functional path (fixed_rounds=1, the rollup by term)
+    and the general CC loop on the same linked mentions, asserted equal:
+    nodes rows, edges rows and both tables' dtypes. Returns the nodes
+    rows keyed by node_id."""
     from biosd_feature_annotator_spark.operators.canonicalize import canonicalize
     from biosd_feature_annotator_spark.operators.extract import extract_mentions
     from biosd_feature_annotator_spark.operators.link import link_entities
     from biosd_feature_annotator_spark.sources.lexicon import lexicon_df
+
+    linked = link_entities(extract_mentions(tr, lex), lexicon_df(spark, lex))
+    linked = linked.persist()
+    fast_nodes, fast_edges = canonicalize(linked, fixed_rounds=1)
+    loop_nodes, loop_edges = canonicalize(linked, fixed_rounds=None)
+    assert fast_nodes.dtypes == loop_nodes.dtypes
+    assert fast_edges.dtypes == loop_edges.dtypes
+    nkey = lambda r: (r.node_id, r.node_kind, r.canonical_label,
+                      tuple(r.aliases), r.n_mentions)  # noqa: E731
+    fast = sorted(map(nkey, fast_nodes.collect()))
+    assert fast == sorted(map(nkey, loop_nodes.collect()))
+    assert sorted(map(tuple, fast_edges.collect())) == sorted(
+        map(tuple, loop_edges.collect()))
+    linked.unpersist()
+    return {r[0]: r for r in fast}
+
+
+def test_pipeline_graph_fast_path_matches_general(spark, lexicon):
+    """Golden corpus: the rollup by term == the general CC loop."""
     from biosd_feature_annotator_spark.synth import golden_transcripts
 
+    nodes = _fast_and_general_graphs(spark, lexicon, golden_transcripts(spark))
+    assert nodes and all(r[1] == "entity" for r in nodes.values())
+
+
+def test_pipeline_graph_fast_path_matches_general_hot_term(spark, synonym_lexicon):
+    """One hot term with many surfaces (label, synonyms, a tokens match on
+    the label's own match_norm): alias order and n_mentions sums agree
+    between the rollup and the CC loop, and hold the expected values."""
+    nodes = _fast_and_general_graphs(
+        spark, synonym_lexicon, _hot_term_transcripts(spark))
+    _, kind, label, aliases, n = nodes["T_HS"]
+    assert (kind, label) == ("entity", "homo sapiens")
+    assert aliases == ("h. sapiens", "homo sapiens", "human", "man")
+    assert n == 3 * 7  # seven texts name it, each repeated in 3 turns
+
+
+def test_functional_graph_plan_launches_no_job(spark, lexicon):
+    """annotate(build_graph=True) on a functional dictionary only builds
+    lazy plans: the graph is a rollup by term, so no component-labelling
+    checkpoint job runs before the caller's first action."""
+    from biosd_feature_annotator_spark.plans.pipeline import annotate
+    from biosd_feature_annotator_spark.synth import golden_transcripts
+
+    sc = spark.sparkContext
     tr = golden_transcripts(spark)
-    linked = link_entities(extract_mentions(tr, lexicon), lexicon_df(spark, lexicon))
-    linked = linked.persist()
-    fast_nodes, _ = canonicalize(linked, fixed_rounds=1)
-    loop_nodes, _ = canonicalize(linked, fixed_rounds=None)
-    key = lambda r: (r.node_id, r.node_kind, r.canonical_label,
-                     tuple(r.aliases), r.n_mentions)  # noqa: E731
-    assert sorted(map(key, fast_nodes.collect())) == sorted(map(key, loop_nodes.collect()))
-    linked.unpersist()
+    sc.setJobGroup("annotate-plan-only", "annotate() builds plans only")
+    try:
+        out = annotate(spark, tr, lexicon, cache_mentions=False)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("annotate-plan-only"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {"nodes", "edges"} <= set(out)
+    assert jobs == []
 
 
 def test_fs_weights_learn_field_reliability_and_separate(spark):

@@ -81,6 +81,46 @@ def test_is_functional_flags_shared_labels(lexicon):
     assert not _multi_candidate_lexicon().is_functional()
 
 
+def _terms_per_match_norm(spark, lex):
+    return {
+        r.match_norm: r.n
+        for r in lexicon_df(spark, lex)
+        .groupBy("match_norm")
+        .agg(F.countDistinct("term_id").alias("n"))
+        .collect()
+    }
+
+
+def test_functional_lexicon_has_one_term_per_match_norm(spark, lexicon, synonym_lexicon):
+    """The invariant canonicalize's rollup by term relies on: a
+    functional dictionary maps every match_norm to exactly one term_id
+    across the label, synonym and tokens kinds — each surface belongs to
+    exactly one star of the linking graph."""
+    for lex in (lexicon, synonym_lexicon):
+        assert lex.is_functional()
+        fan = _terms_per_match_norm(spark, lex)
+        assert fan and set(fan.values()) == {1}, fan
+    # the synonym-heavy fixture really mixes kinds on one match_norm: the
+    # hot term's label is both a 'label' and a 'tokens' join key
+    kinds = {
+        (r.match_kind, r.term_id)
+        for r in lexicon_df(spark, synonym_lexicon)
+        .where("match_norm = 'homo sapiens'").collect()
+    }
+    assert kinds == {("label", "T_HS"), ("tokens", "T_HS")}
+
+
+def test_shared_normalized_multitoken_label_is_not_functional(spark):
+    """Two terms whose multi-token labels only normalize alike: the
+    'tokens' key fans out to both terms, and is_functional says so."""
+    lex = Lexicon(terms=[
+        {"term_id": "T_A", "label": "Beta  Blocker", "synonyms": [], "pred": "hasDrug"},
+        {"term_id": "T_B", "label": "beta blocker", "synonyms": [], "pred": "hasDrug"},
+    ])
+    assert not lex.is_functional()
+    assert _terms_per_match_norm(spark, lex)["beta blocker"] == 2
+
+
 def test_nonfunctional_lexicon_never_emits_duplicates(spark):
     """annotate() must auto-upgrade to ranked linking for a dictionary with
     two terms sharing a label: no duplicate (subj, pred, obj) rows, and the

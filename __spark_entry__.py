@@ -7,15 +7,20 @@ queries()      — one entry per implemented operator family from SURVEY.md
                  textstats / multimodal / streaming); the authoritative
                  count is len(queries()), asserted in
                  tests/test_entry_contract.py.
-oracle_sql()   — DuckDB-equivalent ANSI SQL for EVERY entry. The formerly
-                 rows-only ops are made verifiable by construction:
-                 MinHash/SimHash/winnowing run on an engine-portable md5
-                 hash kernel, the ANN LSH uses deterministic literal
-                 hyperplanes DuckDB recomputes, HLL sketches are asserted
-                 against exact counts in-query, the flagship pipeline runs
-                 over a committed corpus whose simple templates make every
-                 triple SQL-re-derivable, and the streaming entry's oracle
-                 checks the stream's MATERIALIZED output.
+oracle_sql()   — DuckDB-equivalent ANSI SQL for EVERY entry, and the
+                 only declaration of one: a key <name> here registers
+                 the builder q_<name>. Queued (implemented, verified,
+                 not yet registered) queries are the keys of
+                 R6_QUEUE_ORACLES; registering one is moving its SQL
+                 into oracle_sql(). The formerly rows-only ops are made
+                 verifiable by construction: MinHash/SimHash/winnowing
+                 run on an engine-portable md5 hash kernel, the ANN LSH
+                 uses deterministic literal hyperplanes DuckDB
+                 recomputes, HLL sketches are asserted against exact
+                 counts in-query, the flagship pipeline runs over a
+                 committed corpus whose simple templates make every
+                 triple SQL-re-derivable, and the streaming entry's
+                 oracle checks the stream's MATERIALIZED output.
 
 Column names AND dtypes are aligned pairwise (Spark ints are cast to long
 where DuckDB returns BIGINT; doubles are rounded identically on both sides).
@@ -165,7 +170,8 @@ def q_star_join_revenue(spark, sf):
         .groupBy("r_name", "n_name")
         .agg(
             F.sum("_rev").cast("double").alias("revenue"),
-            F.sum("_n").alias("n_items"),
+            # non-nullable long, like the flat form's count(*)
+            F.coalesce(F.sum("_n"), F.lit(0)).alias("n_items"),
         )
     )
 
@@ -1082,8 +1088,9 @@ def q_phonetic_strings(spark, sf):
 # but NOT in _query_registry yet: the driver's 50-entry check window is
 # exactly full in r5 (5 pinned + 13 new + 32 round-3-stale), and
 # registering more green=0 entries would push r3-stale queries out of the
-# window (r4 VERDICT ask #1). r6 registers these by adding two registry
-# lines each and moving the SQL into oracle_sql().
+# window (r4 VERDICT ask #1). A query is queued by having a key in
+# R6_QUEUE_ORACLES; registering it is moving that SQL into oracle_sql(),
+# which _query_registry derives from.
 
 def q_zorder_events(spark, sf):
     """Morton keys for the z-order layout (plans/zorder.zvalue): the
@@ -2504,9 +2511,12 @@ def q_events_rolling_uniques(spark, sf):
     # seven window buckets {pb + i·86400}: explode those instead of the
     # old anchors×pres theta join (a BroadcastNestedLoop evaluating every
     # presence row against every anchor — guide §3's accidental-product
-    # shape). Phantom buckets past the last observed day aggregate a few
-    # spurious rows that the inner est-join below drops, exactly as the
-    # old anchors semi-restriction did — result-identical (pinned).
+    # shape). The explode also makes phantom buckets: on gap days between
+    # observed days and past the last one. Their rows are dropped only by
+    # the inner est-join below, because rolling_hll_uniques anchors its
+    # windows on OBSERVED buckets — exactly as the old anchors
+    # semi-restriction did, result-identical (pinned). If the estimate
+    # side ever emitted a dense bucket domain, gap-day rows would appear.
     exact = (
         pres.select(
             F.explode(
@@ -7015,108 +7025,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _query_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # scans/joins/aggs/windows/sets/scalars (SURVEY.md §2.4-2.9)
-        "pricing_summary": q_pricing_summary,
-        "star_join_revenue": q_star_join_revenue,
-        "brand_quantity": q_brand_quantity,
-        "semi_join_segments": q_semi_join_segments,
-        "anti_join_segments": q_anti_join_segments,
-        "theta_band_join": q_theta_band_join,
-        "asof_last_signup": q_asof_last_signup,
-        "rank_customers": q_rank_customers,
-        "moving_avg": q_moving_avg,
-        "range_frame_sum": q_range_frame_sum,
-        "cube_orders": q_cube_orders,
-        "rollup_order_months": q_rollup_order_months,
-        "grouping_sets": q_grouping_sets,
-        "distinct_counts": q_distinct_counts,
-        "except_all": q_except_all,
-        "intersect_customers": q_intersect_customers,
-        "union_entities": q_union_entities,
-        "string_funcs": q_string_funcs,
-        "date_funcs": q_date_funcs,
-        "math_funcs": q_math_funcs,
-        "json_props": q_json_props,
-        "json_funcs": q_json_funcs,
-        "stats_agg": q_stats_agg,
-        "value_percentiles": q_value_percentiles,
-        "stream_window_counts": q_stream_window_counts,
-        "pivot_event_counts": q_pivot_event_counts,
-        "top_orders": q_top_orders,
-        "salted_agg": q_salted_agg,
-        # documents / training-data ops
-        "doc_token_stats": q_doc_token_stats,
-        "doc_quality": q_doc_quality,
-        "doc_langid": q_doc_langid,
-        "doc_fingerprints": q_doc_fingerprints,
-        "dedup_exact_docs": q_dedup_exact_docs,
-        "ngram_jaccard_docs": q_ngram_jaccard_docs,
-        "doc_extract_numbers": q_doc_extract_numbers,
-        "emb_norms": q_emb_norms,
-        "emb_cosine_pairs": q_emb_cosine_pairs,
-        "emb_near_dup": q_emb_near_dup,
-        "doc_bpe_tokens": q_doc_bpe_tokens,
-        "doc_train_split": q_doc_train_split,
-        "doc_pack_sequences": q_doc_pack_sequences,
-        "vocab_top_tokens": q_vocab_top_tokens,
-        "kg_khop": q_kg_khop,
-        "kg_pagerank": q_kg_pagerank,
-        "kg_run_diff": q_kg_run_diff,
-        "kg_triangles": q_kg_triangles,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "bm25_docs": q_bm25_docs,
-        "unpivot_lineitem": q_unpivot_lineitem,
-        "window_percentiles": q_window_percentiles,
-        "shared_ngram_spans": q_shared_ngram_spans,
-        "sample_stratified": q_sample_stratified,
-        "histogram_acctbal": q_histogram_acctbal,
-        "window_first_last": q_window_first_last,
-        "full_outer_balance": q_full_outer_balance,
-        "doc_token_positions": q_doc_token_positions,
-        "bloom_semi_join": q_bloom_semi_join,
-        "stream_join_purchases": q_stream_join_purchases,
-        "doc_fluency": q_doc_fluency,
-        "doc_scrub_pii": q_doc_scrub_pii,
-        "doc_repetition": q_doc_repetition,
-        "bpe_tokenize_docs": q_bpe_tokenize_docs,
-        "media_decode_stats": q_media_decode_stats,
-        "decontaminate_docs": q_decontaminate_docs,
-        "mix_sources": q_mix_sources,
-        "semantic_dedup_docs": q_semantic_dedup_docs,
-        "emb_filtered_topk": q_emb_filtered_topk,
-        "doc_quality_linear": q_doc_quality_linear,
-        "emb_ivfpq_topk": q_emb_ivfpq_topk,
-        "funnel_signup_purchase": q_funnel_signup_purchase,
-        "scd2_user_value": q_scd2_user_value,
-        "curate_docs": q_curate_docs,
-        "agg_state_merge": q_agg_state_merge,
-        "emb_centroids": q_emb_centroids,
-        "edit_distances": q_edit_distances,
-        "user_gap_stats": q_user_gap_stats,
-        "rank_with_nulls": q_rank_with_nulls,
-        "sessionize_events": q_sessionize_events,
-        "top_sources": q_top_sources,
-        # md5-keyed / literal-plane / derivable forms — all oracle-checked
-        "emb_ann_topk": q_emb_ann_topk,
-        "emb_ivf_topk": q_emb_ivf_topk,
-        "emb_pq_topk": q_emb_pq_topk,
-        "docs_minhash_pairs": q_docs_minhash_pairs,
-        "docs_dedup_clusters": q_docs_dedup_clusters,
-        "stream_user_stats": q_stream_user_stats,
-        "stream_sessionize": q_stream_sessionize,
-        "stream_dedup_keys": q_stream_dedup_keys,
-        "transcripts_kg_stream": q_transcripts_kg_stream,
-        "docs_simhash": q_docs_simhash,
-        "approx_distinct": q_approx_distinct,
-        "transcripts_kg": q_transcripts_kg,
-        # registered immediately after the flagship (not last): a harness
-        # time budget truncating the tail must not drop the A3 row again
-        "entity_stats_kg": q_entity_stats_kg,
-        "phonetic_strings": q_phonetic_strings,
-        "winnow_docs": q_winnow_docs,
-        "multimodal_features": q_multimodal_features,
-    }
+    """Every query with a key in oracle_sql(), in that dict's order, bound
+    to its q_<name> builder: the oracle table is the only declaration."""
+    return {n: globals()[f"q_{n}"] for n in oracle_sql()}
 
 
 # ---------------------------------------------------- oracle SQL generators
@@ -7988,12 +7899,15 @@ def _scrub_pii_sql() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
+    """name → DuckDB oracle of every registered query, in registry order
+    (_query_registry binds each key to its q_<name> builder)."""
     langs = sorted(LANG_MARKERS)  # de en es fr zh — matches detect_lang order
     lang_scores = ", ".join(f"{_lang_score_sql(lg)} AS s_{lg}" for lg in langs)
     lang_max = f"greatest({', '.join('s_' + lg for lg in langs)})"
     lang_case = " ".join(f"WHEN s_{lg} = m THEN '{lg}'" for lg in langs)
 
     return {
+        # scans/joins/aggs/windows/sets/scalars (SURVEY.md §2.4-2.9)
         "pricing_summary": """
             SELECT l_returnflag, l_linestatus,
                    round(sum(l_quantity), 2) AS sum_qty,
@@ -8155,6 +8069,28 @@ def oracle_sql() -> dict[str, str]:
                    CAST(((l_orderkey % 7) + 7) % 7 AS BIGINT) AS pm
             FROM lineitem
         """,
+        "json_props": """
+            SELECT event_type, count(*) AS n,
+                   CAST(sum(k) AS BIGINT) AS sum_k, max(k) AS max_k
+            FROM (SELECT event_type,
+                         CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT) AS k
+                  FROM events)
+            GROUP BY event_type
+        """,
+        "json_funcs": """
+            SELECT event_id, k, k_str, j,
+                   CAST(json_extract(j, '$.k') AS BIGINT) = k AS roundtrip_ok
+            FROM (
+                SELECT event_id,
+                       CAST(json_extract(props, '$.k') AS BIGINT) AS k,
+                       json_extract_string(props, '$.k') AS k_str,
+                       '{"t":"' || event_type || '","k":'
+                           || CAST(CAST(json_extract(props, '$.k') AS BIGINT) AS VARCHAR)
+                           || '}' AS j
+                FROM events
+                WHERE json_extract(props, '$.k') IS NOT NULL
+            )
+        """,
         "stats_agg": """
             SELECT l_returnflag,
                    round(stddev_samp(l_quantity), 6) AS sd_qty,
@@ -8172,13 +8108,10 @@ def oracle_sql() -> dict[str, str]:
                    TRUE AS sketch_within_tol
             FROM events GROUP BY event_type
         """,
-        "json_props": """
-            SELECT event_type, count(*) AS n,
-                   CAST(sum(k) AS BIGINT) AS sum_k, max(k) AS max_k
-            FROM (SELECT event_type,
-                         CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT) AS k
-                  FROM events)
-            GROUP BY event_type
+        "stream_window_counts": """
+            SELECT time_bucket(INTERVAL '1 hour', ts) AS win_start,
+                   event_type, count(*) AS n, round(sum(value), 2) AS sum_value
+            FROM events GROUP BY 1, 2
         """,
         "pivot_event_counts": """
             SELECT user_id,
@@ -8198,6 +8131,7 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n
             FROM lineitem GROUP BY l_returnflag
         """,
+        # documents / training-data ops
         "doc_token_stats": """
             SELECT doc_id,
                    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tokens,
@@ -8369,85 +8303,23 @@ def oracle_sql() -> dict[str, str]:
                 GROUP BY token
             ) WHERE rn <= 100
         """,
-        "sessionize_events": """
-            SELECT user_id, sess_no, count(*) AS n_events,
-                   round(sum(value), 2) AS session_value
-            FROM (
-                SELECT user_id, value,
-                       CAST(sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1
-                                     ELSE 0 END) OVER (
-                           PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                       ) AS BIGINT) AS sess_no
-                FROM (
-                    SELECT user_id, ts, event_id, value,
-                           CAST(floor(epoch(ts)) AS BIGINT)
-                             - CAST(floor(epoch(lag(ts) OVER (
-                                   PARTITION BY user_id ORDER BY ts, event_id
-                               ))) AS BIGINT) AS gap
-                    FROM events
-                )
-            ) GROUP BY user_id, sess_no
-        """,
-        "top_sources": """
-            SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
-            FROM documents GROUP BY source
-            ORDER BY n DESC, source ASC LIMIT 10
-        """,
-        # greedy earliest-match == min(ts) > previous-step chaining: one
-        # CTE per funnel step (the Spark side proves the same semantics
-        # with a single-shuffle Catalyst fold)
-        "funnel_signup_purchase": """
-            WITH s1 AS (
-                SELECT user_id, min(ts) AS t1 FROM events
-                WHERE event_type = 'signup' GROUP BY user_id
-            ), s2 AS (
-                SELECT e.user_id, min(e.ts) AS t2
-                FROM events e JOIN s1 ON e.user_id = s1.user_id
-                WHERE e.event_type = 'view' AND e.ts > s1.t1
-                GROUP BY e.user_id
-            ), s3 AS (
-                SELECT e.user_id, min(e.ts) AS t3
-                FROM events e JOIN s2 ON e.user_id = s2.user_id
-                WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-                GROUP BY e.user_id
+        "kg_khop": _kg_khop_sql(),
+        "kg_pagerank": _kg_pagerank_sql(),
+        "kg_run_diff": """
+            WITH a AS (
+                SELECT CAST(o_orderkey AS VARCHAR) AS subj,
+                       'hasPriority' AS pred, o_orderpriority AS obj
+                FROM orders WHERE o_orderdate < DATE '1995-01-01'
+            ), b AS (
+                SELECT CAST(o_orderkey AS VARCHAR) AS subj,
+                       'hasPriority' AS pred, o_orderpriority AS obj
+                FROM orders WHERE o_orderdate >= DATE '1993-01-01'
             )
-            SELECT u.user_id,
-                   CAST(CASE WHEN t3 IS NOT NULL THEN 3
-                             WHEN t2 IS NOT NULL THEN 2
-                             WHEN t1 IS NOT NULL THEN 1
-                             ELSE 0 END AS BIGINT) AS depth,
-                   s1.t1 AS ts_1, s2.t2 AS ts_2, s3.t3 AS ts_3
-            FROM (SELECT DISTINCT user_id FROM events) u
-            LEFT JOIN s1 ON u.user_id = s1.user_id
-            LEFT JOIN s2 ON u.user_id = s2.user_id
-            LEFT JOIN s3 ON u.user_id = s3.user_id
+            SELECT 'added' AS change, * FROM (SELECT * FROM b EXCEPT SELECT * FROM a)
+            UNION ALL
+            SELECT 'removed' AS change, * FROM (SELECT * FROM a EXCEPT SELECT * FROM b)
         """,
-        "scd2_user_value": """
-            WITH v AS (
-                SELECT user_id,
-                       CAST(floor(coalesce(value, 0) / 100) AS BIGINT)
-                           AS bucket,
-                       ts, event_id
-                FROM events
-            ), c AS (
-                SELECT user_id, bucket, ts, event_id,
-                       lag(bucket) OVER w AS prev,
-                       row_number() OVER w AS rn
-                FROM v
-                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), ch AS (
-                SELECT user_id, bucket, ts, event_id FROM c
-                -- bucket is coalesced non-NULL, so plain <> is the
-                -- NULL-safe change test here (prev is NULL only at rn=1)
-                WHERE rn = 1 OR bucket <> prev
-            )
-            SELECT user_id, bucket, ts AS effective_from,
-                   lead(ts) OVER w2 AS effective_to,
-                   lead(ts) OVER w2 IS NULL AS is_current
-            FROM ch
-            WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-        """,
+        "kg_triangles": _triangles_sql(),
         "tfidf_top_terms": """
             WITH toks AS (
                 SELECT doc, term FROM (
@@ -8530,50 +8402,103 @@ def oracle_sql() -> dict[str, str]:
             FROM customer WHERE c_custkey <= 500
             WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
         """,
-        "rank_with_nulls": """
-            SELECT event_id, event_type, v,
-                   CAST(rank() OVER (
-                       PARTITION BY event_type
-                       ORDER BY v ASC NULLS LAST, event_id ASC
-                   ) AS BIGINT) AS rnk
-            FROM (
-                SELECT event_id, event_type,
-                       CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
-                FROM events WHERE event_id < 3000
+        "shared_ngram_spans": _shared_spans_sql(),
+        "sample_stratified": """
+            SELECT c_custkey, c_mktsegment, c_acctbal FROM (
+                SELECT *,
+                       CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 5, 4)) AS INT)
+                           % 1000 AS h
+                FROM customer
             )
+            WHERE (c_mktsegment = 'BUILDING'  AND h < 200)
+               OR (c_mktsegment = 'MACHINERY' AND h < 500)
+               OR (c_mktsegment = 'FURNITURE' AND h < 1000)
         """,
-        "emb_centroids": """
-            WITH x AS (
-                SELECT label, i - 1 AS dim,
-                       CAST(round(CAST(e[i] AS DOUBLE) * 1000000.0) AS BIGINT) AS vm
-                FROM (SELECT label, embedding AS e FROM embeddings),
-                     unnest(range(1, len(e) + 1)) AS u(i)
-            )
-            SELECT CAST(label AS BIGINT) AS label, CAST(dim AS BIGINT) AS dim,
-                   -- full precision: exact long sum / exact product is one
-                   -- correctly-rounded IEEE division, bit-identical on both
-                   -- engines; a display round(…, 6) would sit ON a tie
-                   -- boundary (audit margin 0) and could flip the hash
-                   CAST(sum(vm) AS DOUBLE) / (count(*) * 1000000.0)
-                       AS centroid
-            FROM x GROUP BY label, dim
-        """,
-        "edit_distances": """
-            SELECT c_custkey,
-                   CAST(levenshtein(c_name, 'Customer#000000001') AS BIGINT) AS lev_probe,
-                   CAST(levenshtein(c_name, c_mktsegment) AS BIGINT) AS lev_seg
-            FROM customer WHERE c_custkey <= 300
-        """,
-        "user_gap_stats": """
-            SELECT user_id, count(g) AS n_gaps,
-                   CAST(coalesce(sum(g), 0) AS BIGINT) AS total_gap_us,
-                   coalesce(max(g), 0) AS max_gap_us
+        "histogram_acctbal": """
+            SELECT bin, count(*) AS n, min(c_acctbal) AS lo, max(c_acctbal) AS hi
             FROM (
-                SELECT user_id,
-                       epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                           PARTITION BY user_id ORDER BY ts, event_id) AS g
-                FROM events
-            ) GROUP BY user_id
+                SELECT least(greatest(
+                           CAST(floor((c_acctbal + 1000.0) / 500.0) AS BIGINT),
+                           0), 21) AS bin,
+                       c_acctbal
+                FROM customer
+            ) GROUP BY bin
+        """,
+        "window_first_last": """
+            SELECT event_id, user_id,
+                   first_value(event_type) OVER w AS first_et,
+                   last_value(event_type) OVER w AS last_et,
+                   nth_value(event_id, 2) OVER w AS second_event
+            FROM events
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING
+                                  AND UNBOUNDED FOLLOWING)
+        """,
+        "full_outer_balance": """
+            WITH c AS (
+                SELECT c_nationkey, count(*) AS rich_customers
+                FROM customer WHERE c_acctbal > 9000 GROUP BY c_nationkey
+            ), s AS (
+                SELECT s_nationkey, count(*) AS suppliers
+                FROM supplier GROUP BY s_nationkey
+            )
+            SELECT CAST(coalesce(c_nationkey, s_nationkey) AS BIGINT) AS nation,
+                   coalesce(rich_customers, 0) AS rich_customers,
+                   coalesce(suppliers, 0) AS suppliers
+            FROM c FULL OUTER JOIN s ON c.c_nationkey = s.s_nationkey
+        """,
+        "doc_token_positions": """
+            SELECT doc_id, pos, token FROM (
+                SELECT doc_id,
+                       unnest(list_transform(range(1, len(toks) + 1),
+                              i -> {'pos': CAST(i - 1 AS BIGINT),
+                                    'token': toks[i]}), recursive := true)
+                FROM (
+                    SELECT doc_id,
+                           string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
+                    FROM documents WHERE doc_id < 50
+                )
+            ) WHERE length(token) > 0
+        """,
+        "bloom_semi_join": """
+            SELECT l_returnflag, count(*) AS n,
+                   count(DISTINCT l_partkey) AS parts
+            FROM lineitem
+            WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 3)
+            GROUP BY l_returnflag
+        """,
+        "stream_join_purchases": """
+            SELECT p.event_id AS purchase_id, p.user_id,
+                   s.ts AS signup_ts, p.ts AS purchase_ts
+            FROM events p JOIN events s
+              ON p.user_id = s.user_id
+             AND p.event_type = 'purchase' AND s.event_type = 'signup'
+             AND p.ts >= s.ts AND p.ts <= s.ts + INTERVAL 7 DAY
+        """,
+        "doc_fluency": r"""
+            WITH b AS (
+                SELECT doc, t[i] AS w1, t[i + 1] AS w2
+                FROM (
+                    SELECT doc_id AS doc,
+                           string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS t
+                    FROM documents WHERE doc_id < 300
+                ), unnest(range(1, greatest(len(t) - 1, 0) + 1)) AS u(i)
+            ), bc AS (
+                SELECT w1, w2, count(*) AS cnt_b FROM b GROUP BY w1, w2
+            ), uc AS (
+                SELECT w1, count(*) AS cnt_u FROM b GROUP BY w1
+            ), v AS (
+                SELECT count(DISTINCT w2) AS v FROM b
+            ), scored AS (
+                SELECT b.doc,
+                       CAST(round(ln((bc.cnt_b + 1.0) / (uc.cnt_u + v.v))
+                                  * 1000000.0) AS BIGINT) AS lp_micro
+                FROM b JOIN bc USING (w1, w2) JOIN uc USING (w1) CROSS JOIN v
+            )
+            SELECT doc AS doc_id, count(*) AS n_bigrams,
+                   round((CAST(sum(lp_micro) AS DOUBLE) / 1000000.0)
+                         / count(*), 4) AS fluency
+            FROM scored GROUP BY doc
         """,
         "doc_scrub_pii": _scrub_pii_sql(),
         "doc_repetition": r"""
@@ -8704,6 +8629,89 @@ def oracle_sql() -> dict[str, str]:
             WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 9, 4))
                        AS INT) % 10000 < cut
         """,
+        "semantic_dedup_docs": _semantic_dedup_sql(),
+        # filtered vector search: the label predicate restricts the
+        # corpus BEFORE scoring (the pushdown the Spark plan performs at
+        # the parquet scan); exact cosine, top-5 per query
+        "emb_filtered_topk": """
+            WITH scored AS (
+                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                       list_sum(list_transform(list_zip(q.embedding, c.embedding),
+                           p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+                       / (sqrt(list_sum(list_transform(q.embedding,
+                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                        * sqrt(list_sum(list_transform(c.embedding,
+                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
+                FROM embeddings q JOIN embeddings c
+                  ON q.vec_id < 10 AND c.label % 2 = 0
+                 AND q.vec_id != c.vec_id
+            ),
+            ranked AS (
+                SELECT query_id, neighbor_id, cos,
+                       row_number() OVER (PARTITION BY query_id
+                                          ORDER BY cos DESC, neighbor_id ASC) AS rank
+                FROM scored
+            )
+            SELECT query_id, neighbor_id, round(cos, 3) AS cos,
+                   CAST(rank AS BIGINT) AS rank
+            FROM ranked WHERE rank <= 5
+        """,
+        "doc_quality_linear": _quality_linear_sql(),
+        "emb_ivfpq_topk": _ivfpq_sql(),
+        # greedy earliest-match == min(ts) > previous-step chaining: one
+        # CTE per funnel step (the Spark side proves the same semantics
+        # with a single-shuffle Catalyst fold)
+        "funnel_signup_purchase": """
+            WITH s1 AS (
+                SELECT user_id, min(ts) AS t1 FROM events
+                WHERE event_type = 'signup' GROUP BY user_id
+            ), s2 AS (
+                SELECT e.user_id, min(e.ts) AS t2
+                FROM events e JOIN s1 ON e.user_id = s1.user_id
+                WHERE e.event_type = 'view' AND e.ts > s1.t1
+                GROUP BY e.user_id
+            ), s3 AS (
+                SELECT e.user_id, min(e.ts) AS t3
+                FROM events e JOIN s2 ON e.user_id = s2.user_id
+                WHERE e.event_type = 'purchase' AND e.ts > s2.t2
+                GROUP BY e.user_id
+            )
+            SELECT u.user_id,
+                   CAST(CASE WHEN t3 IS NOT NULL THEN 3
+                             WHEN t2 IS NOT NULL THEN 2
+                             WHEN t1 IS NOT NULL THEN 1
+                             ELSE 0 END AS BIGINT) AS depth,
+                   s1.t1 AS ts_1, s2.t2 AS ts_2, s3.t3 AS ts_3
+            FROM (SELECT DISTINCT user_id FROM events) u
+            LEFT JOIN s1 ON u.user_id = s1.user_id
+            LEFT JOIN s2 ON u.user_id = s2.user_id
+            LEFT JOIN s3 ON u.user_id = s3.user_id
+        """,
+        "scd2_user_value": """
+            WITH v AS (
+                SELECT user_id,
+                       CAST(floor(coalesce(value, 0) / 100) AS BIGINT)
+                           AS bucket,
+                       ts, event_id
+                FROM events
+            ), c AS (
+                SELECT user_id, bucket, ts, event_id,
+                       lag(bucket) OVER w AS prev,
+                       row_number() OVER w AS rn
+                FROM v
+                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ), ch AS (
+                SELECT user_id, bucket, ts, event_id FROM c
+                -- bucket is coalesced non-NULL, so plain <> is the
+                -- NULL-safe change test here (prev is NULL only at rn=1)
+                WHERE rn = 1 OR bucket <> prev
+            )
+            SELECT user_id, bucket, ts AS effective_from,
+                   lead(ts) OVER w2 AS effective_to,
+                   lead(ts) OVER w2 IS NULL AS is_current
+            FROM ch
+            WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
+        """,
         "curate_docs": r"""
             WITH q AS (
                 SELECT doc_id, text,
@@ -8754,180 +8762,82 @@ def oracle_sql() -> dict[str, str]:
                    CAST(max(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS vmax
             FROM orders GROUP BY o_orderpriority
         """,
-        "doc_fluency": r"""
-            WITH b AS (
-                SELECT doc, t[i] AS w1, t[i + 1] AS w2
-                FROM (
-                    SELECT doc_id AS doc,
-                           string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ') AS t
-                    FROM documents WHERE doc_id < 300
-                ), unnest(range(1, greatest(len(t) - 1, 0) + 1)) AS u(i)
-            ), bc AS (
-                SELECT w1, w2, count(*) AS cnt_b FROM b GROUP BY w1, w2
-            ), uc AS (
-                SELECT w1, count(*) AS cnt_u FROM b GROUP BY w1
-            ), v AS (
-                SELECT count(DISTINCT w2) AS v FROM b
-            ), scored AS (
-                SELECT b.doc,
-                       CAST(round(ln((bc.cnt_b + 1.0) / (uc.cnt_u + v.v))
-                                  * 1000000.0) AS BIGINT) AS lp_micro
-                FROM b JOIN bc USING (w1, w2) JOIN uc USING (w1) CROSS JOIN v
+        "emb_centroids": """
+            WITH x AS (
+                SELECT label, i - 1 AS dim,
+                       CAST(round(CAST(e[i] AS DOUBLE) * 1000000.0) AS BIGINT) AS vm
+                FROM (SELECT label, embedding AS e FROM embeddings),
+                     unnest(range(1, len(e) + 1)) AS u(i)
             )
-            SELECT doc AS doc_id, count(*) AS n_bigrams,
-                   round((CAST(sum(lp_micro) AS DOUBLE) / 1000000.0)
-                         / count(*), 4) AS fluency
-            FROM scored GROUP BY doc
+            SELECT CAST(label AS BIGINT) AS label, CAST(dim AS BIGINT) AS dim,
+                   -- full precision: exact long sum / exact product is one
+                   -- correctly-rounded IEEE division, bit-identical on both
+                   -- engines; a display round(…, 6) would sit ON a tie
+                   -- boundary (audit margin 0) and could flip the hash
+                   CAST(sum(vm) AS DOUBLE) / (count(*) * 1000000.0)
+                       AS centroid
+            FROM x GROUP BY label, dim
         """,
-        "stream_join_purchases": """
-            SELECT p.event_id AS purchase_id, p.user_id,
-                   s.ts AS signup_ts, p.ts AS purchase_ts
-            FROM events p JOIN events s
-              ON p.user_id = s.user_id
-             AND p.event_type = 'purchase' AND s.event_type = 'signup'
-             AND p.ts >= s.ts AND p.ts <= s.ts + INTERVAL 7 DAY
-        """,
-        "bloom_semi_join": """
-            SELECT l_returnflag, count(*) AS n,
-                   count(DISTINCT l_partkey) AS parts
-            FROM lineitem
-            WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size <= 3)
-            GROUP BY l_returnflag
-        """,
-        "full_outer_balance": """
-            WITH c AS (
-                SELECT c_nationkey, count(*) AS rich_customers
-                FROM customer WHERE c_acctbal > 9000 GROUP BY c_nationkey
-            ), s AS (
-                SELECT s_nationkey, count(*) AS suppliers
-                FROM supplier GROUP BY s_nationkey
-            )
-            SELECT CAST(coalesce(c_nationkey, s_nationkey) AS BIGINT) AS nation,
-                   coalesce(rich_customers, 0) AS rich_customers,
-                   coalesce(suppliers, 0) AS suppliers
-            FROM c FULL OUTER JOIN s ON c.c_nationkey = s.s_nationkey
-        """,
-        "doc_token_positions": """
-            SELECT doc_id, pos, token FROM (
-                SELECT doc_id,
-                       unnest(list_transform(range(1, len(toks) + 1),
-                              i -> {'pos': CAST(i - 1 AS BIGINT),
-                                    'token': toks[i]}), recursive := true)
-                FROM (
-                    SELECT doc_id,
-                           string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
-                    FROM documents WHERE doc_id < 50
-                )
-            ) WHERE length(token) > 0
-        """,
-        "sample_stratified": """
-            SELECT c_custkey, c_mktsegment, c_acctbal FROM (
-                SELECT *,
-                       CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 5, 4)) AS INT)
-                           % 1000 AS h
-                FROM customer
-            )
-            WHERE (c_mktsegment = 'BUILDING'  AND h < 200)
-               OR (c_mktsegment = 'MACHINERY' AND h < 500)
-               OR (c_mktsegment = 'FURNITURE' AND h < 1000)
-        """,
-        "histogram_acctbal": """
-            SELECT bin, count(*) AS n, min(c_acctbal) AS lo, max(c_acctbal) AS hi
-            FROM (
-                SELECT least(greatest(
-                           CAST(floor((c_acctbal + 1000.0) / 500.0) AS BIGINT),
-                           0), 21) AS bin,
-                       c_acctbal
-                FROM customer
-            ) GROUP BY bin
-        """,
-        "window_first_last": """
-            SELECT event_id, user_id,
-                   first_value(event_type) OVER w AS first_et,
-                   last_value(event_type) OVER w AS last_et,
-                   nth_value(event_id, 2) OVER w AS second_event
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND UNBOUNDED FOLLOWING)
-        """,
-        "kg_run_diff": """
-            WITH a AS (
-                SELECT CAST(o_orderkey AS VARCHAR) AS subj,
-                       'hasPriority' AS pred, o_orderpriority AS obj
-                FROM orders WHERE o_orderdate < DATE '1995-01-01'
-            ), b AS (
-                SELECT CAST(o_orderkey AS VARCHAR) AS subj,
-                       'hasPriority' AS pred, o_orderpriority AS obj
-                FROM orders WHERE o_orderdate >= DATE '1993-01-01'
-            )
-            SELECT 'added' AS change, * FROM (SELECT * FROM b EXCEPT SELECT * FROM a)
-            UNION ALL
-            SELECT 'removed' AS change, * FROM (SELECT * FROM a EXCEPT SELECT * FROM b)
-        """,
-        "json_funcs": """
-            SELECT event_id, k, k_str, j,
-                   CAST(json_extract(j, '$.k') AS BIGINT) = k AS roundtrip_ok
-            FROM (
-                SELECT event_id,
-                       CAST(json_extract(props, '$.k') AS BIGINT) AS k,
-                       json_extract_string(props, '$.k') AS k_str,
-                       '{"t":"' || event_type || '","k":'
-                           || CAST(CAST(json_extract(props, '$.k') AS BIGINT) AS VARCHAR)
-                           || '}' AS j
-                FROM events
-                WHERE json_extract(props, '$.k') IS NOT NULL
-            )
-        """,
-        "stream_window_counts": """
-            SELECT time_bucket(INTERVAL '1 hour', ts) AS win_start,
-                   event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-            FROM events GROUP BY 1, 2
-        """,
-        "approx_distinct": """
-            SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts,
-                   TRUE AS hll_within_tol
-            FROM lineitem GROUP BY l_returnflag
-        """,
-        # soundex is hand-derived from the published algorithm for the five
-        # closed-domain segment values (B F P V→1, C G J K Q S X Z→2, D T→3,
-        # L→4, M N→5, R→6, vowels dropped, 4 chars) — an independent
-        # derivation, not a copy of Spark output.
-        "phonetic_strings": """
+        "edit_distances": """
             SELECT c_custkey,
-                   CASE c_mktsegment
-                        WHEN 'AUTOMOBILE' THEN 'A351'
-                        WHEN 'BUILDING'   THEN 'B435'
-                        WHEN 'FURNITURE'  THEN 'F653'
-                        WHEN 'MACHINERY'  THEN 'M256'
-                        WHEN 'HOUSEHOLD'  THEN 'H243'
-                   END AS seg_sound,
-                   upper(substr(lower(c_name), 1, 1)) || substr(lower(c_name), 2)
-                       AS name_cap,
-                   translate(c_mktsegment, 'AEIOU', 'aeiou') AS seg_tr
-            FROM customer
+                   CAST(levenshtein(c_name, 'Customer#000000001') AS BIGINT) AS lev_probe,
+                   CAST(levenshtein(c_name, c_mktsegment) AS BIGINT) AS lev_seg
+            FROM customer WHERE c_custkey <= 300
         """,
-        "multimodal_features": """
-            SELECT 'm' || CAST(i AS VARCHAR) AS media_id,
-                   CASE (i % 3) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                        ELSE 'video' END AS kind,
-                   CAST(16 AS BIGINT) AS n_bytes,
-                   CAST(
-                       CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  1, 2) AS BIGINT)
-                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  3, 2) AS BIGINT)
-                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  5, 2) AS BIGINT)
-                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  7, 2) AS BIGINT)
-                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  9, 2) AS BIGINT)
-                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 11, 2) AS BIGINT)
-                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 13, 2) AS BIGINT)
-                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 15, 2) AS BIGINT)
-                   AS BIGINT) AS feat_sum_x256
-            FROM generate_series(0, 199) t(i)
+        "user_gap_stats": """
+            SELECT user_id, count(g) AS n_gaps,
+                   CAST(coalesce(sum(g), 0) AS BIGINT) AS total_gap_us,
+                   coalesce(max(g), 0) AS max_gap_us
+            FROM (
+                SELECT user_id,
+                       epoch_us(ts) - lag(epoch_us(ts)) OVER (
+                           PARTITION BY user_id ORDER BY ts, event_id) AS g
+                FROM events
+            ) GROUP BY user_id
         """,
+        "rank_with_nulls": """
+            SELECT event_id, event_type, v,
+                   CAST(rank() OVER (
+                       PARTITION BY event_type
+                       ORDER BY v ASC NULLS LAST, event_id ASC
+                   ) AS BIGINT) AS rnk
+            FROM (
+                SELECT event_id, event_type,
+                       CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS v
+                FROM events WHERE event_id < 3000
+            )
+        """,
+        "sessionize_events": """
+            SELECT user_id, sess_no, count(*) AS n_events,
+                   round(sum(value), 2) AS session_value
+            FROM (
+                SELECT user_id, value,
+                       CAST(sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1
+                                     ELSE 0 END) OVER (
+                           PARTITION BY user_id ORDER BY ts, event_id
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                       ) AS BIGINT) AS sess_no
+                FROM (
+                    SELECT user_id, ts, event_id, value,
+                           CAST(floor(epoch(ts)) AS BIGINT)
+                             - CAST(floor(epoch(lag(ts) OVER (
+                                   PARTITION BY user_id ORDER BY ts, event_id
+                               ))) AS BIGINT) AS gap
+                    FROM events
+                )
+            ) GROUP BY user_id, sess_no
+        """,
+        "top_sources": """
+            SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars
+            FROM documents GROUP BY source
+            ORDER BY n DESC, source ASC LIMIT 10
+        """,
+        # md5-keyed / literal-plane / derivable forms
+        "emb_ann_topk": _ann_sql(),
+        "emb_ivf_topk": _ivf_sql(),
+        "emb_pq_topk": _pq_sql(),
         "docs_minhash_pairs": _minhash_sql(),
         "docs_dedup_clusters": _dedup_clusters_sql(),
-        "kg_triangles": _triangles_sql(),
-        "shared_ngram_spans": _shared_spans_sql(),
         "stream_user_stats": """
             SELECT user_id, count(*) AS n_events,
                    round(sum(value), 2) AS sum_value
@@ -8961,7 +8871,35 @@ def oracle_sql() -> dict[str, str]:
         "stream_dedup_keys": """
             SELECT DISTINCT user_id, event_type FROM events
         """,
+        "transcripts_kg_stream": _transcripts_kg_sql(),
         "docs_simhash": _simhash_sql(),
+        "approx_distinct": """
+            SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_parts,
+                   TRUE AS hll_within_tol
+            FROM lineitem GROUP BY l_returnflag
+        """,
+        "transcripts_kg": _transcripts_kg_sql(),
+        # registered immediately after the flagship (not last): a harness
+        # time budget truncating the tail must not drop the A3 row again
+        "entity_stats_kg": _entity_stats_sql(),
+        # soundex is hand-derived from the published algorithm for the five
+        # closed-domain segment values (B F P V→1, C G J K Q S X Z→2, D T→3,
+        # L→4, M N→5, R→6, vowels dropped, 4 chars) — an independent
+        # derivation, not a copy of Spark output.
+        "phonetic_strings": """
+            SELECT c_custkey,
+                   CASE c_mktsegment
+                        WHEN 'AUTOMOBILE' THEN 'A351'
+                        WHEN 'BUILDING'   THEN 'B435'
+                        WHEN 'FURNITURE'  THEN 'F653'
+                        WHEN 'MACHINERY'  THEN 'M256'
+                        WHEN 'HOUSEHOLD'  THEN 'H243'
+                   END AS seg_sound,
+                   upper(substr(lower(c_name), 1, 1)) || substr(lower(c_name), 2)
+                       AS name_cap,
+                   translate(c_mktsegment, 'AEIOU', 'aeiou') AS seg_tr
+            FROM customer
+        """,
         "winnow_docs": f"""
             SELECT doc_id,
                    array_to_string(list_slice(list_sort(list_distinct(
@@ -8971,41 +8909,21 @@ def oracle_sql() -> dict[str, str]:
             FROM (SELECT doc_id, {_NORM_TEXT} AS t
                   FROM documents WHERE doc_id < 300)
         """,
-        "emb_ann_topk": _ann_sql(),
-        "emb_ivf_topk": _ivf_sql(),
-        "emb_pq_topk": _pq_sql(),
-        "semantic_dedup_docs": _semantic_dedup_sql(),
-        "doc_quality_linear": _quality_linear_sql(),
-        "emb_ivfpq_topk": _ivfpq_sql(),
-        # filtered vector search: the label predicate restricts the
-        # corpus BEFORE scoring (the pushdown the Spark plan performs at
-        # the parquet scan); exact cosine, top-5 per query
-        "emb_filtered_topk": """
-            WITH scored AS (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       list_sum(list_transform(list_zip(q.embedding, c.embedding),
-                           p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-                       / (sqrt(list_sum(list_transform(q.embedding,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                        * sqrt(list_sum(list_transform(c.embedding,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-                FROM embeddings q JOIN embeddings c
-                  ON q.vec_id < 10 AND c.label % 2 = 0
-                 AND q.vec_id != c.vec_id
-            ),
-            ranked AS (
-                SELECT query_id, neighbor_id, cos,
-                       row_number() OVER (PARTITION BY query_id
-                                          ORDER BY cos DESC, neighbor_id ASC) AS rank
-                FROM scored
-            )
-            SELECT query_id, neighbor_id, round(cos, 3) AS cos,
-                   CAST(rank AS BIGINT) AS rank
-            FROM ranked WHERE rank <= 5
+        "multimodal_features": """
+            SELECT 'm' || CAST(i AS VARCHAR) AS media_id,
+                   CASE (i % 3) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
+                        ELSE 'video' END AS kind,
+                   CAST(16 AS BIGINT) AS n_bytes,
+                   CAST(
+                       CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  1, 2) AS BIGINT)
+                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  3, 2) AS BIGINT)
+                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  5, 2) AS BIGINT)
+                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  7, 2) AS BIGINT)
+                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)),  9, 2) AS BIGINT)
+                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 11, 2) AS BIGINT)
+                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 13, 2) AS BIGINT)
+                     + CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 15, 2) AS BIGINT)
+                   AS BIGINT) AS feat_sum_x256
+            FROM generate_series(0, 199) t(i)
         """,
-        "transcripts_kg": _transcripts_kg_sql(),
-        "transcripts_kg_stream": _transcripts_kg_sql(),
-        "entity_stats_kg": _entity_stats_sql(),
-        "kg_khop": _kg_khop_sql(),
-        "kg_pagerank": _kg_pagerank_sql(),
     }

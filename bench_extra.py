@@ -10,8 +10,9 @@ timed rather than the sink or the optimizer's count-pruning.
 Usage:
     python bench_extra.py [--reps N] [--noop] [--explain TAG] q1 q2 ...
 
-Query names resolve through __spark_entry__._query_registry() plus the
-same extras bench.py times (kg_annotate / kg_graph_cc pipeline entries,
+Names are full query names: a key of __spark_entry__._query_registry()
+or of R6_QUEUE_ORACLES (queued queries, built by q_<name>), or one of the
+extras bench.py times (kg_annotate / kg_graph_cc pipeline entries,
 cc_incremental_fold). Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
 SPARK_GRAFT_BENCH_TURNS as in bench.py.
 """
@@ -58,22 +59,10 @@ def main() -> None:
                 "orders", "lineitem", "events", "documents", "embeddings"):
         spark.read.parquet(os.path.join(SF_DIR, f"{tbl}.parquet")).count()
 
-    builders = {}
-    qreg = entrymod._query_registry()
-    for n, fn in qreg.items():
-        builders[n] = (lambda f=fn: f(spark, SF_DIR))
-
-    def resolve(name):
-        if name in builders:
-            return builders[name]
-        # queued (not yet registered) queries live as q_<name> entry
-        # functions, sometimes under a slightly longer name
-        for attr in (f"q_{name}", f"q_docs_{name}", f"q_{name}_docs",
-                     f"q_orders_{name}", f"q_events_{name}"):
-            fn = getattr(entrymod, attr, None)
-            if fn is not None:
-                return lambda f=fn: f(spark, SF_DIR)
-        raise KeyError(name)
+    # registered queries, then the queued ones (keys of R6_QUEUE_ORACLES)
+    qfns = entrymod._query_registry()
+    qfns.update({n: getattr(entrymod, f"q_{n}") for n in entrymod.R6_QUEUE_ORACLES})
+    builders = {n: (lambda f=fn: f(spark, SF_DIR)) for n, fn in qfns.items()}
 
     pipeline_names = {"kg_annotate", "kg_graph_cc"}
     if pipeline_names & set(args.names):
@@ -121,7 +110,7 @@ def main() -> None:
 
     out = {}
     for name in args.names:
-        build = resolve(name)
+        build = builders[name]
         if args.explain:
             os.makedirs("plans/r06", exist_ok=True)
             with open(f"plans/r06/{name}_{args.explain}.txt", "w") as fh:

@@ -209,25 +209,6 @@ def extract_features(
     )
 
 
-def resize_plan(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: validates meta, routes only images, tags target
-    size. The pixel kernel is the stubbed part; the plan (filter +
-    metadata rewrite) is the Spark-side contract."""
-    return (
-        media.where(F.col("kind") == "image")
-        .withColumn(
-            "meta",
-            F.struct(
-                F.lit(width).alias("width"),
-                F.lit(height).alias("height"),
-                F.col("meta.sample_rate").alias("sample_rate"),
-                F.col("meta.n_frames").alias("n_frames"),
-                F.col("meta.mime").alias("mime"),
-            ),
-        )
-    )
-
-
 def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame sampling plumbing: one output row per sampled frame
     index (posexplode of the frame-index sequence) — the shuffle-free

@@ -15,7 +15,7 @@ token), then PHONE, then IP.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # (name, pattern, replacement) — ordered; see module docstring.
@@ -24,15 +24,6 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
     ("phone", r"\b\d{3}[- ]\d{3,4}[- ]\d{4}\b", "<PHONE>"),
     ("ip", r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b", "<IP>"),
 ]
-
-
-def scrub_text(col) -> Column:
-    """Text with every PII pattern replaced by its placeholder, in the
-    contractual order."""
-    out = col
-    for _, pat, rep in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, rep)
-    return out
 
 
 def scrub_features(

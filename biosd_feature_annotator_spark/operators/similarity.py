@@ -198,47 +198,13 @@ def _cells_col(vec_col, cents, n_probe: int, kernel: str) -> F.Column:
     return _arrow_ivf_cells(cents, n_probe)(vec_col)
 
 
-def _arrow_cosine():
-    """pandas_udf twin of the catalyst cosine: the dot and both norm
-    accumulations are the IDENTICAL left-to-right fold over vector
-    positions (explicit t-loop, elementwise numpy += — no BLAS/pairwise
-    reordering, no FMA), the casts are the same float32→double
-    widenings, and the final dot/(sqrt(na)·sqrt(nb)) applies the same
-    three rounded ops — bit-equal to the HOF form, so round(cos, 3)
-    oracles stay hash-exact (parity-gated in
-    tests/test_similarity_kernels.py)."""
-    import numpy as np
-
-    @F.pandas_udf("double")
-    def cos(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        if len(sa) == 0:
-            return pd.Series([], dtype="float64")
-        xa, xb = _np_rows(sa), _np_rows(sb)
-        n = xa.shape[0]
-        dot = np.zeros(n)
-        na = np.zeros(n)
-        nb = np.zeros(n)
-        for t in range(xa.shape[1]):  # explicit left fold — order is the contract
-            dot += xa[:, t] * xb[:, t]
-            na += xa[:, t] * xa[:, t]
-            nb += xb[:, t] * xb[:, t]
-        return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
-
-    return cos
-
-
-def cosine(a, b, kernel: str = "catalyst") -> F.Column:
-    """Cosine similarity of two array columns. Dual kernel like the
-    PQ/IVF math (see the kernels note): catalyst is the
-    oracle-replayable HOF form and the DEFAULT — measured r6: on the
-    candidate-scoring paths (two data-dependent vector columns per row,
-    unlike the literal-folded PQ/IVF kernels) the Arrow round trip of
-    both embeddings costs more than the HOF fold saves (7-13 s vs
-    2.5-2.8 s for emb_ann_topk at sf1.0), so the arrow twin stays an
-    available, parity-gated alternative for CPU-bound clusters rather
-    than the default."""
-    if kernel != "catalyst":
-        return _arrow_cosine()(a, b)
+def cosine(a, b) -> F.Column:
+    """Cosine similarity of two array columns, as the oracle-replayable
+    HOF fold. Single kernel, unlike the PQ/IVF math (see the kernels
+    note): on the candidate-scoring paths (two data-dependent vector
+    columns per row, not one column against literal centroids) an Arrow
+    twin's round trip of both embeddings cost more than the fold saves
+    (measured r6: 7-13 s vs 2.5-2.8 s for emb_ann_topk at sf1.0)."""
     dot = F.aggregate(
         F.zip_with(_vecd(a), _vecd(b), lambda x, y: x * y),
         F.lit(0.0),

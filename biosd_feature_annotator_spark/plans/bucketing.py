@@ -12,9 +12,8 @@ exchange-free plan, which is the entire point of the layout.
 Works with the in-memory session catalog (no Hive metastore needed):
 bucketing metadata lives in the catalog entry, data in plain parquet
 under ``path``. On a real cluster the same call against an Iceberg
-catalog becomes ``bucket(n, key)`` partition transforms
-(plans/iceberg.py); locally the native layout demonstrates the
-identical plan property.
+catalog becomes ``bucket(n, key)`` partition transforms; locally the
+native layout demonstrates the identical plan property.
 """
 
 from __future__ import annotations

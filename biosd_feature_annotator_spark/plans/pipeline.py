@@ -138,11 +138,6 @@ def annotate(
     return out
 
 
-def stable_triples(triples: DataFrame) -> DataFrame:
-    """O1 deterministic output order for golden hashing / diffing."""
-    return triples.orderBy("subj", "pred", "obj")
-
-
 def prewarm_extraction(
     spark: SparkSession,
     lex: Lexicon,

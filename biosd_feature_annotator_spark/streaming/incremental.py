@@ -89,13 +89,6 @@ def session_windows(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def dedup_stream(stream: DataFrame) -> DataFrame:
-    """T4: exactly-once triple keys within the watermark horizon."""
-    return stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-        ["conv_id", "turn_idx"]
-    )
-
-
 EVENT_STREAM_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"

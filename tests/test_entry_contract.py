@@ -150,3 +150,54 @@ def test_query_rotation_covers_stale_entries_first():
     rest = [n for n in order if n not in entrymod._PINNED_FIRST]
     rounds = [green.get(n, 0) for n in rest]
     assert rounds == sorted(rounds)  # least-recently-green ordering
+
+
+def test_each_query_is_declared_once():
+    """The oracle tables are the only query declaration: every q_<name>
+    builder is registered (key of oracle_sql()) or queued (key of
+    R6_QUEUE_ORACLES), never both, and every key has its builder."""
+    registered = set(entrymod.oracle_sql())
+    queued = set(entrymod.R6_QUEUE_ORACLES)
+    builders = {n[2:] for n in dir(entrymod) if n.startswith("q_")}
+    assert builders == registered | queued
+    assert not registered & queued
+    assert all(callable(getattr(entrymod, f"q_{n}", None))
+               for n in registered | queued)
+
+
+# list(queries()) under the committed CORRECTNESS_r01-r06 files:
+# reordering oracle_sql() must not move it. A new CORRECTNESS_r*.json
+# file re-rotates queries(); retake the snapshot then.
+QUERIES_ORDER = [
+    "transcripts_kg", "transcripts_kg_stream", "entity_stats_kg",
+    "stream_sessionize", "stream_dedup_keys", "pricing_summary",
+    "star_join_revenue", "brand_quantity", "semi_join_segments",
+    "anti_join_segments", "theta_band_join", "asof_last_signup",
+    "rank_customers", "moving_avg", "range_frame_sum", "cube_orders",
+    "rollup_order_months", "grouping_sets", "distinct_counts", "except_all",
+    "intersect_customers", "union_entities", "string_funcs", "kg_run_diff",
+    "kg_triangles", "tfidf_top_terms", "bm25_docs", "unpivot_lineitem",
+    "window_percentiles", "shared_ngram_spans", "sample_stratified",
+    "histogram_acctbal", "window_first_last", "full_outer_balance",
+    "doc_token_positions", "bloom_semi_join", "stream_join_purchases",
+    "doc_fluency", "curate_docs", "agg_state_merge", "emb_centroids",
+    "edit_distances", "user_gap_stats", "rank_with_nulls", "stream_user_stats",
+    "docs_simhash", "approx_distinct", "phonetic_strings", "winnow_docs",
+    "multimodal_features", "date_funcs", "math_funcs", "json_props",
+    "json_funcs", "stats_agg", "value_percentiles", "stream_window_counts",
+    "pivot_event_counts", "top_orders", "salted_agg", "doc_token_stats",
+    "doc_quality", "doc_langid", "doc_fingerprints", "dedup_exact_docs",
+    "ngram_jaccard_docs", "doc_extract_numbers", "emb_norms",
+    "emb_cosine_pairs", "emb_near_dup", "doc_bpe_tokens", "doc_train_split",
+    "doc_pack_sequences", "vocab_top_tokens", "kg_khop", "kg_pagerank",
+    "doc_scrub_pii", "doc_repetition", "bpe_tokenize_docs",
+    "media_decode_stats", "decontaminate_docs", "mix_sources",
+    "semantic_dedup_docs", "emb_filtered_topk", "doc_quality_linear",
+    "emb_ivfpq_topk", "funnel_signup_purchase", "scd2_user_value",
+    "sessionize_events", "top_sources", "emb_ann_topk", "emb_ivf_topk",
+    "emb_pq_topk", "docs_minhash_pairs", "docs_dedup_clusters",
+]
+
+
+def test_queries_order_matches_snapshot():
+    assert list(entrymod.queries()) == QUERIES_ORDER

@@ -1,8 +1,8 @@
 """The r6 registration queue must be driver-ready NOW: each queued
 query runs against its DuckDB oracle with the same comparison the
 driver applies (row count, column set, order-insensitive value
-multiset), so next round's registration is two registry lines with
-zero new risk."""
+multiset), so registering one (moving its SQL from R6_QUEUE_ORACLES
+into oracle_sql()) carries zero new risk."""
 
 from __future__ import annotations
 
@@ -34,114 +34,10 @@ def duck():
     return con
 
 
-QUEUE = [
-    ("zorder_events", entrymod.q_zorder_events),
-    ("kg_label_prop", entrymod.q_kg_label_prop),
-    ("fuzzy_customer_pairs", entrymod.q_fuzzy_customer_pairs),
-    ("pit_user_values", entrymod.q_pit_user_values),
-    ("dq_orders_report", entrymod.q_dq_orders_report),
-    ("docs_prefix_jaccard", entrymod.q_docs_prefix_jaccard),
-    ("quantile_sketch_orders", entrymod.q_quantile_sketch_orders),
-    ("weighted_sample_docs", entrymod.q_weighted_sample_docs),
-    ("retention_cohorts_events", entrymod.q_retention_cohorts_events),
-    ("langid_trained_docs", entrymod.q_langid_trained_docs),
-    ("fs_customer_pairs", entrymod.q_fs_customer_pairs),
-    ("cc_incremental", entrymod.q_cc_incremental),
-    ("doc_chunks", entrymod.q_doc_chunks),
-    ("cms_token_counts", entrymod.q_cms_token_counts),
-    ("doc_pmi_edges", entrymod.q_doc_pmi_edges),
-    ("doc_containment", entrymod.q_doc_containment),
-    ("tfidf_cosine_pairs", entrymod.q_tfidf_cosine_pairs),
-    ("kg_ppr", entrymod.q_kg_ppr),
-    ("doc_shards", entrymod.q_doc_shards),
-    ("stream_cc_assign", entrymod.q_stream_cc_assign),
-    ("docs_chi2_assoc", entrymod.q_docs_chi2_assoc),
-    ("kg_apply_diff", entrymod.q_kg_apply_diff),
-    ("kg_neighbor_sim", entrymod.q_kg_neighbor_sim),
-    ("kg_kcore", entrymod.q_kg_kcore),
-    ("kg_hits", entrymod.q_kg_hits),
-    ("events_interval_conflicts", entrymod.q_events_interval_conflicts),
-    ("orders_robust_outliers", entrymod.q_orders_robust_outliers),
-    ("snb_customer_pairs", entrymod.q_snb_customer_pairs),
-    ("kg_negative_edges", entrymod.q_kg_negative_edges),
-    ("stream_cms_state", entrymod.q_stream_cms_state),
-    ("cms_join_size", entrymod.q_cms_join_size),
-    ("kg_degree_profile", entrymod.q_kg_degree_profile),
-    ("event_transitions", entrymod.q_event_transitions),
-    ("kg_random_walks", entrymod.q_kg_random_walks),
-    ("events_interval_coalesce", entrymod.q_events_interval_coalesce),
-    ("events_coverage_gaps", entrymod.q_events_coverage_gaps),
-    ("kg_clustering_coef", entrymod.q_kg_clustering_coef),
-    ("kg_skipgram_pairs", entrymod.q_kg_skipgram_pairs),
-    ("eval_topk_rankers", entrymod.q_eval_topk_rankers),
-    ("kg_modularity", entrymod.q_kg_modularity),
-    ("docs_rater_kappa", entrymod.q_docs_rater_kappa),
-    ("mutual_best_pairs", entrymod.q_mutual_best_pairs),
-    ("events_time_weighted_avg", entrymod.q_events_time_weighted_avg),
-    ("emb_auc_scores", entrymod.q_emb_auc_scores),
-    ("emb_calibration", entrymod.q_emb_calibration),
-    ("emb_gram_matrix", entrymod.q_emb_gram_matrix),
-    ("docs_label_gini", entrymod.q_docs_label_gini),
-    ("docs_source_drift", entrymod.q_docs_source_drift),
-    ("events_decayed_score", entrymod.q_events_decayed_score),
-    ("orders_ks_drift", entrymod.q_orders_ks_drift),
-    ("events_regression_eval", entrymod.q_events_regression_eval),
-    ("orders_mannwhitney", entrymod.q_orders_mannwhitney),
-    ("customer_cluster_ari", entrymod.q_customer_cluster_ari),
-    ("orders_fd_profile", entrymod.q_orders_fd_profile),
-    ("events_rate_bursts", entrymod.q_events_rate_bursts),
-    ("events_cum_distinct", entrymod.q_events_cum_distinct),
-    ("lineitem_assoc_rules", entrymod.q_lineitem_assoc_rules),
-    ("kg_closure", entrymod.q_kg_closure),
-    ("orders_truth_fusion", entrymod.q_orders_truth_fusion),
-    ("kg_rules", entrymod.q_kg_rules),
-    ("docs_phrase_search", entrymod.q_docs_phrase_search),
-    ("kg_landmarks", entrymod.q_kg_landmarks),
-    ("docs_rrf_fusion", entrymod.q_docs_rrf_fusion),
-    ("docs_vocab_coverage", entrymod.q_docs_vocab_coverage),
-    ("orders_confusion", entrymod.q_orders_confusion),
-    ("events_rolling_uniques", entrymod.q_events_rolling_uniques),
-    ("customer_k_anonymity", entrymod.q_customer_k_anonymity),
-    ("orders_quantile_bins", entrymod.q_orders_quantile_bins),
-    ("events_portable_hll", entrymod.q_events_portable_hll),
-    ("orders_profile", entrymod.q_orders_profile),
-    ("events_resample", entrymod.q_events_resample),
-    ("kg_weighted_paths", entrymod.q_kg_weighted_paths),
-    ("events_session_paths", entrymod.q_events_session_paths),
-    ("user_value_trend", entrymod.q_user_value_trend),
-    ("stream_hll_users", entrymod.q_stream_hll_users),
-    ("kg_dag_layers", entrymod.q_kg_dag_layers),
-    ("events_ohlc", entrymod.q_events_ohlc),
-    ("events_response_latency", entrymod.q_events_response_latency),
-    ("kg_integrity", entrymod.q_kg_integrity),
-    ("part_alias_priors", entrymod.q_part_alias_priors),
-    ("kg_label_spread", entrymod.q_kg_label_spread),
-    ("docs_source_entropy", entrymod.q_docs_source_entropy),
-    ("conv_stats_kg", entrymod.q_conv_stats_kg),
-    ("conv_repetition_kg", entrymod.q_conv_repetition_kg),
-    ("conv_tool_paths", entrymod.q_conv_tool_paths),
-    ("kg_quotient", entrymod.q_kg_quotient),
-    ("events_crosscorr", entrymod.q_events_crosscorr),
-    ("docs_encoding", entrymod.q_docs_encoding),
-    ("kmv_user_overlap", entrymod.q_kmv_user_overlap),
-    ("kmv_type_users", entrymod.q_kmv_type_users),
-    ("funnel_windowed", entrymod.q_funnel_windowed),
-    ("events_seasonality", entrymod.q_events_seasonality),
-    ("events_retention", entrymod.q_events_retention),
-    ("docs_vocab_growth", entrymod.q_docs_vocab_growth),
-    ("conv_role_transitions", entrymod.q_conv_role_transitions),
-    ("conv_role_funnel", entrymod.q_conv_role_funnel),
-    ("conv_response_latency", entrymod.q_conv_response_latency),
-    ("customer_cdc_state", entrymod.q_customer_cdc_state),
-    ("emb_int8", entrymod.q_emb_int8),
-    ("kg_comention", entrymod.q_kg_comention),
-    ("lineitem_weighted_median", entrymod.q_lineitem_weighted_median),
-    ("schema_match", entrymod.q_schema_match),
-    ("stream_kmv_users", entrymod.q_stream_kmv_users),
-]
-
-
-@pytest.mark.parametrize("name,fn", QUEUE)
+@pytest.mark.parametrize(
+    "name,fn",
+    [(n, getattr(entrymod, f"q_{n}")) for n in entrymod.R6_QUEUE_ORACLES],
+)
 def test_r6_queue_query_matches_oracle(spark, duck, name, fn):
     spd = fn(spark, SF).toPandas()
     opd = duck.sql(entrymod.R6_QUEUE_ORACLES[name]).df()
@@ -155,9 +51,7 @@ def test_r6_queue_not_registered_this_round():
     # the 50-slot window invariant: registering these in r5 would push
     # round-3-stale queries out of the driver's check window
     q = entrymod.queries()
-    queued = {name for name, _ in QUEUE}
-    # single source of truth: the parametrize list IS the queue
-    assert not queued & set(q)
+    assert not set(entrymod.R6_QUEUE_ORACLES) & set(q)
     green = entrymod._driver_green_rounds()
     # rotation property, derived (not round-stamped): the head of the
     # driver's 50-slot window holds the least-recently-green entries, so

@@ -105,26 +105,6 @@ def test_lsh_signature_bit_identical(spark, emb):
     assert a == c
 
 
-def test_cosine_bit_identical(spark, emb):
-    """The arrow cosine twin must reproduce the catalyst HOF fold
-    bit-for-bit (unrounded doubles compared by exact repr) — it scores
-    every ANN candidate path since r6."""
-    a = emb.alias("a").where(F.col("vec_id") < 40)
-    b = emb.alias("b").where((F.col("vec_id") >= 40) & (F.col("vec_id") < 80))
-    pairs = a.crossJoin(b).select(
-        F.col("a.vec_id").alias("qa"), F.col("b.vec_id").alias("qb"),
-        F.col("a.embedding").alias("va"), F.col("b.embedding").alias("vb"),
-    )
-    ka = {(r.qa, r.qb): r.c for r in pairs.select(
-        "qa", "qb", s.cosine("va", "vb", kernel="arrow").alias("c")
-    ).collect()}
-    kc = {(r.qa, r.qb): r.c for r in pairs.select(
-        "qa", "qb", s.cosine("va", "vb", kernel="catalyst").alias("c")
-    ).collect()}
-    # exact float equality: collect round-trips the raw double bits
-    assert ka == kc
-
-
 def test_lsh_topk_identical_across_kernels(spark, emb):
     q = emb.where(F.col("vec_id") < 20)
     a = s.lsh_cosine_topk(q, emb, k=3, n_planes=16, bands=4, dim=64,

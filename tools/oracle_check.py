@@ -1,7 +1,8 @@
 """Local replica of the driver's DuckDB oracle harness: runs every
-queries() entry and its oracle_sql() side-by-side and compares row count,
-sorted column names, dtype families, and the order-insensitive multiset of
-values. Usage:
+declared query next to its oracle (registered ones from oracle_sql() in
+queries() order, then queued ones from R6_QUEUE_ORACLES, each row labelled
+with its set) and compares row count, sorted column names and the
+order-insensitive multiset of values. Usage:
 
     python tools/oracle_check.py [sf_dir] [only_query ...]
 """
@@ -52,18 +53,15 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM parquet_scan('{sf}/{t}.parquet')")
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    n_ok = n_bad = n_rowsonly = 0
-    for name, fn in qs.items():
+    oracles = entrymod.oracle_sql()
+    declared = [("registered", n, oracles[n]) for n in entrymod.queries()]
+    declared += [("queued", n, sql) for n, sql in entrymod.R6_QUEUE_ORACLES.items()]
+    tally = {"registered": [0, 0], "queued": [0, 0]}  # [ok, mismatched]
+    for kind, name, sql in declared:
         if only and name not in only:
             continue
-        sdf = fn(spark, sf)
-        spd = sdf.toPandas()
-        if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(spd)} rows")
-            n_rowsonly += 1
-            continue
-        opd = con.sql(oracles[name]).df()
+        spd = getattr(entrymod, f"q_{name}")(spark, sf).toPandas()
+        opd = con.sql(sql).df()
         problems = []
         if len(spd) != len(opd):
             problems.append(f"rowcount {len(spd)} != {len(opd)}")
@@ -75,14 +73,15 @@ def main():
                 diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
                 problems.append(f"values differ, first diffs: {diffs}")
         if problems:
-            print(f"MISMATCH {name}: {'; '.join(problems)}")
-            n_bad += 1
+            print(f"MISMATCH {kind:<10} {name}: {'; '.join(problems)}")
         else:
-            print(f"OK        {name}: {len(spd)} rows")
-            n_ok += 1
-    print(f"\n{n_ok} ok, {n_bad} mismatched, {n_rowsonly} rows-only")
+            print(f"OK       {kind:<10} {name}: {len(spd)} rows")
+        tally[kind][bool(problems)] += 1
+    print()
+    for kind, (n_ok, n_bad) in tally.items():
+        print(f"{kind}: {n_ok} ok, {n_bad} mismatched")
     spark.stop()
-    sys.exit(1 if n_bad else 0)
+    sys.exit(1 if any(n_bad for _, n_bad in tally.values()) else 0)
 
 
 if __name__ == "__main__":

@@ -168,10 +168,7 @@ def audit(sf: str) -> list[tuple[str, str, int, float | None, int]]:
         )
     rows = []
     oracles = dict(entrymod.oracle_sql())
-    oracles.update({
-        f"queue:{k}": v
-        for k, v in getattr(entrymod, "R6_QUEUE_ORACLES", {}).items()
-    })
+    oracles.update({f"queue:{k}": v for k, v in entrymod.R6_QUEUE_ORACLES.items()})
     for name, sql in oracles.items():
         stripped, audited = deround(sql)
         if not audited:

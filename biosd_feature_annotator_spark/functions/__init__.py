@@ -1,1 +1,1 @@
-from .text import norm_text, with_turn_order, with_prev_turn_columns, conversation_stats  # noqa: F401
+from .text import norm_text, conversation_stats  # noqa: F401

@@ -1,4 +1,4 @@
-"""Catalyst-only text/ordering helpers (SURVEY.md §2.2 P1, §2.6 W2).
+"""Catalyst-only text helpers (SURVEY.md §2.2 P1).
 
 norm_text mirrors the reference's memo-key normalization
 (AnnotatorResources trim+lower+collapse — reconstructed) as a pure
@@ -6,34 +6,12 @@ expression, so dedup/memo joins group on it without any Python."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def norm_text(col) -> Column:
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
-
-
-def with_turn_order(df: DataFrame) -> DataFrame:
-    """W2: stable per-conversation ordering + dense turn number. The
-    window partitions by conv_id — already co-located after the pipeline's
-    hash(conv_id) repartition, so no extra shuffle in-plan."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return df.withColumn("turn_no", F.row_number().over(w))
-
-
-def with_prev_turn_columns(df: DataFrame, n_prev: int = 1) -> DataFrame:
-    """Adds prev_text/prev_role lag columns (window/lag form; the grouped-map
-    applyInPandas form with richer features lives in operators/context.py) — the conversation-context
-    features the extractor can use for predicate routing (e.g. a number in
-    an assistant turn answering an 'age?' user turn)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    out = df
-    for i in range(1, n_prev + 1):
-        suffix = "" if i == 1 else str(i)
-        out = out.withColumn(f"prev_text{suffix}", F.lag("text", i).over(w))
-        out = out.withColumn(f"prev_role{suffix}", F.lag("role", i).over(w))
-    return out
 
 
 def conversation_stats(df: DataFrame) -> DataFrame:

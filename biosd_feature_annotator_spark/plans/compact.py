@@ -11,10 +11,12 @@ column), so a compaction can never silently corrupt a sink.
 Scale notes: file listing and size summation are driver-side metadata
 (same class as manifest reads); the rewrite is one shuffle-free
 coalesce when shrinking (repartition when the target grows file
-counts); the swap is two renames, with the previous generation kept
-until the new one is in place. Partitioned layouts compact per
-partition directory — call it per leaf (the leaves are independent, so
-a campaign parallelizes or schedules them incrementally)."""
+counts); the swap is dirswap.swap_in — two renames, with the previous
+generation kept until the new one is in place, and a compaction cut
+short mid-swap is rolled back by the next call. Partitioned layouts
+compact per partition directory — call it per leaf (the leaves are
+independent, so a campaign parallelizes or schedules them
+incrementally)."""
 
 from __future__ import annotations
 
@@ -24,6 +26,8 @@ import os
 import shutil
 
 from pyspark.sql import SparkSession, functions as F
+
+from .. import dirswap
 
 
 def _dir_fingerprint(spark: SparkSession, path: str):
@@ -46,6 +50,7 @@ def compact_parquet_dir(
     """Compact one flat parquet directory. Returns a report dict:
     {skipped, files_before, files_after, bytes, rows} — skipped=True
     when the layout already meets the target."""
+    dirswap.recover(path)
     files = sorted(glob.glob(os.path.join(path, "*.parquet")))
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total / target_bytes))
@@ -54,9 +59,7 @@ def compact_parquet_dir(
                 "files_after": len(files), "bytes": total, "rows": None}
 
     n_before, fp_before = _dir_fingerprint(spark, path)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    bak = path.rstrip("/") + ".compact.bak"
-    shutil.rmtree(tmp, ignore_errors=True)
+    tmp = dirswap.tmp_of(path)
     df = spark.read.parquet(path)
     (df.coalesce(n_out) if n_out < len(files) else df.repartition(n_out)).write.mode(
         "overwrite"
@@ -72,10 +75,7 @@ def compact_parquet_dir(
             f"({n_before},{fp_before}) != ({n_after},{fp_after})"
         )
 
-    shutil.rmtree(bak, ignore_errors=True)
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
+    dirswap.swap_in(tmp, path)
     files_after = len(glob.glob(os.path.join(path, "*.parquet")))
     return {"skipped": False, "files_before": len(files),
             "files_after": files_after, "bytes": total, "rows": n_after}

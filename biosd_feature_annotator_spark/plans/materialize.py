@@ -35,6 +35,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import dirswap
 from ..sources.lexicon import Lexicon
 from .pipeline import annotate
 
@@ -68,6 +69,7 @@ def manifest_path(out_dir: str) -> str:
 
 def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
     p = manifest_path(out_dir)
+    dirswap.recover(p)
     if not os.path.exists(p):
         return None
     return spark.read.parquet(p)
@@ -158,6 +160,7 @@ def run_annotate(
             F.current_timestamp().alias("ts"),
         )
     )
+    dirswap.recover(manifest_path(out_dir))
     manifest.write.mode("append").parquet(manifest_path(out_dir))
 
     if build_graph:
@@ -218,16 +221,16 @@ def apply_diff(base: DataFrame, diff: DataFrame) -> DataFrame:
 
 def _rewrite_manifests(spark: SparkSession, out_dir: str, keep) -> None:
     """Rewrite the manifest store keeping only rows matching `keep` —
-    write-to-temp + atomic directory swap, never overwrite-in-place while
+    write-to-temp + dirswap.swap_in, never overwrite-in-place while
     reading (manifests are metadata-sized; on Iceberg this is a metadata
     DELETE)."""
     p = manifest_path(out_dir)
+    dirswap.recover(p)
     if not os.path.exists(p):
         return
-    tmp = p + ".rewrite"
+    tmp = dirswap.tmp_of(p)
     spark.read.parquet(p).where(keep).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(p)
-    os.rename(tmp, p)
+    dirswap.swap_in(tmp, p)
 
 
 def purge_run(out_dir: str, run_id: str, spark: SparkSession | None = None) -> None:
@@ -237,13 +240,15 @@ def purge_run(out_dir: str, run_id: str, spark: SparkSession | None = None) -> N
     With a SparkSession the run's manifest rows are dropped too —
     otherwise a later resume=True of the same run_id would anti-join every
     part out against the stale status='done' rows and silently produce no
-    output while reporting success."""
+    output while reporting success. The manifest rows go first: a crash
+    between the two steps leaves data with no manifest rows, which a
+    resume re-processes, never status='done' rows with no data."""
+    if spark is not None:
+        _rewrite_manifests(spark, out_dir, F.col("run_id") != run_id)
     for name in ("triples", "nodes", "edges"):
         p = os.path.join(out_dir, name, f"run_id={run_id}")
         if os.path.exists(p):
             shutil.rmtree(p)
-    if spark is not None:
-        _rewrite_manifests(spark, out_dir, F.col("run_id") != run_id)
 
 
 def purge_older_than(spark: SparkSession, out_dir: str, cutoff) -> list[str]:

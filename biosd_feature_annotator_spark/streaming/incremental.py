@@ -11,9 +11,14 @@ manifest/anti-join resume in plans/materialize.py.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import dirswap
 from ..operators.extract import extract_mentions
 from ..operators.link import best_link, link_entities, term_triples_from_linked, value_triples
 from ..sources.lexicon import Lexicon, lexicon_df
@@ -46,13 +51,19 @@ def annotate_stream(
     at-least-once on crash mid-batch — on a cluster the sink would be an
     Iceberg transactional append. Returns the StreamingQuery."""
     lex_df = lexicon_df(spark, lex)
+    # plans/pipeline.annotate's linking rule: a functional dictionary needs
+    # no ranking window or dedup shuffle; a multi-candidate one takes the
+    # ranked best-link path plus the triple-identity dedup
+    ranked = not lex.is_functional()
 
     def process_batch(batch_df, batch_id: int) -> None:
         mentions = extract_mentions(batch_df, lex)
-        # per-turn dedup in the extractor + functional dictionary → no
-        # ranking window / dedup shuffle needed (see plans/pipeline.py)
         linked = link_entities(mentions, lex_df)
+        if ranked:
+            linked = best_link(linked)
         triples = term_triples_from_linked(linked).unionByName(value_triples(mentions))
+        if ranked:
+            triples = triples.dropDuplicates(["subj", "pred", "obj"])
         triples.write.mode("append").parquet(out_path)
 
     writer = (
@@ -78,21 +89,14 @@ def windowed_mention_rates(stream: DataFrame, window: str = "10 minutes") -> Dat
     )
 
 
-def session_windows(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """T3 session variant: conversation activity sessions keyed by conv_id."""
-    return (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("conv_id"))
-        .agg(F.count("*").alias("n_turns"))
-        .select(F.col("w.start").alias("s_start"), F.col("w.end").alias("s_end"),
-                "conv_id", "n_turns")
-    )
-
-
 EVENT_STREAM_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, event_type string, "
     "value double, props string"
 )
+
+
+def _stage_dir(checkpoint: str) -> str:
+    return os.path.join(os.path.dirname(checkpoint.rstrip("/")), "in")
 
 
 def _stage_single_file(
@@ -106,12 +110,9 @@ def _stage_single_file(
     combined with maxFilesPerTrigger=1 this forces a REAL multi-batch
     availableNow run (one micro-batch per file), the shape the
     multi-batch state-correctness tests drive."""
-    import os
-    import shutil
-
     if not os.path.isfile(events_path):
         return events_path
-    in_dir = os.path.join(os.path.dirname(checkpoint.rstrip("/")), "in")
+    in_dir = _stage_dir(checkpoint)
     shutil.rmtree(in_dir, ignore_errors=True)
     os.makedirs(in_dir)
     if n_files <= 1:
@@ -141,6 +142,69 @@ def _stage_single_file(
     return in_dir
 
 
+def _staged_stream(
+    spark: SparkSession, src_path: str, out_path: str, checkpoint: str,
+    n_files: int = 1, max_files_per_trigger: int | None = None,
+    schema: str = EVENT_STREAM_SCHEMA, fresh: bool = True,
+) -> DataFrame:
+    """The stream members' shared prologue: reset out_path and the
+    checkpoint, stage the input (_stage_single_file) and open the
+    file-stream reader over it. fresh=False is a restart: nothing is
+    reset; a single-file input streams from the directory the fresh run
+    staged it into, and a directory input streams as-is — new files keep
+    folding in, already-committed ones are tracked by the source."""
+    if fresh:
+        for p in (out_path, checkpoint):
+            shutil.rmtree(p, ignore_errors=True)
+        src_path = _stage_single_file(src_path, checkpoint, n_files=n_files)
+    elif os.path.isfile(src_path):
+        src_path = _stage_dir(checkpoint)
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(src_path)
+
+
+def _run_available_now(
+    df: DataFrame, write_batch, checkpoint: str, output_mode: str = "append"
+) -> None:
+    """Drain the stream once (availableNow catch-up) through a
+    checkpointed foreachBatch sink."""
+    (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _upsert_per_user(
+    spark: SparkSession, updated: DataFrame, out_path: str, checkpoint: str,
+    cols: list[str],
+) -> DataFrame:
+    """The per-user stateful members' sink: each micro-batch APPENDS its
+    update rows stamped with their batch id, and the read-back takes the
+    LAST emitted row per user — an upsert view, so users updated only in
+    early batches survive later batches (a plain overwrite sink would
+    drop them)."""
+
+    def write_batch(batch_df, batch_id: int) -> None:
+        batch_df.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
+            "append"
+        ).parquet(out_path)
+
+    _run_available_now(updated, write_batch, checkpoint, "update")
+    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
+    return (
+        spark.read.parquet(out_path)
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .select(*cols)
+    )
+
+
 def stream_event_window_counts(
     spark: SparkSession, events_path: str, out_path: str, checkpoint: str
 ) -> DataFrame:
@@ -155,21 +219,12 @@ def stream_event_window_counts(
     complete output mode keeps every window in state (correct here: the
     check wants the full history; an unbounded production stream would
     use update/append + watermark eviction)."""
-    import shutil
-
-    for p in (out_path, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
-
     # watermarks require TIMESTAMP (not NTZ); pin UTC so the NTZ↔LTZ casts
     # are wall-clock-preserving and the emitted window starts are the same
     # naive datetimes a SQL engine computes with time_bucket
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events_path = _stage_single_file(events_path, checkpoint)
-
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _staged_stream(spark, events_path, out_path, checkpoint).withColumn(
+        "ts", F.col("ts").cast("timestamp")
     )
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -183,14 +238,7 @@ def stream_event_window_counts(
             "event_type", "n", "sum_value",
         ).write.mode("overwrite").parquet(out_path)
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(agg, write_batch, checkpoint, "complete")
     return spark.read.parquet(out_path)
 
 
@@ -215,18 +263,12 @@ def stream_user_running_stats(
     addition order. n_input_files / max_files_per_trigger force a real
     multi-batch availableNow run (tested with ≥3 micro-batches in
     tests/test_streaming.py)."""
-    import shutil
-
     import pandas as pd
 
-    for p in (out_path, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
-    events_path = _stage_single_file(events_path, checkpoint, n_files=n_input_files)
-
-    reader = spark.readStream.schema(EVENT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_path)
+    stream = _staged_stream(
+        spark, events_path, out_path, checkpoint,
+        n_input_files, max_files_per_trigger,
+    )
 
     def update(key, pdfs, state):
         # SQL NULL-sum semantics (ADVICE r2): only non-null values fold
@@ -254,26 +296,8 @@ def stream_user_running_stats(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
-            "append"
-        ).parquet(out_path)
-
-    q = (
-        updated.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(out_path)
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("user_id", "n_events", "sum_value")
+    return _upsert_per_user(
+        spark, updated, out_path, checkpoint, ["user_id", "n_events", "sum_value"]
     )
 
 
@@ -296,17 +320,9 @@ def stream_sessionize_users(
     compares timestamps exactly. UTC is pinned (job-level conf, as in
     stream_event_window_counts) so the NTZ→LTZ→NTZ round-trip the
     streaming engine needs is wall-clock-preserving."""
-    import shutil
-
-    for p in (out_path, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events_path = _stage_single_file(events_path, checkpoint)
-
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _staged_stream(spark, events_path, out_path, checkpoint).withColumn(
+        "ts", F.col("ts").cast("timestamp")
     )
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -325,14 +341,7 @@ def stream_sessionize_users(
             "n_events", "session_value",
         ).write.mode("overwrite").parquet(out_path)
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(agg, write_batch, checkpoint, "complete")
     return spark.read.parquet(out_path)
 
 
@@ -346,35 +355,18 @@ def stream_dedup_keys(
     equals DISTINCT over the same horizon (single availableNow batch ⇒
     the horizon is the whole input), which is exactly what the SQL twin
     checks."""
-    import shutil
-
-    for p in (out_path, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events_path = _stage_single_file(events_path, checkpoint)
-
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _staged_stream(spark, events_path, out_path, checkpoint).withColumn(
+        "ts", F.col("ts").cast("timestamp")
     )
     deduped = (
         stream.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-
-    def write_batch(batch_df, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_path)
-
-    q = (
-        deduped.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        deduped, lambda df, _: df.write.mode("append").parquet(out_path), checkpoint
     )
-    q.awaitTermination()
     return spark.read.parquet(out_path)
 
 
@@ -389,15 +381,8 @@ def stream_annotate_corpus(
     materialized triples are read back — lining up column-for-column with
     the batch flagship so the SAME _transcripts_kg_sql oracle re-derives
     every triple."""
-    import shutil
-
-    for p in (out_path, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
-    staged = _stage_single_file(corpus_path, checkpoint)
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .parquet(staged)
+    stream = _staged_stream(
+        spark, corpus_path, out_path, checkpoint, schema=TRANSCRIPT_SCHEMA
     )
     q = annotate_stream(spark, stream, lex, out_path, checkpoint)
     q.awaitTermination()
@@ -407,7 +392,7 @@ def stream_annotate_corpus(
     from ..operators.link import structural_triples, TRIPLE_COLS
 
     extracted = spark.read.parquet(out_path)
-    corpus = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(staged)
+    corpus = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(corpus_path)
     return extracted.unionByName(structural_triples(corpus)).select(*TRIPLE_COLS)
 
 
@@ -430,21 +415,11 @@ def stream_join_signup_purchase(
     — which is what the SQL twin verifies. Timestamps are compared at
     raw microsecond precision (same precedent as the sessionize
     oracle)."""
-    import shutil
-
-    for p in (out_path, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events_path = _stage_single_file(
-        events_path, checkpoint, n_files=n_input_files
-    )
-
-    reader = spark.readStream.schema(EVENT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    base = reader.parquet(events_path).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
+    base = _staged_stream(
+        spark, events_path, out_path, checkpoint,
+        n_input_files, max_files_per_trigger,
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
     signups = (
         base.where("event_type = 'signup'")
         .select("user_id", F.col("ts").alias("signup_ts"))
@@ -466,18 +441,9 @@ def stream_join_signup_purchase(
         & (purchases.purchase_ts <= signups.signup_ts + F.expr(f"INTERVAL {horizon}")),
         "inner",
     )
-
-    def write_batch(batch_df, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_path)
-
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        joined, lambda df, _: df.write.mode("append").parquet(out_path), checkpoint
     )
-    q.awaitTermination()
     return spark.read.parquet(out_path).select(
         "purchase_id",
         "user_id",
@@ -509,20 +475,14 @@ def stream_funnel_depths(
     cross-batch state is exact (no float time). Emits the user's current
     row per batch; the sink is the same append + last-batch-wins upsert
     view as stream_user_running_stats."""
-    import shutil
-
     import pandas as pd
 
     steps = steps or ["signup", "view", "purchase"]
     k = len(steps)
-    for p in (out_path, checkpoint):
-        shutil.rmtree(p, ignore_errors=True)
-    events_path = _stage_single_file(events_path, checkpoint, n_files=n_input_files)
-
-    reader = spark.readStream.schema(EVENT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_path)
+    stream = _staged_stream(
+        spark, events_path, out_path, checkpoint,
+        n_input_files, max_files_per_trigger,
+    )
 
     def update(key, pdfs, state):
         (user_id,) = key
@@ -558,27 +518,61 @@ def stream_funnel_depths(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    return _upsert_per_user(
+        spark, updated, out_path, checkpoint,
+        ["user_id", "depth", *[f"ts_{i + 1}" for i in range(k)]],
+    )
+
+
+def _fold_state_stream(
+    spark: SparkSession, src_path: str, schema: str, out_path: str,
+    checkpoint: str, n_files: int, fresh: bool, fold,
+) -> DataFrame:
+    """The incremental-state loop behind the five state members
+    (quantiles, connected components, CountMin, portable HLL, KMV): one
+    micro-batch per staged file, each folded into the materialized state
+    as ``fold(batch_df, prev)`` — prev is the committed state, None
+    before the first commit — so the state never rescans history.
+
+    Exactly-once under foreachBatch replay: the folded state plus an
+    `_applied` batch-id marker land in dirswap's scratch dir and are
+    committed by dirswap.swap_in, with dirswap.recover up front and at
+    the head of every batch, so neither crash window of the swap loses
+    the state. A replayed batch sees batch_id ≤ marker and skips.
+    Spark's parquet reader ignores underscore-prefixed files, so the
+    marker travels inside the state directory itself — state and marker
+    cannot diverge.
+
+    fresh=True resets state and checkpoint and stages the input into
+    n_files files; fresh=False restarts against both (_staged_stream)."""
+    # up front as well as per-batch: a restart whose source has no new
+    # files runs ZERO batches, and the final read still needs a whole
+    # state if the previous run died mid-swap
+    dirswap.recover(out_path)
+    stream = _staged_stream(
+        spark, src_path, out_path, checkpoint, n_files=n_files,
+        max_files_per_trigger=1, schema=schema, fresh=fresh,
+    )
+    marker = os.path.join(out_path, "_applied")
+    tmp = dirswap.tmp_of(out_path)
 
     def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(int(batch_id))).write.mode(
-            "append"
-        ).parquet(out_path)
+        dirswap.recover(out_path)
+        if os.path.isfile(marker):
+            with open(marker) as fh:
+                if batch_id <= json.load(fh)["batch_id"]:
+                    return  # replayed batch: already folded in
+        prev = (
+            batch_df.sparkSession.read.parquet(out_path)
+            if os.path.isdir(out_path) else None
+        )
+        fold(batch_df, prev).write.mode("overwrite").parquet(tmp)
+        with open(os.path.join(tmp, "_applied"), "w") as fh:
+            json.dump({"batch_id": batch_id}, fh)
+        dirswap.swap_in(tmp, out_path)
 
-    q = (
-        updated.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(out_path)
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("user_id", "depth", *[f"ts_{i + 1}" for i in range(k)])
-    )
+    _run_available_now(stream, write_batch, checkpoint)
+    return spark.read.parquet(out_path)
 
 
 def stream_quantile_sketch(
@@ -593,92 +587,25 @@ def stream_quantile_sketch(
     never rescan history. The state stays keys×buckets-sized no matter
     how long the stream runs.
 
-    Exactly-once under foreachBatch replay: the merged state and an
-    `_applied` batch-id marker are written to a scratch dir, then
-    committed by the rename-to-.bak swap (the verify-then-swap
-    discipline of plans/compact.py) — there is NO window where the
-    state exists nowhere: out → out.bak, tmp → out, delete .bak, with
-    a recovery step at the head of every batch that rolls a stranded
-    .bak forward (crash between the two renames) or deletes a stale
-    one (crash before its cleanup). A replayed batch sees batch_id ≤
-    marker and skips. Spark's parquet reader ignores underscore-
-    prefixed files, so the marker travels inside the state directory
-    itself — state and marker cannot diverge.
+    Exactly-once under foreachBatch replay and crash-safe: see
+    _fold_state_stream.
 
     NULL values are dropped before bucketing (a NULL would otherwise
     produce a NULL bucket row); the batch-equivalence test applies the
     same filter to its reference."""
-    import json
-    import os
-    import shutil
-
     from ..operators.sketches import grid_quantile_state, merge_quantile_states
 
-    bak = out_path.rstrip("/") + ".bak"
-    tmp = out_path.rstrip("/") + ".tmp"
-    if fresh:
-        for p in (out_path, checkpoint, bak, tmp):
-            shutil.rmtree(p, ignore_errors=True)
-        events_path = _stage_single_file(events_path, checkpoint, n_files=n_files)
-    elif os.path.isfile(events_path):
-        # restart on a single-file input: reuse the dir the fresh run
-        # staged it into (same convention as _stage_single_file)
-        events_path = os.path.join(os.path.dirname(checkpoint.rstrip("/")), "in")
-    # restart on a directory input: stream from it as-is — new files
-    # keep folding in, already-committed ones are tracked by the source
-
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    marker = os.path.join(out_path, "_applied")
-
-    def recover() -> None:
-        """Roll forward/back an interrupted swap so out_path is whole."""
-        if os.path.isdir(bak):
-            if os.path.isdir(out_path):
-                shutil.rmtree(bak)  # crash after commit, before cleanup
-            else:
-                os.rename(bak, out_path)  # crash mid-swap: restore
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    # up front as well as per-batch: a restart whose source has no new
-    # files runs ZERO batches, and the final read still needs a whole
-    # state if the previous run died mid-swap
-    recover()
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        recover()
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                if batch_id <= json.load(fh)["batch_id"]:
-                    return  # replayed batch: already folded in
+    def fold(batch_df, prev):
         delta = grid_quantile_state(
             batch_df.where(F.col("value").isNotNull()),
             ["event_type"], "value", lo, hi, n_buckets,
         )
-        if os.path.isdir(out_path):
-            prev = batch_df.sparkSession.read.parquet(out_path)
-            merged = merge_quantile_states(prev, delta)
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_applied"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        if os.path.isdir(out_path):
-            os.rename(out_path, bak)
-        os.rename(tmp, out_path)
-        shutil.rmtree(bak, ignore_errors=True)
+        return delta if prev is None else merge_quantile_states(prev, delta)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_state_stream(
+        spark, events_path, EVENT_STREAM_SCHEMA, out_path, checkpoint,
+        n_files, fresh, fold,
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
 
 
 EDGE_STREAM_SCHEMA = "src long, dst long"
@@ -699,76 +626,25 @@ def stream_component_assign(
     never with the edge history — the property that turns continuous
     KG entity resolution into a stream of delta jobs.
 
-    Exactly-once under foreachBatch replay: the same verify-then-swap
-    state discipline as stream_quantile_sketch — merged state plus an
-    `_applied` batch-id marker land in a scratch dir, committed by the
-    rename-to-.bak swap with up-front recovery of either crash window;
-    a replayed batch sees batch_id ≤ marker and skips."""
-    import json
-    import os
-    import shutil
-
+    Exactly-once under foreachBatch replay and crash-safe: see
+    _fold_state_stream."""
     from ..operators.canonicalize import (
         connected_components,
         incremental_components,
     )
 
-    bak = out_path.rstrip("/") + ".bak"
-    tmp = out_path.rstrip("/") + ".tmp"
-    if fresh:
-        for p in (out_path, checkpoint, bak, tmp):
-            shutil.rmtree(p, ignore_errors=True)
-        edges_path = _stage_single_file(edges_path, checkpoint, n_files=n_files)
-    elif os.path.isfile(edges_path):
-        edges_path = os.path.join(os.path.dirname(checkpoint.rstrip("/")), "in")
-
-    stream = (
-        spark.readStream.schema(EDGE_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(edges_path)
-    )
-    marker = os.path.join(out_path, "_applied")
-
-    def recover() -> None:
-        if os.path.isdir(bak):
-            if os.path.isdir(out_path):
-                shutil.rmtree(bak)
-            else:
-                os.rename(bak, out_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    recover()
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        recover()
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                if batch_id <= json.load(fh)["batch_id"]:
-                    return
+    def fold(batch_df, prev):
         delta = batch_df.select("src", "dst").where(
             F.col("src").isNotNull() & F.col("dst").isNotNull()
         )
-        if os.path.isdir(out_path):
-            prev = batch_df.sparkSession.read.parquet(out_path)
-            merged = incremental_components(prev, delta)
-        else:
-            merged = connected_components(delta)
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_applied"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        if os.path.isdir(out_path):
-            os.rename(out_path, bak)
-        os.rename(tmp, out_path)
-        shutil.rmtree(bak, ignore_errors=True)
+        if prev is None:
+            return connected_components(delta)
+        return incremental_components(prev, delta)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_state_stream(
+        spark, edges_path, EDGE_STREAM_SCHEMA, out_path, checkpoint,
+        n_files, fresh, fold,
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
 
 
 def stream_cms_counts(
@@ -792,71 +668,18 @@ def stream_cms_counts(
     split is row-identical to the direct sketch over all events so far,
     and a SQL oracle can replay it from the raw history.
 
-    Exactly-once under foreachBatch replay: the verify-then-swap state
-    discipline shared by the family — merged grid plus `_applied`
-    batch-id marker in a scratch dir, committed by the rename-to-.bak
-    swap, with up-front recovery of both crash windows; replayed
-    batches see batch_id ≤ marker and skip."""
-    import json
-    import os
-    import shutil
-
+    Exactly-once under foreachBatch replay and crash-safe: see
+    _fold_state_stream."""
     from ..operators.sketches import cms_state, merge_cms_states
 
-    bak = out_path.rstrip("/") + ".bak"
-    tmp = out_path.rstrip("/") + ".tmp"
-    if fresh:
-        for p in (out_path, checkpoint, bak, tmp):
-            shutil.rmtree(p, ignore_errors=True)
-        events_path = _stage_single_file(events_path, checkpoint, n_files=n_files)
-    elif os.path.isfile(events_path):
-        events_path = os.path.join(os.path.dirname(checkpoint.rstrip("/")), "in")
-
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    marker = os.path.join(out_path, "_applied")
-
-    def recover() -> None:
-        if os.path.isdir(bak):
-            if os.path.isdir(out_path):
-                shutil.rmtree(bak)
-            else:
-                os.rename(bak, out_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    recover()
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        recover()
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                if batch_id <= json.load(fh)["batch_id"]:
-                    return
+    def fold(batch_df, prev):
         delta = cms_state(batch_df, "event_type", depth=depth, width=width)
-        if os.path.isdir(out_path):
-            prev = batch_df.sparkSession.read.parquet(out_path)
-            merged = merge_cms_states(prev, delta)
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_applied"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        if os.path.isdir(out_path):
-            os.rename(out_path, bak)
-        os.rename(tmp, out_path)
-        shutil.rmtree(bak, ignore_errors=True)
+        return delta if prev is None else merge_cms_states(prev, delta)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_state_stream(
+        spark, events_path, EVENT_STREAM_SCHEMA, out_path, checkpoint,
+        n_files, fresh, fold,
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
 
 
 def stream_hll_registers(
@@ -882,73 +705,21 @@ def stream_hll_registers(
     maintained state AND the estimate bit-for-bit from raw history
     (the DataSketches binary in hll_state can't be checked this way).
 
-    Exactly-once under foreachBatch replay: the family's shared
-    verify-then-swap discipline — merged state plus `_applied`
-    batch-id marker, rename-to-.bak commit, up-front recovery of both
-    crash windows; replayed batches skip on batch_id ≤ marker."""
-    import json
-    import os
-    import shutil
-
+    Exactly-once under foreachBatch replay and crash-safe: see
+    _fold_state_stream."""
     from ..operators.sketches import (
         merge_portable_hll_states,
         portable_hll_state,
     )
 
-    bak = out_path.rstrip("/") + ".bak"
-    tmp = out_path.rstrip("/") + ".tmp"
-    if fresh:
-        for pth in (out_path, checkpoint, bak, tmp):
-            shutil.rmtree(pth, ignore_errors=True)
-        events_path = _stage_single_file(events_path, checkpoint, n_files=n_files)
-    elif os.path.isfile(events_path):
-        events_path = os.path.join(os.path.dirname(checkpoint.rstrip("/")), "in")
-
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    marker = os.path.join(out_path, "_applied")
-
-    def recover() -> None:
-        if os.path.isdir(bak):
-            if os.path.isdir(out_path):
-                shutil.rmtree(bak)
-            else:
-                os.rename(bak, out_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    recover()
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        recover()
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                if batch_id <= json.load(fh)["batch_id"]:
-                    return
+    def fold(batch_df, prev):
         delta = portable_hll_state(batch_df, [key_col], value_col, p=p)
-        if os.path.isdir(out_path):
-            prev = batch_df.sparkSession.read.parquet(out_path)
-            merged = merge_portable_hll_states(prev, delta)
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_applied"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        if os.path.isdir(out_path):
-            os.rename(out_path, bak)
-        os.rename(tmp, out_path)
-        shutil.rmtree(bak, ignore_errors=True)
+        return delta if prev is None else merge_portable_hll_states(prev, delta)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_state_stream(
+        spark, events_path, EVENT_STREAM_SCHEMA, out_path, checkpoint,
+        n_files, fresh, fold,
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)
 
 
 def stream_kmv_state(
@@ -969,65 +740,15 @@ def stream_kmv_state(
     states answers "overlap between today's and last month's users"
     without rescanning either period.
 
-    Exactly-once via the family's shared verify-then-swap discipline
-    (marker + rename commit, crash-window recovery, batch-id skip)."""
-    import json
-    import os
-    import shutil
-
+    Exactly-once under foreachBatch replay and crash-safe: see
+    _fold_state_stream."""
     from ..operators.sketches import kmv_state, merge_kmv_states
 
-    bak = out_path.rstrip("/") + ".bak"
-    tmp = out_path.rstrip("/") + ".tmp"
-    if fresh:
-        for pth in (out_path, checkpoint, bak, tmp):
-            shutil.rmtree(pth, ignore_errors=True)
-        events_path = _stage_single_file(events_path, checkpoint, n_files=n_files)
-    elif os.path.isfile(events_path):
-        events_path = os.path.join(os.path.dirname(checkpoint.rstrip("/")), "in")
-
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    marker = os.path.join(out_path, "_applied")
-
-    def recover() -> None:
-        if os.path.isdir(bak):
-            if os.path.isdir(out_path):
-                shutil.rmtree(bak)
-            else:
-                os.rename(bak, out_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    recover()
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        recover()
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                if batch_id <= json.load(fh)["batch_id"]:
-                    return
+    def fold(batch_df, prev):
         delta = kmv_state(batch_df, [key_col], value_col, k=k)
-        if os.path.isdir(out_path):
-            prev = batch_df.sparkSession.read.parquet(out_path)
-            merged = merge_kmv_states(k, prev, delta)
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_applied"), "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        if os.path.isdir(out_path):
-            os.rename(out_path, bak)
-        os.rename(tmp, out_path)
-        shutil.rmtree(bak, ignore_errors=True)
+        return delta if prev is None else merge_kmv_states(k, prev, delta)
 
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_state_stream(
+        spark, events_path, EVENT_STREAM_SCHEMA, out_path, checkpoint,
+        n_files, fresh, fold,
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_path)

@@ -52,3 +52,20 @@ def synonym_lexicon():
         {"term_id": "T_KG", "label": "kilogram", "synonyms": ["kg"], "pred": "(unit)"},
         {"term_id": "T_AGE", "label": "age", "synonyms": ["aged"], "pred": "(context)"},
     ])
+
+
+@pytest.fixture
+def crash_on_commit(monkeypatch):
+    """Arm a one-shot crash of a directory swap's commit: the next rename
+    onto a live path (any rename whose target is not a ``.bak`` backup)
+    raises, after the live directory has already been moved aside."""
+    real_rename = os.rename
+    armed = [True]
+
+    def rename(src, dst):
+        if armed[0] and not str(dst).endswith(".bak"):
+            armed[0] = False
+            raise OSError(f"injected crash renaming {src} -> {dst}")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)

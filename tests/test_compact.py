@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from biosd_feature_annotator_spark.plans.compact import (
@@ -34,8 +35,25 @@ def test_compact_reduces_files_and_preserves_content(spark, tmp_path):
     assert rep["files_after"] == 1  # tiny data, one target bin
     assert (n0, fp0) == _dir_fingerprint(spark, p)
     # no temp/backup leftovers
-    assert not os.path.exists(p + ".compact.tmp")
-    assert not os.path.exists(p + ".compact.bak")
+    assert not os.path.exists(p + ".tmp")
+    assert not os.path.exists(p + ".bak")
+
+
+def test_compact_crash_mid_swap_is_rolled_back(spark, tmp_path, crash_on_commit):
+    """A crash between `path → .bak` and `tmp → path` fails the call
+    loudly; the next compaction first rolls the old generation back, so
+    the directory keeps its pre-compaction content."""
+    p = str(tmp_path / "sink")
+    _append_many(spark, p)
+    before = _dir_fingerprint(spark, p)
+    with pytest.raises(OSError, match="injected crash"):
+        compact_parquet_dir(spark, p, target_bytes=1 << 30)
+    assert not os.path.exists(p)  # the live dir is stranded as .bak
+
+    rep = compact_parquet_dir(spark, p, target_bytes=1 << 30)
+    assert not rep["skipped"] and rep["files_after"] == 1
+    assert _dir_fingerprint(spark, p) == before
+    assert not os.path.exists(p + ".tmp") and not os.path.exists(p + ".bak")
 
 
 def test_compact_skips_already_compact_dir(spark, tmp_path):

@@ -233,3 +233,32 @@ def test_alias_priors_hand_case(spark):
     assert d.rank == 2 and d.prior_micro == 400_000
     h = got[("human", "HOMO")]
     assert h.prior_micro == 1_000_000        # (1+1)e6 // (1+1)
+
+
+def test_stream_links_like_annotate_on_multi_candidate_lexicon(spark, tmp_path):
+    """annotate_stream's micro-batch links exactly as annotate() does: on
+    a multi-candidate dictionary the streamed rows equal annotate()'s
+    non-structural rows — one HIGH hasDrug triple, not one per candidate."""
+    from collections import Counter
+
+    from biosd_feature_annotator_spark.operators.link import TRIPLE_COLS
+    from biosd_feature_annotator_spark.streaming import (
+        annotate_stream,
+        read_transcript_stream,
+    )
+
+    lex = _multi_candidate_lexicon()
+    tr = _transcripts(spark, ["patient on beta blocker since monday"])
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    tr.write.parquet(src)
+    q = annotate_stream(
+        spark, read_transcript_stream(spark, src), lex, out, str(tmp_path / "ck")
+    )
+    q.awaitTermination(120)
+    streamed = Counter(map(tuple, spark.read.parquet(out).select(*TRIPLE_COLS).collect()))
+
+    batch = annotate(spark, tr, lex, build_graph=False, cache_mentions=False)["triples"]
+    want = batch.where(F.col("provenance") != "structural")
+    assert streamed == Counter(map(tuple, want.collect()))
+    pred = TRIPLE_COLS.index("pred")
+    assert sum(n for t, n in streamed.items() if t[pred] == "hasDrug") == 1

@@ -126,6 +126,34 @@ def test_purge_with_spark_rewrites_manifests_and_resume_reprocesses(
     assert read_manifests(spark, out).where("run_id = 'a'").count() == 4
 
 
+def test_purge_crash_mid_manifest_swap_loses_no_rows(
+    spark, lexicon, transcripts, tmp_path, crash_on_commit
+):
+    """A crash inside purge_run's manifest rewrite, between `manifests →
+    .bak` and `tmp → manifests`: the next reader rolls the old manifest
+    back (every row, the purged run's included) and the run's data is
+    still there; a following run's append keeps all earlier rows."""
+    out = str(tmp_path / "purge_crash")
+    run_annotate(spark, transcripts, lexicon, out, "a", 4, build_graph=False)
+    run_annotate(spark, transcripts, lexicon, out, "b", 4, build_graph=False)
+    fp_a = table_fp(read_triples(spark, out, "a"))
+
+    with pytest.raises(OSError, match="injected crash"):
+        purge_run(out, "a", spark=spark)
+    m = read_manifests(spark, out)
+    assert m is not None
+    assert sorted(r.run_id for r in m.collect()) == ["a"] * 4 + ["b"] * 4
+    assert table_fp(read_triples(spark, out, "a")) == fp_a  # data kept too
+
+    run_annotate(spark, transcripts, lexicon, out, "c", 4, build_graph=False)
+    runs = [r.run_id for r in read_manifests(spark, out).collect()]
+    assert sorted(runs) == ["a"] * 4 + ["b"] * 4 + ["c"] * 4
+    # the failed purge is retryable
+    purge_run(out, "a", spark=spark)
+    runs = [r.run_id for r in read_manifests(spark, out).collect()]
+    assert sorted(runs) == ["b"] * 4 + ["c"] * 4
+
+
 def test_purge_older_than_retention(spark, lexicon, transcripts, tmp_path):
     from biosd_feature_annotator_spark.plans.materialize import purge_older_than
 

@@ -5,9 +5,10 @@ confidence-ranked mapping (SURVEY.md §2.4 J2, §2.6 W1 — reconstructed) as a
 pure DataFrame plan:
 
 1. J1 memoization: the reference annotated each *distinct* normalized
-   string once (Guava-Table store). Here the link join runs on
-   ``dropDuplicates(match_norm, match_kind)`` of the mention keys and fans
-   results back by equi-join — set semantics without driver-side caching.
+   string once (Guava-Table store). Here the broadcast dictionary join
+   gives the same set semantics without a cache: every mention probes the
+   per-executor hash table of the lexicon, so a repeated surface costs one
+   hash lookup, not a second annotation.
 2. J2 dictionary lookup: broadcast hash join mentions ⋈ lexicon on
    (match_norm, match_kind). The dictionary is tiny relative to executor
    memory; at >broadcast-threshold dictionary sizes drop the hint and AQE
@@ -73,25 +74,10 @@ def _parse_bytes(s: str) -> int:
     return int(s[:i]) * _BYTE_SUFFIX[s[i:].strip()]
 
 
-def link_entities(
-    mentions: DataFrame, lex_df: DataFrame, memoize: bool = False
-) -> DataFrame:
+def link_entities(mentions: DataFrame, lex_df: DataFrame) -> DataFrame:
     """Term mentions → scored candidate links (broadcast hash join while
-    the dictionary fits the broadcast threshold — see _dict_side).
-
-    memoize=True reproduces the reference's J1 memo-store semantics
-    explicitly: score each *distinct* (match_norm, match_kind) key once,
-    then fan results back to mentions by equi-join. With a broadcast
-    dictionary both shapes cost the same; the flag exists for expensive
-    scorers (e.g. a model-based linker) where per-distinct-key work is the
-    win the reference's Guava-Table cache bought."""
+    the dictionary fits the broadcast threshold — see _dict_side)."""
     terms = mentions.where(F.col("kind") == "term")
-    if memoize:
-        keys = terms.select("match_norm", "match_kind").dropDuplicates()
-        scored_keys = keys.join(
-            _dict_side(lex_df), on=["match_norm", "match_kind"], how="inner"
-        )
-        return terms.join(scored_keys, on=["match_norm", "match_kind"], how="inner")
     return terms.join(
         _dict_side(lex_df), on=["match_norm", "match_kind"], how="inner"
     )

@@ -508,7 +508,9 @@ def apply_cdc_log(
     Seq ties are the caller's contract (seq_cols must totally order a
     key's ops); a deterministic tie-break on op_col is appended so
     equal-seq replays are at least stable, but relying on it means the
-    upstream CDC extractor is broken."""
+    upstream CDC extractor is broken. A NULL seq sorts lowest: such an op
+    never beats an op of the same key with a non-NULL seq, and among ops
+    whose seq is all NULL the op_col tie-break decides (U beats D)."""
     seq = list(seq_cols or ["ts"])
     # last-op election via max_by over (seq…, op) instead of a
     # row_number window (r6): identical winner under the caller's

@@ -86,9 +86,15 @@ def compact_partitioned(
 ) -> list[dict]:
     """Compact every leaf partition directory under ``root`` (layout
     ``root/key=value/.../*.parquet``). Leaves are independent rewrites;
-    each carries its own verify-then-swap."""
+    each carries its own verify-then-swap. A leaf left as ``<leaf>.bak``
+    by a swap that was cut short is recovered first, and swap scratch
+    (``.bak``/``.tmp``) is never walked as a leaf."""
+    pattern = os.path.join(glob.escape(root), "**", "*.bak")
+    for bak in glob.glob(pattern, recursive=True):
+        dirswap.recover(bak[: -len(".bak")])
     reports = []
     for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.endswith((".bak", ".tmp"))]
         if any(f.endswith(".parquet") for f in filenames) and not dirnames:
             rep = compact_parquet_dir(spark, dirpath, target_bytes)
             rep["path"] = dirpath

@@ -11,10 +11,6 @@ Scale notes (the parts that matter at 100 TB):
   shuffle, after which extraction, structural triples and the per-subject
   windows are all partition-local.
 - the lexicon travels once per executor (broadcast), never per row.
-- linking runs on the *deduplicated* (match_norm, match_kind) keys only if
-  `memoize=True` (J1 semantics) — at transcript scale the same surface
-  repeats millions of times; the dictionary join then fans results back by
-  an equi-join on the same key, which AQE plans as broadcast when small.
 """
 
 from __future__ import annotations

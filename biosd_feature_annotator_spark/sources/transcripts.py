@@ -45,13 +45,14 @@ def read_transcripts(
     max_text_len: int | None = None,
 ) -> DataFrame:
     """Scan transcripts from an Iceberg table name (contains no '/'), a
-    parquet path, a JSONL drop directory/file (*.jsonl → the custom
-    jsonl_transcripts Python DataSource, sources/jsonl.py), or a CSV
-    drop directory/file (*.csv → Spark's native CSV reader with the
-    contract schema; header tolerated, ISO-8601 ts). The scopings push
-    down to the parquet/Iceberg scan; on the interchange formats
-    (JSONL/CSV) they are plain post-scan filters — compact to columnar
-    before analytical scans.
+    parquet path, a JSONL drop directory/file (*.jsonl → Spark's native
+    JSON reader with the contract schema; FAILFAST, so a torn line fails
+    the read; ISO-8601 ts; extra keys and non-.jsonl files in the drop
+    are ignored), or a CSV drop directory/file (*.csv → Spark's native
+    CSV reader with the contract schema; header tolerated, ISO-8601 ts).
+    The scopings push down to the parquet/Iceberg scan; on the
+    interchange formats (JSONL/CSV) they are plain post-scan filters —
+    compact to columnar before analytical scans.
 
     max_text_len (SURVEY.md §2.2 P3, the reference's too-long-text guard):
     drops turns whose text exceeds N chars with a JVM-side length predicate
@@ -67,10 +68,12 @@ def read_transcripts(
         )
 
     if path_or_table.endswith(".jsonl") or _dir_has(".jsonl"):
-        from .jsonl import JsonlTranscriptDataSource
-
-        spark.dataSource.register(JsonlTranscriptDataSource)
-        df = spark.read.format("jsonl_transcripts").load(path_or_table)
+        df = (
+            spark.read.schema(TRANSCRIPT_SCHEMA)
+            .option("mode", "FAILFAST")
+            .option("pathGlobFilter", "*.jsonl")
+            .json(path_or_table)
+        )
     elif path_or_table.endswith(".csv") or _dir_has(".csv"):
         df = (
             spark.read.schema(TRANSCRIPT_SCHEMA)

@@ -74,3 +74,18 @@ def test_compact_partitioned_walks_leaves(spark, tmp_path):
     assert all(not r["skipped"] for r in reports)
     got = spark.read.parquet(root).count()
     assert got == 600
+
+
+def test_compact_partitioned_recovers_a_stranded_leaf(spark, tmp_path):
+    """A leaf stranded as `k=0.bak` by a cut-short swap is rolled back
+    before the walk, and the `.bak` name is never compacted as a leaf."""
+    root = str(tmp_path / "part")
+    for _ in range(3):
+        spark.range(200).select(
+            (F.col("id") % 2).alias("k"), F.col("id")
+        ).write.mode("append").partitionBy("k").parquet(root)
+    os.rename(os.path.join(root, "k=0"), os.path.join(root, "k=0.bak"))
+    reports = compact_partitioned(spark, root, target_bytes=1 << 30)
+    assert os.path.isdir(os.path.join(root, "k=0"))
+    assert spark.read.parquet(root).count() == 600
+    assert not [r["path"] for r in reports if ".bak" in r["path"]]

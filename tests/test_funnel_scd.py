@@ -1329,6 +1329,26 @@ def test_apply_cdc_log_hand_case(spark):
     assert got == {"a": 99, "c": 3, "d": 7}
 
 
+def test_apply_cdc_log_null_seq_sorts_lowest(spark):
+    from biosd_feature_annotator_spark.operators.scd import apply_cdc_log
+
+    snap = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long")
+    ops = spark.createDataFrame(
+        [
+            ("a", 10, "U", 1), ("a", 0, "D", None),      # non-NULL seq wins
+            ("b", 0, "D", 1), ("b", 20, "U", None),      # ... delete kept
+            ("c", 0, "D", None), ("c", 30, "U", None),   # all NULL: U > D
+        ],
+        "k string, v long, op string, ts long",
+    )
+    got = dict(
+        (r.k, r.v)
+        for r in apply_cdc_log(snap, ops, ["k"], ["v"],
+                               seq_cols=["ts"]).collect()
+    )
+    assert got == {"a": 10, "c": 30}
+
+
 def test_weighted_median_hand_case(spark):
     from biosd_feature_annotator_spark.plans.quality import weighted_median
 

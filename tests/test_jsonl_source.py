@@ -1,6 +1,7 @@
-"""Custom Python DataSource (jsonl_transcripts): partitioned read, writer
-round-trip, and pipeline integration (JSONL corpus → same triples as the
-in-memory corpus)."""
+"""Interchange drops through read_transcripts: JSONL via Spark's JSON
+reader (split scan, lossless, ts/extra-key/stray-file parsing, torn
+lines fail), CSV via the CSV reader, and pipeline integration (JSONL
+corpus → same triples as the in-memory corpus)."""
 
 from __future__ import annotations
 
@@ -10,13 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from biosd_feature_annotator_spark.sources.jsonl import JsonlTranscriptDataSource
+from biosd_feature_annotator_spark.sources.transcripts import read_transcripts
 from biosd_feature_annotator_spark.synth import synth_transcripts
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _register(spark):
-    spark.dataSource.register(JsonlTranscriptDataSource)
 
 
 def _dump(df, path: str, n_files: int = 3) -> None:
@@ -38,22 +34,15 @@ def test_read_is_partitioned_and_lossless(spark, tmp_path):
     src = synth_transcripts(spark, 300)
     p = str(tmp_path / "drop")
     _dump(src, p, n_files=3)
-    got = spark.read.format("jsonl_transcripts").load(p)
-    assert got.rdd.getNumPartitions() == 3  # one partition per file
-    assert sorted(map(_key, got.collect())) == sorted(map(_key, src.collect()))
-
-
-def test_writer_roundtrip(spark, tmp_path):
-    src = synth_transcripts(spark, 200)
-    p = str(tmp_path / "export")
-    src.write.format("jsonl_transcripts").mode("overwrite").save(p)
-    assert len(os.listdir(p)) >= 1
-    back = spark.read.format("jsonl_transcripts").load(p)
-    assert sorted(map(_key, back.collect())) == sorted(map(_key, src.collect()))
-    # overwrite is idempotent (no file accumulation across re-runs)
-    src.write.format("jsonl_transcripts").mode("overwrite").save(p)
-    back2 = spark.read.format("jsonl_transcripts").load(p)
-    assert back2.count() == src.count()
+    conf = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "4096")
+    try:
+        got = read_transcripts(spark, p)
+        assert got.rdd.getNumPartitions() > 1  # the scan is split
+        assert sorted(map(_key, got.collect())) == sorted(map(_key, src.collect()))
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_pipeline_over_jsonl_matches_in_memory(spark, lexicon, tmp_path):
@@ -62,7 +51,7 @@ def test_pipeline_over_jsonl_matches_in_memory(spark, lexicon, tmp_path):
     src = synth_transcripts(spark, 500)
     p = str(tmp_path / "kg_drop")
     _dump(src, p, n_files=2)
-    jl = spark.read.format("jsonl_transcripts").load(p)
+    jl = read_transcripts(spark, p)
 
     def fp(df):
         t = annotate(spark, df, lexicon, build_graph=False, cache_mentions=False)["triples"]
@@ -71,15 +60,7 @@ def test_pipeline_over_jsonl_matches_in_memory(spark, lexicon, tmp_path):
     assert fp(jl) == fp(src)
 
 
-def test_missing_path_errors(spark):
-    with pytest.raises(Exception, match="path"):
-        # reader construction is lazy — the error surfaces at planning/action
-        spark.read.format("jsonl_transcripts").load().count()
-
-
 def test_read_transcripts_routes_jsonl(spark, tmp_path):
-    from biosd_feature_annotator_spark.sources.transcripts import read_transcripts
-
     src = synth_transcripts(spark, 100)
     p = str(tmp_path / "route_drop")
     _dump(src, p, n_files=2)
@@ -89,56 +70,10 @@ def test_read_transcripts_routes_jsonl(spark, tmp_path):
     assert 0 < scoped.count() < src.count()
 
 
-def test_failed_overwrite_preserves_existing_data(spark, tmp_path):
-    """ADVICE r2: the writer must be two-phase — a job that fails mid-write
-    leaves the pre-existing export untouched (no destructive rmtree at plan
-    time, no partial part files a later read silently consumes)."""
-    src = synth_transcripts(spark, 60)
-    p = str(tmp_path / "export")
-    src.write.format("jsonl_transcripts").mode("overwrite").save(p)
-    before = sorted(map(_key, spark.read.format("jsonl_transcripts").load(p).collect()))
-
-    def boom(batches):
-        raise RuntimeError("simulated task failure")
-        yield  # pragma: no cover
-
-    bad = synth_transcripts(spark, 60).mapInPandas(
-        boom,
-        schema="conv_id string, turn_idx int, role string, text string, "
-               "tool string, ts timestamp",
-    )
-    with pytest.raises(Exception):
-        bad.write.format("jsonl_transcripts").mode("overwrite").save(p)
-
-    after = sorted(map(_key, spark.read.format("jsonl_transcripts").load(p).collect()))
-    assert after == before  # old export fully intact
-    assert not [f for f in os.listdir(p) if f.endswith(".tmp")]  # staging swept
-
-
-def test_append_jobs_to_same_dir_never_clobber(spark, tmp_path):
-    """r3 ADVICE: two append jobs writing the SAME directory must stay
-    disjoint — every final part name embeds its job's token, so a second
-    job (same partition ids) cannot os.replace over the first job's
-    parts, and the union of both exports survives."""
-    p = str(tmp_path / "export")
-    a = synth_transcripts(spark, 40)
-    b = synth_transcripts(spark, 40).withColumn(
-        "conv_id", F.concat(F.lit("x"), F.col("conv_id"))
-    )
-    a.write.format("jsonl_transcripts").mode("append").save(p)
-    b.write.format("jsonl_transcripts").mode("append").save(p)
-    got = sorted(map(_key, spark.read.format("jsonl_transcripts").load(p).collect()))
-    want = sorted(list(map(_key, a.collect())) + list(map(_key, b.collect())))
-    assert got == want
-    assert not [f for f in os.listdir(p) if f.endswith(".tmp")]
-
-
 def test_read_transcripts_routes_csv(spark, tmp_path):
     """S1 breadth: a CSV drop directory routes through Spark's native CSV
     reader with the contract schema and survives the round trip."""
     import csv
-
-    from biosd_feature_annotator_spark.sources.transcripts import read_transcripts
 
     src = synth_transcripts(spark, 120)
     p = tmp_path / "csvdrop"
@@ -161,8 +96,9 @@ def test_read_transcripts_routes_csv(spark, tmp_path):
 
 
 def test_jsonl_permissive_mode_skips_torn_lines(spark, tmp_path):
-    """PERMISSIVE skips malformed lines (torn writes) but still fails a
-    file that is mostly garbage; FAILFAST (default) raises immediately."""
+    """A torn line (truncated tail from a crashed producer) fails the
+    read: JSONL drops are read FAILFAST, so corruption stops an ingest
+    instead of silently shrinking it. No permissive skip mode exists."""
     src = synth_transcripts(spark, 90)
     p = str(tmp_path / "drop")
     _dump(src, p, n_files=1)
@@ -170,18 +106,38 @@ def test_jsonl_permissive_mode_skips_torn_lines(spark, tmp_path):
         fh.write('{"conv_id": "torn", "turn_i\n')  # truncated tail
 
     with pytest.raises(Exception):
-        spark.read.format("jsonl_transcripts").load(p).count()
+        read_transcripts(spark, p).count()
 
-    got = (
-        spark.read.format("jsonl_transcripts").option("mode", "PERMISSIVE").load(p)
-    )
-    assert got.count() == src.count()
 
-    bad = str(tmp_path / "garbage")
-    os.makedirs(bad)
-    with open(os.path.join(bad, "f0.jsonl"), "w") as fh:
-        fh.write("not json\n" * 50 + '{"conv_id":"c","turn_idx":0}\n')
-    with pytest.raises(Exception):
-        spark.read.format("jsonl_transcripts").option(
-            "mode", "PERMISSIVE"
-        ).load(bad).count()
+def test_jsonl_parses_ts_forms_extra_keys_and_skips_stray_files(spark, tmp_path):
+    """ISO-8601 ts with a microsecond fraction, a UTC offset (normalized
+    to the UTC session zone), a space separator, and null all parse;
+    unknown keys are ignored; a non-.jsonl file in the drop is skipped;
+    the path may name the .jsonl file itself."""
+    p = tmp_path / "drop"
+    p.mkdir()
+    turns = [
+        {"turn_idx": 0, "ts": "2024-01-02T03:04:05.123456"},
+        {"turn_idx": 1, "ts": "2024-01-02T03:04:05+02:00"},
+        {"turn_idx": 2, "ts": "2024-01-02 03:04:05"},
+        {"turn_idx": 3, "ts": None},
+        {"turn_idx": 4, "ts": "2024-01-02T03:04:05", "extra": {"x": [1]}},
+    ]
+    with open(p / "a.jsonl", "w") as fh:
+        for t in turns:
+            fh.write(json.dumps({"conv_id": "c1", "role": "user",
+                                 "text": "hi", "tool": None, **t}) + "\n")
+    (p / "notes.txt").write_text("not json\n")
+
+    want = [
+        (0, "2024-01-02 03:04:05.123456"),
+        (1, "2024-01-02 01:04:05.000000"),
+        (2, "2024-01-02 03:04:05.000000"),
+        (3, None),
+        (4, "2024-01-02 03:04:05.000000"),
+    ]
+    for path in (str(p), str(p / "a.jsonl")):
+        got = read_transcripts(spark, path).select(
+            "turn_idx", F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        )
+        assert sorted(tuple(r) for r in got.collect()) == want

@@ -28,6 +28,7 @@ constant locally, thousands on a cluster.
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import time
@@ -36,12 +37,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import dirswap
+from ..session import local_frame
 from ..sources.lexicon import Lexicon
 from .pipeline import annotate
 
+# The manifest store's schema, as existing stores hold it: wall_ms is an
+# int (a file with a long wall_ms next to an int one can fail the read).
+# wall_ms: milliseconds from the run_annotate call until the manifest rows
+# are computed — extraction, linking, the triple sink and both
+# fingerprints; not the manifest append or the nodes/edges write. ts: one
+# UTC driver timestamp per invocation, taken at the same point.
 MANIFEST_SCHEMA = (
-    "run_id string, part_id int, status string, n_rows long, n_triples long, "
-    "input_fingerprint long, triple_fingerprint long, wall_ms long, ts timestamp"
+    "run_id string not null, part_id int, status string not null, "
+    "n_rows long not null, n_triples long not null, input_fingerprint long, "
+    "triple_fingerprint long, wall_ms int not null, ts timestamp not null"
 )
 
 
@@ -100,7 +109,9 @@ def run_annotate(
     extraction: str = "python",
 ) -> DataFrame:
     """Annotate → partitioned triple sink + manifests. Returns the manifest
-    rows written by THIS invocation.
+    rows written by THIS invocation (one per processed part; none when a
+    resume finds every part done), as a local frame of the rows appended
+    to the store — the store is not read back.
 
     only_parts simulates a partial/crashed run in tests; resume=True skips
     parts already marked done in the manifest (anti-join J4).
@@ -140,8 +151,7 @@ def run_annotate(
         written = written.join(processed, "part_id", "left_semi")
     t_fp = fingerprint(written, ["subj", "pred", "obj", "confidence"])
     i_fp = fingerprint(src, ["conv_id", "turn_idx", "text"])
-    wall_ms = int((time.time() - t0) * 1000)
-    manifest = (
+    parts = (
         i_fp.withColumnRenamed("n", "n_rows").withColumnRenamed("fp", "input_fingerprint")
         .join(
             t_fp.withColumnRenamed("n", "n_triples").withColumnRenamed("fp", "triple_fingerprint"),
@@ -149,23 +159,30 @@ def run_annotate(
             "left",
         )
         .select(
-            F.lit(run_id).alias("run_id"),
             "part_id",
-            F.lit("done").alias("status"),
             "n_rows",
             F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
             "input_fingerprint",
             "triple_fingerprint",
-            F.lit(wall_ms).alias("wall_ms"),
-            F.current_timestamp().alias("ts"),
         )
+        .collect()
+    )
+    wall_ms = int((time.time() - t0) * 1000)
+    ts = datetime.datetime.now(datetime.timezone.utc)
+    manifest = local_frame(
+        spark,
+        [(run_id, r.part_id, "done", r.n_rows, r.n_triples, r.input_fingerprint,
+          r.triple_fingerprint, wall_ms, ts) for r in parts],
+        MANIFEST_SCHEMA,
     )
     dirswap.recover(manifest_path(out_dir))
-    manifest.write.mode("append").parquet(manifest_path(out_dir))
+    # one file per invocation: a local frame of n_parts rows would
+    # otherwise be split across the default parallelism
+    manifest.coalesce(1).write.mode("append").parquet(manifest_path(out_dir))
 
     if build_graph:
         materialize_graph(plan, out_dir, run_id)
-    return spark.read.parquet(manifest_path(out_dir)).where(F.col("run_id") == run_id)
+    return manifest
 
 
 def read_triples(spark: SparkSession, out_dir: str, run_id: str | None = None) -> DataFrame:

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # One Arrow batch per ~10k rows keeps pandas-UDF peak memory bounded at
 # wide text rows while amortizing Python<->JVM transfer. At 100 TB this is
@@ -65,3 +66,24 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A driver-built table as a DataFrame that plans as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list of tuples>)`` plans as a scan over a
+    pickled Python RDD, so every action that reads it runs a job on Python
+    workers to unpickle it, and the optimizer sees no size for it. Built
+    from an Arrow table instead, the rows travel to the JVM once, with the
+    Arrow conf on or off, and the plan carries exact statistics (what the
+    size-aware broadcast hint in operators/link reads). ``schema`` is a DDL
+    string; each row is a tuple in its column order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, struct)

@@ -14,6 +14,9 @@ dictionary is a *broadcast* structure:
   expansion as a DataFrame for the broadcast hash join in operators/link.py
   (SURVEY.md §2.4 J2). For dictionaries larger than driver memory the same
   join degrades gracefully to sort-merge by dropping the broadcast hint.
+  It is built from an Arrow table (``session.local_frame``) so it plans as
+  a ``LocalRelation``: broadcasting it runs no Python-worker job, and its
+  exact size is what decides the broadcast hint.
 
 Confidence semantics are frozen per FIXTURES.md §2: label exact → HIGH 1.0,
 synonym exact → GOOD 0.9, all label tokens present → MEDIUM 0.7.
@@ -26,6 +29,8 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import local_frame
 
 CONF_LEVELS = {"label": ("HIGH", 1.0), "synonym": ("GOOD", 0.9), "tokens": ("MEDIUM", 0.7)}
 
@@ -159,7 +164,8 @@ def lexicon_df(spark: SparkSession, lex: Lexicon) -> DataFrame:
     for tid, toks in lex.token_labels:
         lvl, conf = CONF_LEVELS["tokens"]
         rows.append((" ".join(toks), "tokens", tid, pred_of[tid], label_of[tid], conf, lvl))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "match_norm string, match_kind string, term_id string, pred string, "
         "term_label string, conf double, confidence string",

@@ -115,7 +115,10 @@ def main() -> None:
         build_graph=not args.no_graph,
         extraction=args.extraction,
     )
-    rows = manifest.groupBy().sum("n_rows", "n_triples").collect()[0]
+    # this invocation's parts only: a resume of a finished run reports 0
+    n_turns, n_triples = (
+        v or 0 for v in manifest.groupBy().sum("n_rows", "n_triples").collect()[0]
+    )
     wall = time.time() - t0
     if prewarm_thread is not None:
         # don't let session teardown race the daemon thread's in-flight
@@ -126,11 +129,11 @@ def main() -> None:
         json.dumps(
             {
                 "run_id": args.run_id,
-                "n_turns": rows[0],
-                "n_triples": rows[1],
+                "n_turns": n_turns,
+                "n_triples": n_triples,
                 "wall_sec": round(wall, 2),
-                "turns_per_sec": round((rows[0] or 0) / wall, 1),
-                "triples_per_sec": round((rows[1] or 0) / wall, 1),
+                "turns_per_sec": round(n_turns / wall, 1),
+                "triples_per_sec": round(n_triples / wall, 1),
             }
         )
     )

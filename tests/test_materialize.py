@@ -67,6 +67,56 @@ def test_resume_after_partial_run(spark, lexicon, transcripts, tmp_path):
     assert table_fp(read_triples(spark, out_part, "r")) == full_fp
 
 
+def test_resume_returns_only_this_invocations_rows(spark, lexicon, transcripts, tmp_path):
+    """run_annotate returns the manifest rows it appended — not every row
+    stored for the run — with the same fingerprints, counts and ts as the
+    stored copies; a resume of a finished run appends and returns none."""
+    out = str(tmp_path / "returned")
+    first = run_annotate(
+        spark, transcripts, lexicon, out, "r", N_PARTS,
+        only_parts=[0, 1, 2, 3], build_graph=False,
+    )
+    assert sorted(r.part_id for r in first.collect()) == [0, 1, 2, 3]
+
+    second = run_annotate(
+        spark, transcripts, lexicon, out, "r", N_PARTS, resume=True, build_graph=False
+    ).collect()
+    assert len(second) == N_PARTS - 4
+    assert not {r.part_id for r in second} & {0, 1, 2, 3}
+    stored = read_manifests(spark, out).where("part_id NOT IN (0, 1, 2, 3)").collect()
+    assert sorted(second) == sorted(stored)
+    assert len({r.ts for r in second}) == 1 and len({r.wall_ms for r in second}) == 1
+
+    third = run_annotate(
+        spark, transcripts, lexicon, out, "r", N_PARTS, resume=True, build_graph=False
+    )
+    assert third.count() == 0
+    assert read_manifests(spark, out).count() == N_PARTS
+
+
+def test_manifest_append_is_one_file_in_the_store_schema(spark, lexicon, transcripts, tmp_path):
+    """Each invocation appends one manifest file, and every file carries
+    MANIFEST_SCHEMA (types and nullability): a store whose files disagree
+    on a column's type (int vs long wall_ms) can fail to read."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from biosd_feature_annotator_spark.plans.materialize import MANIFEST_SCHEMA
+
+    out = str(tmp_path / "schema")
+    run_annotate(spark, transcripts, lexicon, out, "a", 4, build_graph=False)
+    run_annotate(spark, transcripts, lexicon, out, "b", 4, build_graph=False)
+    files = glob.glob(os.path.join(out, "manifests", "*.parquet"))
+    assert len(files) == 2
+    want = StructType.fromDDL(MANIFEST_SCHEMA).jsonValue()
+    for f in files:
+        meta = pq.ParquetFile(f).metadata.metadata
+        assert json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"]) == want
+
+
 def test_resume_is_idempotent_noop(spark, lexicon, transcripts, tmp_path):
     out = str(tmp_path / "noop")
     run_annotate(spark, transcripts, lexicon, out, "r", N_PARTS, build_graph=False)

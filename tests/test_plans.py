@@ -53,6 +53,49 @@ def test_link_join_is_broadcast(spark, lexicon, tpath):
     mentions = extract_mentions(read_transcripts(spark, tpath), lexicon)
     linked = link_entities(mentions, lexicon_df(spark, lexicon))
     assert "BroadcastHashJoin" in plan_of(linked)
+    # the dictionary (right) side is the one broadcast, never the mentions
+    linked.collect()
+    assert "BuildRight" in linked._jdf.queryExecution().executedPlan().toString()
+
+
+LEXICON_DDL = (
+    "match_norm string, match_kind string, term_id string, pred string, "
+    "term_label string, conf double, confidence string"
+)
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_lexicon_df_is_a_local_relation(spark, lexicon, arrow):
+    """The link dictionary plans as a LocalRelation whether or not the
+    Arrow conf is on: reading it runs no Python-worker job, and its size
+    estimate is exact. The schema is the one the link join was built on."""
+    from pyspark.sql.types import StructType
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, arrow)
+        df = lexicon_df(spark, lexicon)
+        analyzed = df._jdf.queryExecution().analyzed()
+        assert analyzed.getClass().getSimpleName() == "LocalRelation"
+    finally:
+        spark.conf.set(key, before)
+    assert df.schema == StructType.fromDDL(LEXICON_DDL)
+
+
+@pytest.mark.parametrize("extraction", ["python", "jvm"])
+def test_annotate_plans_scan_no_python_rdd(spark, lexicon, tpath, extraction):
+    """Over a parquet source, no table annotate() returns reads a pickled
+    Python RDD: the dictionary frames of both extraction backends are
+    local relations."""
+    from biosd_feature_annotator_spark.plans.pipeline import annotate
+
+    out = annotate(spark, read_transcripts(spark, tpath), lexicon, extraction=extraction)
+    for name in ("triples", "nodes", "edges"):
+        df = out[name]
+        df.collect()  # finalize the AQE plan
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, (name, plan)
 
 
 def test_salted_agg_is_two_phase(spark):

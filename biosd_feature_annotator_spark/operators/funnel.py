@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def funnel_depths(
     events: DataFrame,
@@ -810,9 +812,7 @@ def rolling_retention(
     pres = events.select(
         F.col(key_col).alias("_u"), day
     ).dropDuplicates()
-    ks = events.sparkSession.createDataFrame(
-        [(int(k),) for k in k_days], "k long"
-    )
+    ks = local_frame(events.sparkSession, [(int(k),) for k in k_days], "k long")
     future = pres.select(
         F.col("_u").alias("_u2"), F.col("day").alias("_d2")
     )

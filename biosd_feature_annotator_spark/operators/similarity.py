@@ -8,10 +8,11 @@ Two paths, same contract (query_id, neighbor_id, cos):
   side broadcasts.
 - ``lsh_cosine_topk`` — the scale path: random-hyperplane signatures
   (sign-bit LSH). Planes are deterministic literals (seeded), the
-  signature is again pure Catalyst, candidates come from an equi-join on
-  (band, band_bits) — at 10^9 vectors this is shuffle-partitionable by
-  bucket instead of an N×Q product. Re-rank candidates with exact cosine.
-  Recall is tunable via n_planes/bands (more bands → more candidates).
+  signature is a numpy kernel (see the kernels note), candidates come
+  from an equi-join on (band, band_bits) — at 10^9 vectors this is
+  shuffle-partitionable by bucket instead of an N×Q product. Re-rank
+  candidates with exact cosine. Recall is tunable via n_planes/bands
+  (more bands → more candidates).
 
 - ``ivf_cosine_topk`` — the IVF shape: coarse assignment of every vector
   to its nearest centroid (cells), queries probe the ``n_probe`` nearest
@@ -80,23 +81,18 @@ def _lit_darray(values) -> F.Column:
 
 # --------------------------------------------------------------- kernels
 #
-# Every centroid-literal computation below has TWO kernels with
-# bit-identical output (parity-gated by tests/test_similarity_kernels.py):
-#
-# - "catalyst": centroids folded into higher-order-function expressions
-#   (aggregate/zip_with). Fully JVM-side and the form the DuckDB oracles
-#   replay — but Spark plans/codegens a tree of ~10^3 nodes per centroid
-#   table, which costs a fixed ~3-8 s of DRIVER time per query (measured:
-#   pq_encode wall is flat 3.5 s from 500 to 8,000 rows — all plan build,
-#   no per-row term visible at test scale). Fine at 100 TB (one plan,
-#   amortized), wasteful for interactive/bench use.
-# - "arrow" (default): the same math as a vectorized numpy kernel inside
-#   a pandas UDF. Summation is the IDENTICAL left-to-right fold over
-#   vector positions (numpy elementwise += in an explicit t-loop, no
-#   BLAS/pairwise reordering, no FMA), casts are the same float32→double
-#   widenings, and ties break by the same rule — so doubles and code
-#   assignments are bit-equal to the catalyst kernel and the SQL oracles
-#   stay hash-exact. Plan cost: one PythonUDF node.
+# PQ codes, PQ distance tables, IVF cells and LSH signatures score one
+# embedding column against literal centroids or planes; each runs as one
+# vectorized numpy pandas UDF. The alternative, a Catalyst HOF tree over
+# the same literals, gave bit-identical output and was slower at every
+# site in an interleaved A/B (BENCH/similarity_one_kernel/, sf0.1, 4-core
+# VM, median wall over 9 reps: PQ codes +0.77 s and PQ tables +0.47 s per
+# query, LSH +0.14 s, IVF cells +0.04 to +0.12 s), mostly as driver-side
+# plan build and codegen. The kernels sum in the same left-to-right order
+# over vector positions as the SQL does (an explicit t-loop: no
+# BLAS/pairwise reordering, no FMA), widen float32 to double the same way
+# and break ties by the same rule, so the DuckDB oracles, which are the
+# correctness reference, stay hash-exact.
 
 
 def _np_rows(series):
@@ -105,14 +101,27 @@ def _np_rows(series):
     return np.stack([np.asarray(v, dtype=np.float64) for v in series])
 
 
-def _arrow_pq_codes(codebooks):
-    """pandas_udf: embedding → m nearest-centroid codes (PQ encode)."""
+def _dots(x, mat, off: int = 0):
+    """rows of x (from position off) · rows of mat, each dot summed left
+    to right over the positions — the order the SQL oracles add in."""
+    import numpy as np
+
+    acc = np.zeros((x.shape[0], mat.shape[0]))
+    for t in range(mat.shape[1]):
+        acc += x[:, off + t, None] * mat[None, :, t]
+    return acc
+
+
+def _pq_codes(vec_col, codebooks) -> F.Column:
+    """embedding → m nearest-centroid codes (PQ encode): argmin_c of
+    |c|² − 2·x·c per subspace (the |x|² term is constant per row and
+    cancels from the argmin); ties take the lowest code."""
     import numpy as np
 
     sub = len(codebooks[0][0])
     cbs = [np.array([[float(x) for x in c] for c in cb]) for cb in codebooks]
     # centroid self-norms accumulated in PYTHON sum order — the same
-    # scalar the catalyst kernel folds in as F.lit(sum(x*x for x in c))
+    # scalar the SQL oracles embed as a literal
     nrm = [np.array([sum(x * x for x in c) for c in cb]) for cb in codebooks]
 
     @F.pandas_udf("array<int>")
@@ -122,21 +131,16 @@ def _arrow_pq_codes(codebooks):
         x = _np_rows(s)
         out = np.empty((x.shape[0], len(cbs)), dtype=np.int32)
         for j, (cb, cn) in enumerate(zip(cbs, nrm)):
-            acc = np.zeros((x.shape[0], cb.shape[0]))
-            off = j * sub
-            for t in range(sub):  # explicit left fold — order is the contract
-                acc += x[:, off + t, None] * cb[None, :, t]
-            d = cn[None, :] - 2.0 * acc
+            d = cn[None, :] - 2.0 * _dots(x, cb, j * sub)
             out[:, j] = np.argmin(d, axis=1)  # first min == lowest code
         return pd.Series(list(out))
 
-    return codes
+    return codes(vec_col)
 
 
-def _arrow_pq_dtab(codebooks):
-    """pandas_udf: embedding → flattened m×k_cents ADC distance table
-    (true |q_j − c|² per subspace centroid, same (x−c)² left fold as the
-    catalyst form)."""
+def _pq_dtab(vec_col, codebooks) -> F.Column:
+    """embedding → flattened m×k_cents ADC distance table: the true
+    |q_j − c|² per subspace centroid, as a (x−c)² left fold."""
     import numpy as np
 
     sub = len(codebooks[0][0])
@@ -157,54 +161,44 @@ def _arrow_pq_dtab(codebooks):
             parts.append(acc)
         return pd.Series(list(np.concatenate(parts, axis=1)))
 
-    return dtab
+    return dtab(vec_col)
 
 
-def _arrow_ivf_cells(centroids, n_probe: int):
-    """pandas_udf: embedding → ids of the n_probe nearest cells, ordered
-    by descending cosine-proxy sim with the catalyst kernel's exact
-    tie-break (reverse(array_sort) on (sim, cell) structs ⇒ ties take
-    the HIGHER cell first)."""
+def ivf_assign(vec_col, centroids: list[list[float]], n_probe: int = 1) -> F.Column:
+    """Cell ids of the n_probe nearest centroids, nearest first, by cosine
+    against the norm-free dot product (centroids are compared to the SAME
+    vector, so the vector's own norm cancels; centroid norms are literal
+    scalars). Ties take the HIGHER cell first, the order the DuckDB
+    oracles replay."""
     import math
 
     import numpy as np
 
     cmat = np.array([[float(x) for x in c] for c in centroids])
     cn = np.array([math.sqrt(sum(x * x for x in c)) for c in centroids])
-    k = cmat.shape[0]
-    neg_ids = -np.arange(k)
+    neg_ids = -np.arange(cmat.shape[0])
 
     @F.pandas_udf("array<int>")
     def cells(s: pd.Series) -> pd.Series:
         if len(s) == 0:
             return pd.Series([], dtype=object)
-        x = _np_rows(s)
-        acc = np.zeros((x.shape[0], k))
-        for t in range(cmat.shape[1]):
-            acc += x[:, t, None] * cmat[None, :, t]
-        sim = acc / cn[None, :]
+        sim = _dots(_np_rows(s), cmat) / cn[None, :]
         out = []
         for row in sim:
             order = np.lexsort((neg_ids, -row))  # sim desc, cell desc on ties
             out.append(order[:n_probe].astype(np.int32))
         return pd.Series(out)
 
-    return cells
-
-
-def _cells_col(vec_col, cents, n_probe: int, kernel: str) -> F.Column:
-    if kernel == "catalyst":
-        return ivf_assign(vec_col, cents, n_probe)
-    return _arrow_ivf_cells(cents, n_probe)(vec_col)
+    return cells(vec_col)
 
 
 def cosine(a, b) -> F.Column:
     """Cosine similarity of two array columns, as the oracle-replayable
-    HOF fold. Single kernel, unlike the PQ/IVF math (see the kernels
-    note): on the candidate-scoring paths (two data-dependent vector
-    columns per row, not one column against literal centroids) an Arrow
-    twin's round trip of both embeddings cost more than the fold saves
-    (measured r6: 7-13 s vs 2.5-2.8 s for emb_ann_topk at sf1.0)."""
+    HOF fold. A HOF fold rather than a numpy kernel like the
+    centroid-literal math (see the kernels note): on the candidate-scoring
+    paths (two data-dependent vector columns per row) an Arrow twin's
+    round trip of both embeddings cost more than the fold saves (measured
+    r6: 7-13 s vs 2.5-2.8 s for emb_ann_topk at sf1.0)."""
     dot = F.aggregate(
         F.zip_with(_vecd(a), _vecd(b), lambda x, y: x * y),
         F.lit(0.0),
@@ -284,10 +278,10 @@ def _planes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
     return planes
 
 
-def _arrow_lsh_sig(planes):
-    """pandas_udf: embedding → packed sign-bit signature. Same
-    left-fold dots and >= 0 threshold as the catalyst kernel — the
-    packed long is integer-exact, so parity is bit-for-bit."""
+def lsh_signature(vec_col, planes: list[list[float]]) -> F.Column:
+    """Sign-bit signature as a long (n_planes ≤ 63 bits): bit b is set
+    iff the left-fold dot with plane b is >= 0. The packed long is
+    integer-exact."""
     import numpy as np
 
     pmat = np.array([[float(x) for x in p] for p in planes])
@@ -296,40 +290,17 @@ def _arrow_lsh_sig(planes):
     def sig(s: pd.Series) -> pd.Series:
         if len(s) == 0:
             return pd.Series([], dtype="int64")
-        x = _np_rows(s)
-        acc = np.zeros((x.shape[0], pmat.shape[0]))
-        for t in range(pmat.shape[1]):
-            acc += x[:, t, None] * pmat[None, :, t]
-        bits = (acc >= 0).astype(np.int64)
+        bits = (_dots(_np_rows(s), pmat) >= 0).astype(np.int64)
         weights = (1 << np.arange(pmat.shape[0], dtype=np.int64))
         return pd.Series(bits @ weights)
 
-    return sig
-
-
-def lsh_signature(vec_col, planes: list[list[float]], kernel: str = "arrow") -> F.Column:
-    """Sign-bit signature as a long (n_planes ≤ 63 bits). Dual kernel
-    like the PQ/IVF math (see the kernels note): catalyst is the
-    oracle-replayable HOF form, arrow the plan-cheap numpy twin."""
-    if kernel != "catalyst":
-        return _arrow_lsh_sig(planes)(vec_col)
-    sig = F.lit(0).cast("long")
-    v = _vecd(vec_col)
-    for b, plane in enumerate(planes):
-        lits = _lit_darray(plane)
-        dot = F.aggregate(
-            F.zip_with(v, lits, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        )
-        bit = F.when(dot >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig.bitwiseXOR(F.shiftleft(bit, b))
-    return sig
+    return sig(vec_col)
 
 
 def lsh_cosine_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
     id_q: str = "vec_id", id_c: str = "vec_id", vec: str = "embedding",
     n_planes: int = 16, bands: int = 4, dim: int | None = None, seed: int = 7,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """ANN top-k: candidates share ≥1 LSH band, re-ranked by exact cosine.
 
@@ -360,7 +331,7 @@ def lsh_cosine_topk(
         # instead of vector payloads) lost 2.2x on the same clustered
         # corpus — near vectors collide in most of their bands, so the
         # pre-dedup fold count multiplies by the collision factor.
-        sig = lsh_signature(F.col(vec), planes, kernel=kernel)
+        sig = lsh_signature(F.col(vec), planes)
         base = df.select(
             F.col(idc).alias(alias_id), F.col(vec).alias(keep_vec), sig.alias("sig")
         )
@@ -391,36 +362,11 @@ def lsh_cosine_topk(
     )
 
 
-def _dot_lit(vec_col, point: list[float]) -> F.Column:
-    return F.aggregate(
-        F.zip_with(_vecd(vec_col), _lit_darray(point), lambda x, y: x * y),
-        F.lit(0.0), lambda a, x: a + x,
-    )
-
-
-def ivf_assign(vec_col, centroids: list[list[float]], n_probe: int = 1) -> F.Column:
-    """Cell ids of the n_probe nearest centroids (by cosine against the
-    shared-norm-free dot product — centroids are compared to the SAME
-    vector, so the vector's own norm cancels; centroid norms are folded in
-    as literals). Pure Catalyst, deterministic."""
-    import math
-
-    scored = F.array(*[
-        F.struct(
-            (_dot_lit(vec_col, c) / math.sqrt(sum(x * x for x in c))).alias("sim"),
-            F.lit(i).alias("cell"),
-        )
-        for i, c in enumerate(centroids)
-    ])
-    best = F.slice(F.reverse(F.array_sort(scored)), 1, n_probe)
-    return F.transform(best, lambda s: s["cell"])
-
-
 def ivf_cosine_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
     id_q: str = "vec_id", id_c: str = "vec_id", vec: str = "embedding",
     n_cells: int = 8, n_probe: int = 2, dim: int = 64, seed: int = 11,
-    centroids: list[list[float]] | None = None, kernel: str = "arrow",
+    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN: corpus vectors live in their single nearest cell, queries
     probe their n_probe nearest cells, exact cosine re-rank inside the
@@ -434,12 +380,12 @@ def ivf_cosine_topk(
     c = corpus.select(
         F.col(id_c).alias("neighbor_id"), F.col(vec).alias("cv"),
         _norm(F.col(vec)).alias("cn"),
-        F.element_at(_cells_col(F.col(vec), cents, 1, kernel), 1).alias("cell"),
+        F.element_at(ivf_assign(F.col(vec), cents, 1), 1).alias("cell"),
     )
     q = queries.select(
         F.col(id_q).alias("query_id"), F.col(vec).alias("qv"),
         _norm(F.col(vec)).alias("qn"),
-        F.explode(_cells_col(F.col(vec), cents, n_probe, kernel)).alias("cell"),
+        F.explode(ivf_assign(F.col(vec), cents, n_probe)).alias("cell"),
     )
     cand = q.join(c, "cell").where(F.col("query_id") != F.col("neighbor_id"))
     scored = cand.select(
@@ -477,13 +423,13 @@ def cosine_pairs_above(
 def semantic_dedup(
     df: DataFrame, threshold: float, id_col: str = "vec_id",
     vec: str = "embedding", n_cells: int = 8, dim: int = 64, seed: int = 11,
-    centroids: list[list[float]] | None = None, kernel: str = "arrow",
+    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: every vector is assigned to
-    its nearest coarse cell (ivf_assign — pure Catalyst, centroids folded
-    as literals), and a row is dropped iff a LOWER-id row in the SAME
-    cell has cosine ≥ threshold with it (keep-lowest-id representative,
-    the same canonical-survivor rule the exact/MinHash dedups use).
+    its nearest coarse cell (ivf_assign), and a row is dropped iff a
+    LOWER-id row in the SAME cell has cosine ≥ threshold with it
+    (keep-lowest-id representative, the same canonical-survivor rule the
+    exact/MinHash dedups use).
 
     Returns (id, cell, kept) for EVERY input row — a flagged frame, so
     the caller chooses `where(kept)` for the survivors or inspects the
@@ -502,7 +448,7 @@ def semantic_dedup(
         F.col(id_col).alias("id"),
         F.col(vec).alias("v"),
         _norm(F.col(vec)).alias("n"),
-        F.element_at(_cells_col(F.col(vec), cents, 1, kernel), 1).alias("cell"),
+        F.element_at(ivf_assign(F.col(vec), cents, 1), 1).alias("cell"),
     )
     a = base.select("cell", F.col("id").alias("a"), F.col("v").alias("va"),
                     F.col("n").alias("na"))
@@ -523,27 +469,22 @@ def semantic_dedup(
 
 def train_ivf_centroids(
     df: DataFrame, n_cells: int = 8, dim: int = 64, rounds: int = 3,
-    vec: str = "embedding", seed: int = 11, kernel: str = "arrow",
+    vec: str = "embedding", seed: int = 11,
 ) -> list[list[float]]:
     """Spherical k-means for IVF centroids, expressed as DataFrame algebra
     (Lloyd rounds): assign every vector to its nearest centroid
-    (ivf_assign — pure Catalyst), then recompute each centroid as the
-    per-dimension mean via posexplode → groupBy(cell, pos) → avg. Each
-    round is one aggregation job; the only driver-side transfer is the
-    n_cells×dim centroid table itself (metadata-sized, like the manifest
-    collects). Empty cells keep their previous centroid. Seeded from the
+    (ivf_assign), then recompute each centroid as the per-dimension mean
+    via posexplode → groupBy(cell, pos) → avg. Each round is one
+    aggregation job; the only driver-side transfer is the n_cells×dim
+    centroid table itself (metadata-sized, like the manifest collects). Empty cells keep their previous centroid. Seeded from the
     same deterministic md5 points the untrained path uses, so
     rounds=0 ≡ the untrained centroids and the swap is drop-in."""
     cents = _planes(n_cells, dim, seed)
     for _ in range(rounds):
-        # two selects: mixing the generator (posexplode) with the
-        # struct-array cell expression in ONE projection trips an analyzer
-        # quirk that drops the struct field names (FIELD_NOT_FOUND)
-        cells = df.select(
-            F.element_at(_cells_col(F.col(vec), cents, 1, kernel), 1).alias("cell"),
-            _vecd(F.col(vec)).alias("_v"),
+        assigned = df.select(
+            F.element_at(ivf_assign(F.col(vec), cents, 1), 1).alias("cell"),
+            F.posexplode(_vecd(F.col(vec))).alias("pos", "x"),
         )
-        assigned = cells.select("cell", F.posexplode("_v").alias("pos", "x"))
         rows = (
             assigned.groupBy("cell", "pos").agg(F.avg("x").alias("m"))
             .collect()
@@ -708,74 +649,23 @@ def pq_seed_codebooks(
     return [_planes(k, sub, seed + j) for j in range(m)]
 
 
-def _pq_assign(subvec, cents: list[list[float]]) -> F.Column:
-    """argmin_c |x − c|² over centroid literals, computed as
-    |c|² − 2·x·c (the |x|² term is constant per row and cancels from the
-    argmin). Deterministic tie-break: lowest code wins (array_sort on
-    (d, code) structs)."""
-    scored = F.array(*[
-        F.struct(
-            (
-                F.lit(sum(x * x for x in c)) - 2.0 * _dot_lit(subvec, c)
-            ).alias("d"),
-            F.lit(i).alias("code"),
-        )
-        for i, c in enumerate(cents)
-    ])
-    return F.element_at(F.array_sort(scored), 1)["code"]
-
-
-def _pq_codes_col(vec_col, codebooks, kernel: str) -> F.Column:
-    if kernel == "catalyst":
-        sub = len(codebooks[0][0])
-        return F.array(*[
-            _pq_assign(
-                F.slice(_vecd(vec_col), j * sub + 1, sub), cb
-            ).cast("int")
-            for j, cb in enumerate(codebooks)
-        ])
-    return _arrow_pq_codes(codebooks)(vec_col)
-
-
 def pq_encode(
     df: DataFrame, codebooks: list[list[list[float]]],
-    id_col: str = "vec_id", vec: str = "embedding", kernel: str = "arrow",
+    id_col: str = "vec_id", vec: str = "embedding",
 ) -> DataFrame:
     """(id, codes array<int>) — m nearest-centroid codes per vector,
     zero shuffle: encoding composes into the corpus scan as a
-    projection. kernel="arrow" (default, vectorized numpy) and
-    kernel="catalyst" (centroid literals in HOF expressions, the
-    oracle-replayable reference) are bit-identical — see the kernels
-    note at the top of this module."""
+    projection."""
     return df.select(
         F.col(id_col).alias("id"),
-        _pq_codes_col(F.col(vec), codebooks, kernel).alias("codes"),
+        _pq_codes(F.col(vec), codebooks).alias("codes"),
     )
-
-
-def _pq_dtab_col(vec_col, codebooks, kernel: str) -> F.Column:
-    m, sub = len(codebooks), len(codebooks[0][0])
-    if kernel == "catalyst":
-        return F.array(*[
-            F.aggregate(
-                F.zip_with(
-                    F.slice(_vecd(vec_col), j * sub + 1, sub),
-                    _lit_darray(c),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            for j in range(m)
-            for c in codebooks[j]
-        ])
-    return _arrow_pq_dtab(codebooks)(vec_col)
 
 
 def pq_adc_topk(
     queries: DataFrame, corpus: DataFrame, codebooks: list[list[list[float]]],
     k: int = 3, id_q: str = "vec_id", id_c: str = "vec_id",
-    vec: str = "embedding", kernel: str = "arrow",
+    vec: str = "embedding",
 ) -> DataFrame:
     """ADC top-k: each query precomputes its m×k_cents distance table
     (true |q_j − c|² per subspace centroid — one row-local array), the
@@ -784,17 +674,15 @@ def pq_adc_topk(
     code arrays, never 256-byte vectors. The fold order (j = 0..m−1,
     left to right) is part of the contract: the DuckDB twin adds the same
     four doubles in the same order, making even the unrounded ranking
-    comparable. kernel= selects the encode/dtab implementation
-    (bit-identical pair — see the kernels note)."""
+    comparable."""
     m = len(codebooks)
     kc = len(codebooks[0])
-    codes = pq_encode(corpus, codebooks, id_col=id_c, vec=vec,
-                      kernel=kernel).select(
+    codes = pq_encode(corpus, codebooks, id_col=id_c, vec=vec).select(
         F.col("id").alias("neighbor_id"), "codes"
     )
     q = queries.select(
         F.col(id_q).alias("query_id"),
-        _pq_dtab_col(F.col(vec), codebooks, kernel).alias("dtab"),
+        _pq_dtab(F.col(vec), codebooks).alias("dtab"),
     )
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -824,7 +712,6 @@ def ivfpq_adc_topk(
     k: int = 3, n_cells: int = 8, n_probe: int = 2, dim: int = 64,
     seed: int = 11, centroids: list[list[float]] | None = None,
     id_q: str = "vec_id", id_c: str = "vec_id", vec: str = "embedding",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """IVF-PQ: the two memory-scale pieces composed the FAISS way —
     coarse cells bound WHICH candidates are scored (equi-join on cell,
@@ -844,13 +731,13 @@ def ivfpq_adc_topk(
     cents = centroids if centroids is not None else _planes(n_cells, dim, seed)
     c = corpus.select(
         F.col(id_c).alias("neighbor_id"),
-        F.element_at(_cells_col(F.col(vec), cents, 1, kernel), 1).alias("cell"),
-        _pq_codes_col(F.col(vec), codebooks, kernel).alias("codes"),
+        F.element_at(ivf_assign(F.col(vec), cents, 1), 1).alias("cell"),
+        _pq_codes(F.col(vec), codebooks).alias("codes"),
     )
     q = queries.select(
         F.col(id_q).alias("query_id"),
-        _pq_dtab_col(F.col(vec), codebooks, kernel).alias("dtab"),
-        F.explode(_cells_col(F.col(vec), cents, n_probe, kernel)).alias("cell"),
+        _pq_dtab(F.col(vec), codebooks).alias("dtab"),
+        F.explode(ivf_assign(F.col(vec), cents, n_probe)).alias("cell"),
     )
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
@@ -890,7 +777,7 @@ def train_pq_codebooks(
         )
         for _ in range(rounds):
             assigned = sv.select(
-                _pq_assign(F.col("_v"), cents).alias("cell"), "_v"
+                F.element_at(_pq_codes(F.col("_v"), [cents]), 1).alias("cell"), "_v"
             )
             rows = (
                 assigned.select("cell", F.posexplode("_v").alias("pos", "x"))
@@ -912,11 +799,14 @@ def pq_reconstruction_mse(
     """Mean squared reconstruction error of the PQ code (per-subspace
     nearest centroid substituted for the true subvector) — the quality
     metric a codebook training pass must reduce. Report-time metric."""
-    m, sub = len(codebooks), len(codebooks[0][0])
+    sub = len(codebooks[0][0])
+    coded = df.select(
+        _vecd(F.col(vec)).alias("_v"), _pq_codes(F.col(vec), codebooks).alias("_c")
+    )
     err = None
     for j, cb in enumerate(codebooks):
-        subv = F.slice(_vecd(F.col(vec)), j * sub + 1, sub)
-        code = _pq_assign(subv, cb)
+        subv = F.slice(F.col("_v"), j * sub + 1, sub)
+        code = F.element_at(F.col("_c"), j + 1)
         cent_lit = F.array(*[_lit_darray(c) for c in cb])
         e = F.aggregate(
             F.zip_with(
@@ -926,7 +816,7 @@ def pq_reconstruction_mse(
             F.lit(0.0), lambda a, v: a + v,
         )
         err = e if err is None else err + e
-    row = df.agg(F.avg(err).alias("mse")).collect()[0]
+    row = coded.agg(F.avg(err).alias("mse")).collect()[0]
     return float(row["mse"])
 
 

@@ -42,7 +42,9 @@ def annotate(
     extraction: str = "python",
 ) -> dict[str, DataFrame]:
     """Assemble the full plan; returns lazy DataFrames keyed by table name:
-    mentions, triples, and (if build_graph) nodes + edges.
+    mentions, extracted (the linked term triples plus the value triples,
+    before the structural ones are unioned in), triples, and (if
+    build_graph) nodes + edges.
 
     cache_mentions: the mention frame feeds two union branches (term vs
     value triples) and canonicalization — without a persist Spark would
@@ -117,7 +119,9 @@ def annotate(
         )
     triples = extracted.unionByName(structural_triples(src)).select(*TRIPLE_COLS)
 
-    out: dict[str, DataFrame] = {"mentions": mentions, "triples": triples}
+    out: dict[str, DataFrame] = {
+        "mentions": mentions, "extracted": extracted, "triples": triples,
+    }
     if build_graph:
         # functional dictionary → the linking graph is a star forest
         # (every surface has exactly one term edge and term ids sort below

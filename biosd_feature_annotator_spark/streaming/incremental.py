@@ -19,9 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import dirswap
-from ..operators.extract import extract_mentions
-from ..operators.link import best_link, link_entities, term_triples_from_linked, value_triples
-from ..sources.lexicon import Lexicon, lexicon_df
+from ..plans.pipeline import annotate
+from ..sources.lexicon import Lexicon
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -43,28 +42,23 @@ def annotate_stream(
     checkpoint: str,
     available_now: bool = True,
 ):
-    """T1+T5: the full batch pipeline per micro-batch via foreachBatch —
-    the standard way to lift plans containing ranking windows (best_link's
-    row_number is not streamable) onto a stream. Progress tracking is the
-    streaming checkpoint (file-source offsets), so each file is processed
-    exactly once across restarts; the parquet append itself is
-    at-least-once on crash mid-batch — on a cluster the sink would be an
-    Iceberg transactional append. Returns the StreamingQuery."""
-    lex_df = lexicon_df(spark, lex)
-    # plans/pipeline.annotate's linking rule: a functional dictionary needs
-    # no ranking window or dedup shuffle; a multi-candidate one takes the
-    # ranked best-link path plus the triple-identity dedup
-    ranked = not lex.is_functional()
+    """T1+T5: each micro-batch goes through plans/pipeline.annotate via
+    foreachBatch (the standard way to lift plans containing ranking
+    windows onto a stream: best_link's row_number is not streamable), so
+    the stream links exactly like the batch path. It writes the
+    ``extracted`` triples only: term and value triples, no structural
+    (saidBy/usesTool) ones, no conv_id repartition, no mention cache and
+    no graph. Progress tracking is the streaming checkpoint (file-source
+    offsets), so each file is processed exactly once across restarts; the
+    parquet append itself is at-least-once on crash mid-batch — on a
+    cluster the sink would be an Iceberg transactional append. Returns
+    the StreamingQuery."""
 
     def process_batch(batch_df, batch_id: int) -> None:
-        mentions = extract_mentions(batch_df, lex)
-        linked = link_entities(mentions, lex_df)
-        if ranked:
-            linked = best_link(linked)
-        triples = term_triples_from_linked(linked).unionByName(value_triples(mentions))
-        if ranked:
-            triples = triples.dropDuplicates(["subj", "pred", "obj"])
-        triples.write.mode("append").parquet(out_path)
+        annotate(
+            spark, batch_df, lex, repartition=0, build_graph=False,
+            cache_mentions=False,
+        )["extracted"].write.mode("append").parquet(out_path)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

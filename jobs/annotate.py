@@ -115,10 +115,11 @@ def main() -> None:
         build_graph=not args.no_graph,
         extraction=args.extraction,
     )
-    # this invocation's parts only: a resume of a finished run reports 0
-    n_turns, n_triples = (
-        v or 0 for v in manifest.groupBy().sum("n_rows", "n_triples").collect()[0]
-    )
+    # this invocation's parts only: a resume of a finished run reports 0.
+    # The rows are a local frame already on the driver: sum them here.
+    parts = manifest.select("n_rows", "n_triples").collect()
+    n_turns = sum(r.n_rows for r in parts)
+    n_triples = sum(r.n_triples for r in parts)
     wall = time.time() - t0
     if prewarm_thread is not None:
         # don't let session teardown race the daemon thread's in-flight

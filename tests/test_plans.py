@@ -98,6 +98,17 @@ def test_annotate_plans_scan_no_python_rdd(spark, lexicon, tpath, extraction):
         assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, (name, plan)
 
 
+def test_retention_offsets_scan_no_python_rdd(spark):
+    """rolling_retention's k-days frame is a local relation, so the
+    events_retention query reads no pickled Python RDD."""
+    import __spark_entry__ as entrymod
+
+    df = entrymod.q_events_retention(spark, SF)
+    df.collect()  # finalize the AQE plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+
+
 def test_salted_agg_is_two_phase(spark):
     import __spark_entry__ as e
 

@@ -265,7 +265,7 @@ def test_semantic_dedup_matches_inline_cosine_formulation(spark):
     cents = s._planes(8, 64, 11)
     base = e.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("v"),
-        F.element_at(s._cells_col(F.col("embedding"), cents, 1, "arrow"), 1)
+        F.element_at(s.ivf_assign(F.col("embedding"), cents, 1), 1)
         .alias("cell"),
     )
     a = base.select("cell", F.col("id").alias("a"), F.col("v").alias("va"))

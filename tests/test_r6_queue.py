@@ -2,7 +2,11 @@
 query runs against its DuckDB oracle with the same comparison the
 driver applies (row count, column set, order-insensitive value
 multiset), so registering one (moving its SQL from R6_QUEUE_ORACLES
-into oracle_sql()) carries zero new risk."""
+into oracle_sql()) carries zero new risk.
+
+The registered similarity queries get the same check here: their
+centroid and plane kernels are numpy UDFs, and the DuckDB twins are the
+reference those kernels must match bit for bit."""
 
 from __future__ import annotations
 
@@ -39,8 +43,25 @@ def duck():
     [(n, getattr(entrymod, f"q_{n}")) for n in entrymod.R6_QUEUE_ORACLES],
 )
 def test_r6_queue_query_matches_oracle(spark, duck, name, fn):
+    _assert_matches_oracle(spark, duck, fn, entrymod.R6_QUEUE_ORACLES[name])
+
+
+SIMILARITY_QUERIES = (
+    "emb_pq_topk", "emb_ivf_topk", "emb_ann_topk", "emb_ivfpq_topk",
+    "semantic_dedup_docs",
+)
+
+
+@pytest.mark.parametrize("name", SIMILARITY_QUERIES)
+def test_similarity_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(
+        spark, duck, getattr(entrymod, f"q_{name}"), entrymod.oracle_sql()[name]
+    )
+
+
+def _assert_matches_oracle(spark, duck, fn, sql):
     spd = fn(spark, SF).toPandas()
-    opd = duck.sql(entrymod.R6_QUEUE_ORACLES[name]).df()
+    opd = duck.sql(sql).df()
     assert len(spd) > 0
     assert len(spd) == len(opd)
     assert sorted(map(str.lower, spd.columns)) == sorted(map(str.lower, opd.columns))

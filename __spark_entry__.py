@@ -709,8 +709,7 @@ def q_doc_quality_linear(spark, sf):
     (integer counts, one correctly-rounded division each), weights folded
     as literals, logit summed LEFT-TO-RIGHT — a pure projection that
     composes into the scan. The frozen QUALITY_PRIOR weights are the
-    oracle-checkable configuration; train_logistic_weights is the
-    deterministic drop-in swap (exact long gradient sums)."""
+    oracle-checkable configuration."""
     from biosd_feature_annotator_spark.operators.training import (
         linear_quality_score,
     )
@@ -1094,7 +1093,7 @@ def q_phonetic_strings(spark, sf):
 
 def q_zorder_events(spark, sf):
     """Morton keys for the z-order layout (plans/zorder.zvalue): the
-    clustering key zorder_layout range-partitions on, as a checkable
+    clustering key a z-order layout range-partitions on, as a checkable
     projection — flat codegen bit interleave of (user_id, floor(value))
     clamped to 16 bits. The oracle re-derives every key as an exact
     disjoint-bit integer sum over generate_series(0, 15)."""

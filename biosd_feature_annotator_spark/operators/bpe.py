@@ -126,13 +126,6 @@ def bpe_tokens(text_col, merges: list[tuple[str, str]]) -> Column:
     )
 
 
-def bpe_token_count(text_col, merges: list[tuple[str, str]]) -> Column:
-    """Token count under the trained merge table; 0 for blank/NULL."""
-    return F.coalesce(F.size(bpe_tokens(text_col, merges)), F.lit(0)).cast(
-        "long"
-    )
-
-
 def train_bpe_merges(
     docs: DataFrame,
     n_merges: int = 32,

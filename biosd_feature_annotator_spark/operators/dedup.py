@@ -57,26 +57,6 @@ def hash64(col, seed: int | None = None, hasher: str = "xx") -> F.Column:
 
 # ------------------------------------------------------------------ exact
 
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Groups of byte-identical (normalized) docs: (text_hash, keep_id,
-    dup_ids, n_dups). keep_id = min id (deterministic survivor)."""
-    norm = norm_text_col(F.col(text_col))
-    return (
-        df.select(
-            F.col(id_col).alias("doc"),
-            F.xxhash64(norm).alias("text_hash"),
-            F.md5(norm).alias("text_md5"),
-        )
-        .groupBy("text_hash", "text_md5")
-        .agg(
-            F.min("doc").alias("keep_id"),
-            F.count("*").alias("group_size"),
-            F.sort_array(F.collect_list("doc")).alias("members"),
-        )
-        .where(F.col("group_size") > 1)
-    )
-
-
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Survivor rows only — deterministic min-id per normalized text.
 

@@ -118,38 +118,6 @@ def funnel_depths(
     )
 
 
-def funnel_conversion(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    order_col: str = "event_id",
-) -> DataFrame:
-    """Funnel summary: users reaching each depth and conversion vs the
-    previous step. One extra tiny aggregation over funnel_depths —
-    the grouped frame is at most len(steps)+1 rows."""
-    d = funnel_depths(events, steps, user_col, ts_col, type_col, order_col)
-    k = len(steps)
-    counts = d.groupBy("depth").agg(F.count("*").alias("n_at_depth"))
-    # users reaching depth >= i, for i = 1..K (depth table is tiny: K+1
-    # rows — the range join below is a broadcast over a literal frame)
-    levels = d.sparkSession.range(1, k + 1).withColumnRenamed("id", "step")
-    reached = (
-        levels.join(counts, counts.depth >= levels.step)
-        .groupBy("step")
-        .agg(F.sum("n_at_depth").cast("long").alias("users_reached"))
-    )
-    w_prev = F.lag("users_reached").over(Window.orderBy("step"))
-    return reached.select(
-        "step",
-        "users_reached",
-        F.round(
-            F.col("users_reached") / F.coalesce(w_prev, F.col("users_reached")), 4
-        ).alias("conversion_from_prev"),
-    )
-
-
 def retention_cohorts(
     events: DataFrame,
     user_col: str = "user_id",

@@ -13,8 +13,7 @@ frontier joins, the standard distributed BFS shape:
 - at cluster scale the edge list is the big side (hash-partitioned by
   src), while the frontier is usually small → Spark broadcasts it
   automatically under the join threshold, making each hop a map-side
-  join; `checkpoint_hops=True` cuts lineage per hop for large k (same
-  rationale as connected_components' seed checkpoints).
+  join.
 """
 
 from __future__ import annotations
@@ -25,7 +24,7 @@ from pyspark.sql import functions as F
 
 def khop(
     edges: DataFrame, seeds: DataFrame, k: int,
-    directed: bool = False, checkpoint_hops: bool = False,
+    directed: bool = False,
 ) -> DataFrame:
     """edges(src, dst) + seeds(node) → (node, hop) for every node within
     k hops of any seed; hop = minimum distance (seeds are hop 0).
@@ -47,8 +46,6 @@ def khop(
             .join(reached.select("node"), "node", "left_anti")
             .withColumn("hop", F.lit(i).cast("long"))
         )
-        if checkpoint_hops:
-            nxt = nxt.localCheckpoint(eager=True)
         reached = reached.unionByName(nxt)
         frontier = nxt.select("node")
     return reached
@@ -56,7 +53,6 @@ def khop(
 
 def pagerank(
     edges: DataFrame, n_nodes: int, iters: int = 3, damping: float = 0.85,
-    checkpoint_iters: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over edges(src, dst) → (node, pr):
     pr_{k+1}(v) = (1-d)/N + d · Σ_{u→v} pr_k(u)/outdeg(u), seeded 1/N.
@@ -69,7 +65,7 @@ def pagerank(
     avoiding a per-iteration global aggregate; documented, and replicated
     exactly by the SQL oracle). Each iteration is one join + one
     partial-aggregated shuffle keyed by dst — the same per-round profile
-    as CC; checkpoint_iters cuts lineage for large iteration counts.
+    as CC.
 
     n_nodes is passed in rather than counted here, keeping plan
     construction action-free (the caller either knows |V| from its
@@ -93,8 +89,6 @@ def pagerank(
         pr = nodes.join(contrib, "node", "left").select(
             "node", (base + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))).alias("pr")
         )
-        if checkpoint_iters:
-            pr = pr.localCheckpoint(eager=True)
     return pr
 
 
@@ -155,7 +149,6 @@ def triangle_counts(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
 def label_propagation(
     edges: DataFrame, iters: int = 3,
     a: str = "src", b: str = "dst", directed: bool = False,
-    checkpoint_iters: bool = False,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over
     edges(a, b) → (node, label). Labels seed as the node's own id; each
@@ -204,8 +197,6 @@ def label_propagation(
         labels = labels.join(best, "node", "left").select(
             "node", F.coalesce("new_label", "label").alias("label")
         )
-        if checkpoint_iters:
-            labels = labels.localCheckpoint(eager=True)
     return labels
 
 
@@ -283,7 +274,7 @@ def neighborhood_similarity(
 
 def k_core(
     edges: DataFrame, k: int, iters: int = 8,
-    a: str = "src", b: str = "dst", checkpoint_iters: bool = False,
+    a: str = "src", b: str = "dst",
 ) -> DataFrame:
     """k-core decomposition by fixed-round peeling over an undirected
     edge list → (node, deg): the nodes surviving `iters` rounds of
@@ -311,7 +302,7 @@ def k_core(
     becomes the bottleneck (measured: iters=8 on a 5-edge fixture never
     finishes planning). The window round costs two node-keyed shuffles
     of the edge list (vs agg+semi's three) and keeps plan growth
-    LINEAR in iters. checkpoint_iters cuts lineage for deep peels."""
+    LINEAR in iters."""
     from pyspark.sql import Window
 
     e0 = edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
@@ -335,8 +326,6 @@ def k_core(
             .where((F.col("deg_s") >= kk) & (F.col("deg_d") >= kk))
             .select("src", "dst")
         )
-        if checkpoint_iters:
-            live = live.localCheckpoint(eager=True)
     return (
         live.groupBy(F.col("src").alias("node"))
         .agg(F.count("*").alias("deg"))
@@ -895,9 +884,7 @@ def modularity(
     )
 
 
-def transitive_closure(
-    edges: DataFrame, max_depth: int, checkpoint_rounds: bool | None = None,
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, max_depth: int) -> DataFrame:
     """Bounded transitive closure of edges(src, dst) → (src, dst, depth)
     for every pair reachable in 1..max_depth hops, depth = MINIMUM hop
     count. The ontology-ancestor primitive: annotate a turn with
@@ -914,17 +901,16 @@ def transitive_closure(
     equi-join keyed by the frontier's dst plus one anti-join; the delta
     shrinks as the closure saturates, so total work is proportional to
     |closure|·avg_outdeg, not |V|²; cycles terminate naturally because
-    a revisited pair generates no new delta row. checkpoint_rounds cuts
-    lineage for deep hierarchies (same rationale as khop/pagerank);
-    `closure` is referenced twice per round (anti-join + union), so the
-    un-cut plan tree DOUBLES per round. Default None is depth-adaptive
-    (r6, closing the r5 ADVICE item): measured at sf0.1, no-checkpoint
-    wins at depth 3 (1.2 s vs 1.6 s — per-round job overhead) but loses
-    exponentially past the crossover (depth 6: 13.6 s vs 4.0 s;
-    depth 8: 45.7 s vs 3.7 s), so depths > 4 checkpoint automatically.
+    a revisited pair generates no new delta row. Deep hierarchies get a
+    per-round lineage cut: `closure` is referenced twice per round
+    (anti-join + union), so the un-cut plan tree DOUBLES per round.
+    The cut is depth-adaptive (r6, closing the r5 ADVICE item):
+    measured at sf0.1, no-checkpoint wins at depth 3 (1.2 s vs 1.6 s —
+    per-round job overhead) but loses exponentially past the crossover
+    (depth 6: 13.6 s vs 4.0 s; depth 8: 45.7 s vs 3.7 s), so depths > 4
+    checkpoint every round.
     """
-    if checkpoint_rounds is None:
-        checkpoint_rounds = max_depth > 4
+    checkpoint_rounds = max_depth > 4
     base = (
         edges.select("src", "dst").dropDuplicates()
         .withColumn("depth", F.lit(1).cast("long"))
@@ -1030,7 +1016,7 @@ def rule_confidence(
 
 def landmark_distances(
     edges: DataFrame, landmarks: DataFrame, max_dist: int,
-    directed: bool = False, checkpoint_rounds: bool | None = None,
+    directed: bool = False,
 ) -> DataFrame:
     """Multi-source labeled BFS: edges(src, dst) + landmarks(node) →
     (node, landmark, dist) for every node within max_dist hops of each
@@ -1046,13 +1032,12 @@ def landmark_distances(
     per-round join — one edge-list pass per round total, not per
     landmark. The anti-join on (landmark, node) enforces min-dist and
     keeps each round's join input proportional to the new frontier.
-    checkpoint_rounds default None is depth-adaptive like
+    The per-round lineage cut is depth-adaptive like
     transitive_closure (r6): measured no-checkpoint wins at the
     dist-3 fixture (2.1 s vs 2.7 s warm at sf0.1) but the frontier
-    chain re-executes per round without cuts, so deeper sweeps
-    checkpoint automatically."""
-    if checkpoint_rounds is None:
-        checkpoint_rounds = max_dist > 4
+    chain re-executes per round without cuts, so sweeps deeper than 4
+    checkpoint every round."""
+    checkpoint_rounds = max_dist > 4
     sym = edges.select("src", "dst")
     if not directed:
         sym = sym.unionByName(
@@ -1089,7 +1074,6 @@ def weighted_sssp(
     seeds: DataFrame,
     rounds: int,
     weight_col: str = "w",
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
     """Bounded Bellman-Ford: edges(src, dst, w — non-negative integer
     weights) + seeds(node) → (node, dist) where dist is the minimum
@@ -1110,14 +1094,14 @@ def weighted_sssp(
     `rounds` ≥ the hop diameter gives the exact fixpoint. Fixed round
     count ⇒ action-free loop (the pagerank/CC discipline).
 
-    checkpoint_rounds defaults TRUE here, unlike the single-frame
-    loops: the label update dist ← dist ▷ improved ∪ improved
+    Every round is checkpointed, unlike the single-frame loops: the
+    label update dist ← dist ▷ improved ∪ improved
     references dist TWICE, so without a per-round lineage cut the plan
     tree doubles every round (Catalyst plans are trees — no common
     subtree sharing) and round R recomputes the whole relaxation 2^R
     times. The eager checkpoints materialize one merged nodes-sized
     frame per round; measured at sf0.1 they turn a 12 s 3-round run
-    into sub-second rounds. Only disable for rounds ≤ 2 micro-graphs.
+    into sub-second rounds.
 
     r6: the frontier is carried as a _new flag INSIDE the checkpointed
     frame — previously `improved` hung off the PREVIOUS round's
@@ -1160,16 +1144,13 @@ def weighted_sssp(
             .withColumn("_new", F.lit(False))
             .unionByName(improved.withColumn("_new", F.lit(True)))
         )
-        if checkpoint_rounds:
-            merged = merged.localCheckpoint(eager=True)
+        merged = merged.localCheckpoint(eager=True)
         dist = merged.select("node", "dist")
         improved = merged.where(F.col("_new")).select("node", "dist")
     return dist
 
 
-def dag_layers(
-    edges: DataFrame, rounds: int, checkpoint_rounds: bool = True
-) -> DataFrame:
+def dag_layers(edges: DataFrame, rounds: int) -> DataFrame:
     """Topological layering of a DAG: (node, layer) where layer is the
     length of the LONGEST path reaching the node from any source
     (in-degree-0) node — the processing-order assignment for
@@ -1187,8 +1168,8 @@ def dag_layers(
     cycle detection is the caller's contract (check_constraints /
     closure-based audits).
 
-    checkpoint_rounds defaults TRUE for the same reason as
-    weighted_sssp: the layer ← layer ▷ improved ∪ improved update
+    Every round is checkpointed for the same reason as weighted_sssp:
+    the layer ← layer ▷ improved ∪ improved update
     references layer twice, doubling the plan tree per round (no
     common-subtree sharing in Catalyst) — measured 50 s → sub-second
     rounds at sf0.1 with the per-round eager cuts. r6: the frontier is
@@ -1228,8 +1209,7 @@ def dag_layers(
             .withColumn("_new", F.lit(False))
             .unionByName(improved.withColumn("_new", F.lit(True)))
         )
-        if checkpoint_rounds:
-            merged = merged.localCheckpoint(eager=True)
+        merged = merged.localCheckpoint(eager=True)
         layer = merged.select("node", "layer")
         improved = merged.where(F.col("_new")).select("node", "layer")
     return layer

@@ -209,21 +209,6 @@ def extract_features(
     )
 
 
-def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame
-    index (posexplode of the frame-index sequence) — the shuffle-free
-    fan-out a real frame extractor plugs into."""
-    vids = media.where((F.col("kind") == "video") & (F.col("meta.n_frames") > 0))
-    idx = F.sequence(
-        F.lit(0), F.col("meta.n_frames") - 1, F.lit(every_n)
-    )
-    return vids.select(
-        "media_id",
-        "payload",
-        F.explode(idx).alias("frame_idx"),
-    )
-
-
 # ------------------------------------------------------------------
 # Real-format deterministic fixtures + the decode-stats operator. The
 # encoders are the generative SPEC the DuckDB oracle re-derives from

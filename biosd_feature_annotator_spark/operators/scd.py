@@ -1,26 +1,16 @@
 """Slowly-changing-dimension (type 2) operators.
 
-Two halves of the warehouse primitive:
+``scd2_history`` collapses an append-only change stream (one row per
+observation) into versioned dimension rows — consecutive duplicates
+merge, each surviving row carries ``effective_from`` /
+``effective_to`` / ``is_current``. Pure window
+algebra: one shuffle keyed by the dimension key; the two window passes
+(change detection, then interval close-out) share the same
+partitioning+ordering so Spark plans a single sort.
 
-- ``scd2_history``: collapse an append-only change stream (one row per
-  observation) into versioned dimension rows — consecutive duplicates
-  merge, each surviving row carries ``effective_from`` /
-  ``effective_to`` / ``is_current``. Pure window algebra: one shuffle
-  keyed by the dimension key; the two window passes (change detection,
-  then interval close-out) share the same partitioning+ordering so
-  Spark plans a single sort.
-
-- ``scd2_apply``: MERGE-INTO emulation — apply a batch of updates to an
-  existing type-2 dimension: close out current rows whose tracked
-  attributes changed, insert new versions, leave everything else
-  untouched. One equi-join on the key (broadcast when the update batch
-  is small — the common case: daily updates vs a huge dimension) plus a
-  union; no full rewrite of history partitions is required when the
-  sink partitions by ``is_current``.
-
-At 100 TB the dimension key is the shuffle key in both; skew only
-matters if one key has millions of *versions*, which violates the SCD2
-model itself.
+At 100 TB the dimension key is the shuffle key; skew only matters if
+one key has millions of *versions*, which violates the SCD2 model
+itself.
 """
 
 from __future__ import annotations
@@ -62,70 +52,6 @@ def scd2_history(
         F.col(ts_col).alias("effective_from"),
         F.lead(ts_col).over(w2).alias("effective_to"),
         F.lead(ts_col).over(w2).isNull().alias("is_current"),
-    )
-
-
-def scd2_apply(
-    dim: DataFrame,
-    updates: DataFrame,
-    key_cols: list[str],
-    tracked_cols: list[str],
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Apply one update batch to a type-2 dimension.
-
-    ``dim`` must carry ``tracked_cols`` plus ``effective_from``,
-    ``effective_to``, ``is_current``; ``updates`` carries ``key_cols``,
-    ``tracked_cols`` and ``ts_col`` (one row per key — dedupe upstream
-    if a batch can contain several). Returns the new dimension:
-
-    - historical (non-current) rows pass through untouched;
-    - current rows with a changed update are closed out
-      (``effective_to`` = update ts, ``is_current`` = false);
-    - changed and brand-new keys gain an open version.
-    """
-    upd = updates.select(
-        *[F.col(c).alias(f"_u_{c}") for c in key_cols + tracked_cols],
-        F.col(ts_col).alias("_u_ts"),
-    )
-    cond = [F.col(k) == F.col(f"_u_{k}") for k in key_cols]
-    cur = dim.where("is_current")
-    joined = cur.join(upd, cond, "full_outer")
-
-    diff = F.lit(False)
-    for c in tracked_cols:
-        diff = diff | ~F.col(c).eqNullSafe(F.col(f"_u_{c}"))
-    matched = F.col(key_cols[0]).isNotNull() & F.col(f"_u_{key_cols[0]}").isNotNull()
-
-    dim_cols = [c for c in dim.columns]
-    # current rows: unchanged pass through; changed are closed out
-    kept_open = joined.where(matched & ~diff).select(*dim_cols)
-    closed = joined.where(matched & diff).select(
-        *[F.col(c) for c in dim_cols if c not in ("effective_to", "is_current")],
-        F.col("_u_ts").alias("effective_to"),
-        F.lit(False).alias("is_current"),
-    ).select(*dim_cols)
-    unmatched_current = joined.where(
-        F.col(f"_u_{key_cols[0]}").isNull()
-    ).select(*dim_cols)
-
-    # new open versions: changed keys + brand-new keys
-    inserts = joined.where(
-        (matched & diff) | F.col(key_cols[0]).isNull()
-    ).select(
-        *[F.col(f"_u_{k}").alias(k) for k in key_cols],
-        *[F.col(f"_u_{c}").alias(c) for c in tracked_cols],
-        F.col("_u_ts").alias("effective_from"),
-        F.lit(None).cast(dim.schema["effective_to"].dataType).alias("effective_to"),
-        F.lit(True).alias("is_current"),
-    ).select(*dim_cols)
-
-    history = dim.where(~F.col("is_current"))
-    return (
-        history.unionByName(unmatched_current)
-        .unionByName(kept_open)
-        .unionByName(closed)
-        .unionByName(inserts)
     )
 
 
@@ -178,7 +104,7 @@ def interval_conflicts(
     """Per-row overlap counts over validity intervals → every input
     column plus ``n_overlaps`` (how many OTHER same-key intervals this
     row overlaps) and ``is_conflict``. The SCD2 invariant gate:
-    scd2_history/scd2_apply guarantee tiling intervals, so any conflict
+    scd2_history guarantees tiling intervals, so any conflict
     in a dimension someone hand-edited (or merged from two sources) is
     corruption this detects BEFORE point-in-time joins silently fan out.
 
@@ -489,7 +415,7 @@ def apply_cdc_log(
     seq_cols: list[str] | None = None,
 ) -> DataFrame:
     """Apply a change-data-capture operation log to a snapshot — the
-    Hudi/Delta-style upsert-delete materializer (scd2_apply keeps
+    Hudi/Delta-style upsert-delete materializer (scd2_history keeps
     HISTORY; this produces the current-state table a CDC mirror
     maintains). `ops` carries key_cols, value_cols, op_col ∈
     {'I','U','D'} (insert and update are both upserts — the usual CDC

@@ -212,11 +212,9 @@ def cosine(a, b) -> F.Column:
 def cosine_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
     id_q: str = "vec_id", id_c: str = "vec_id", vec: str = "embedding",
-    broadcast_corpus: bool = False,
 ) -> DataFrame:
-    """Brute-force top-k. Broadcast the smaller side: with
-    broadcast_corpus the join is a broadcast nested loop (no shuffle of
-    queries); otherwise queries broadcast."""
+    """Brute-force top-k: the query set is broadcast against the
+    corpus (a broadcast nested loop; the corpus is never shuffled)."""
     q = queries.select(
         F.col(id_q).alias("query_id"), F.col(vec).alias("qv"),
         _norm(F.col(vec)).alias("qn"),
@@ -225,8 +223,7 @@ def cosine_topk(
         F.col(id_c).alias("neighbor_id"), F.col(vec).alias("cv"),
         _norm(F.col(vec)).alias("cn"),
     )
-    joined = q.join(F.broadcast(c), how="cross") if broadcast_corpus else F.broadcast(q).crossJoin(c)
-    scored = joined.where(F.col("query_id") != F.col("neighbor_id")).select(
+    scored = F.broadcast(q).crossJoin(c).where(F.col("query_id") != F.col("neighbor_id")).select(
         "query_id", "neighbor_id", _cos_pre("qv", "cv", "qn", "cn").alias("cos")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))

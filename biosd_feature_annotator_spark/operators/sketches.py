@@ -1,7 +1,6 @@
 """Mergeable sketch states: grid quantiles, HLL distinct counts
 (DataSketches AND an engine-portable md5 variant whose estimate a SQL
-oracle replays bit-for-bit), SpaceSaving heavy hitters, CountMin
-frequencies, KMV bottom-k (the set-INTERSECTION-capable member, with
+oracle replays bit-for-bit), CountMin frequencies, KMV bottom-k (the set-INTERSECTION-capable member, with
 all-pairs Jaccard powering sketch-based schema matching), plus
 quantile-cut feature binning and trailing-window rolling uniques.
 
@@ -141,137 +140,12 @@ def hll_state(df: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
     """(keys…, sk binary) mergeable distinct-count state via Spark's
     Apache DataSketches HLL (hll_sketch_agg) — the cardinality member
     of the mergeable-state family (counts: agg_state_merge, quantiles:
-    grid_quantile_state, heavy hitters: spacesaving_state). Register
-    merge is a per-index max, so union order and partitioning cannot
-    change the estimate."""
+    grid_quantile_state). Register merge is a per-index max
+    (hll_union_agg), so union order and partitioning cannot change the
+    estimate."""
     return df.groupBy(*key_cols).agg(
         F.hll_sketch_agg(value_col).alias("sk")
     )
-
-
-def merge_hll_states(*states: DataFrame) -> DataFrame:
-    return _merge_states(states, {"sk": F.hll_union_agg("sk")})
-
-
-def hll_estimates(state: DataFrame, key_cols: list[str]) -> DataFrame:
-    return state.select(
-        *key_cols, F.hll_sketch_estimate("sk").alias("n_distinct_est")
-    )
-
-
-# ------------------------------------------------------ heavy hitters
-
-def spacesaving_state(
-    df: DataFrame, value_col: str, k: int = 64,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """Per-partition SpaceSaving heavy-hitter summaries (Metwally et
-    al.; merge semantics per Agarwal et al., "Mergeable Summaries") —
-    the frequent-items member of the mergeable-state family, per-key
-    like its siblings (one k-counter summary per key group per
-    partition). Each summary keeps at most k counters via min-eviction
-    (evictee's count becomes the newcomer's overestimate bound, tracked
-    in `err`); output rows are (keys…, item, cnt, err) per partition,
-    merged by plain sums.
-
-    The Python loop runs per DISTINCT (key, item) per Arrow batch, not
-    per row: each batch is pre-aggregated with pandas value_counts and
-    applied as WEIGHTED SpaceSaving updates (the published weighted
-    variant — same bounds: on eviction the newcomer inherits the
-    evictee's count as its err floor and adds its own weight), so a
-    billion-row partition with a million distinct items costs ~1e6
-    dict operations per batch, not 1e9.
-
-    This is the documented mapInPandas exception (a per-partition
-    algorithm Catalyst cannot express): state lives across the
-    partition's Arrow batches, output is k rows per partition — sketch-
-    sized, not data-sized. Guarantees after summing partials (standard
-    SpaceSaving bounds, stated precisely): each surviving counter
-    satisfies local_true ≤ cnt_p ≤ local_true + err_p, so a merged row
-    satisfies cnt ≤ true + err; an item ABSENT from some partitions'
-    summaries loses their local mass (< n_p/k each), so cnt can
-    undercount by at most N/k per missing partition; and every item
-    with true frequency > N/k exceeds n_p/k in at least one partition
-    (pigeonhole) and therefore survives its summary — a true heavy
-    hitter is never missing from the merge. The SUMMARY CONTENT depends on the
-    partition layout (which ties evict first) — inherent to the sketch
-    family and why this op is guarantee-tested (inclusion + bounds),
-    not value-oracled like the deterministic operators."""
-    import pandas as pd
-
-    keys = list(key_cols or [])
-    key_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.select(*keys).schema.fields
-    )
-    out_schema = (key_fields + ", " if key_fields else "") + \
-        "item string, cnt long, err long"
-    src = df.select(*keys, F.col(value_col).cast("string").alias("v"))
-
-    def summarize(batches):
-        counts: dict[tuple, dict[str, int]] = {}
-        errs: dict[tuple, dict[str, int]] = {}
-        for pdf in batches:
-            pdf = pdf.dropna(subset=["v"])
-            grouped = pdf.groupby(keys + ["v"], sort=False, dropna=False).size() \
-                if keys else pdf["v"].value_counts(sort=False)
-            for idx, c in grouped.items():
-                if keys:
-                    kt, v = tuple(idx[:-1]), idx[-1]
-                else:
-                    kt, v = (), idx
-                c = int(c)
-                cs = counts.setdefault(kt, {})
-                es = errs.setdefault(kt, {})
-                if v in cs:
-                    cs[v] += c
-                elif len(cs) < k:
-                    cs[v], es[v] = c, 0
-                else:
-                    evict = min(cs, key=lambda key: (cs[key], key))
-                    floor_ = cs.pop(evict)
-                    es.pop(evict)
-                    cs[v], es[v] = floor_ + c, floor_
-        for kt, cs in counts.items():
-            es = errs[kt]
-            yield pd.DataFrame({
-                **{kc: [kv] * len(cs) for kc, kv in zip(keys, kt)},
-                "item": list(cs),
-                "cnt": [cs[i] for i in cs],
-                "err": [es[i] for i in cs],
-            })
-
-    return src.mapInPandas(summarize, out_schema)
-
-
-def merge_spacesaving_states(*states: DataFrame) -> DataFrame:
-    """Sum partial counters per (keys…, item). cnt ≤ true + err for
-    every merged row; items can be undercounted only by mass lost in
-    partitions whose summary dropped them (< n_p/k each)."""
-    return _merge_states(states, {"cnt": F.sum("cnt"), "err": F.sum("err")})
-
-
-def heavy_hitters(
-    df: DataFrame, value_col: str, k: int = 64, top: int = 10,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """End-to-end: per-partition summaries → merge → top-`top` by the
-    upper-bound count (per key group when key_cols given), with
-    (item asc) as the deterministic tie-break of the REPORT (the
-    summary itself is partition-dependent; the guarantee tests pin
-    what must always hold)."""
-    merged = merge_spacesaving_states(
-        spacesaving_state(df, value_col, k, key_cols)
-    )
-    if key_cols:
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.desc("cnt"), F.asc("item")
-        )
-        return (
-            merged.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= top).drop("rn")
-        )
-    return merged.orderBy(F.desc("cnt"), F.asc("item")).limit(top)
 
 
 # ------------------------------------------------------------ CountMin
@@ -297,16 +171,15 @@ def cms_state(
     """(keys…, r, c, cnt) CountMin state (Cormode & Muthukrishnan): a
     depth×width counter grid per key group; each input row adds its
     weight (default 1) to one counter per hash row. The point-frequency
-    member of the mergeable-state family — unlike SpaceSaving it never
-    UNDER-counts (every occurrence lands in the grid), at the price of
+    member of the mergeable-state family — it never UNDER-counts
+    (every occurrence lands in the grid), at the price of
     collision overestimates bounded by e·N/width with probability
     1 − e^−depth (the classic bound).
 
     Scale shape: one explode (×depth) + one map-side-combinable count
     shuffle; the state is ≤ keys × depth × width rows REGARDLESS of
     input size, and fully deterministic (pure function of the value
-    multiset — unlike the partition-dependent SpaceSaving summary, so
-    this one IS value-oracled). Merge = union + groupBy-sum, exact:
+    multiset, so it IS value-oracled). Merge = union + groupBy-sum, exact:
     grid(A ∪ B) = grid(A) + grid(B) cell-for-cell."""
     keys = list(key_cols or [])
     w = (F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long"))
@@ -508,7 +381,7 @@ def portable_hll_state(
 
     Mergeable by construction: merge = groupBy(keys, register)
     max(rho), associative and order-free — the same contract as the
-    grid/CMS/spacesaving family, so incremental maintenance and
+    grid/CMS family, so incremental maintenance and
     cross-partition union cost a registers-sized shuffle (≤ 2^p rows
     per key), never a rescan."""
     m = 1 << p

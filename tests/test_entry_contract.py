@@ -4,6 +4,9 @@ expensive CORRECTNESS_r{N}.json failures later."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import os
 import re
 
 import __spark_entry__ as entrymod
@@ -163,6 +166,69 @@ def test_each_query_is_declared_once():
     assert not registered & queued
     assert all(callable(getattr(entrymod, f"q_{n}", None))
                for n in registered | queued)
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "biosd_feature_annotator_spark")
+# Pure-Python references the tests check the Spark kernels against.
+TEST_REFERENCE_IMPLS = {"py_bpe_tokens"}
+
+
+def _product_sources():
+    """The top-level modules (entry, bench), the package, jobs/, tools/
+    and perfbench/ — every .py file there outside a tests/ directory."""
+    paths = glob.glob(os.path.join(REPO, "*.py"))
+    for top in ("biosd_feature_annotator_spark", "jobs", "tools", "perfbench"):
+        for dirpath, dirnames, filenames in os.walk(os.path.join(REPO, top)):
+            dirnames[:] = [d for d in dirnames if d != "tests"]
+            paths += [os.path.join(dirpath, f) for f in filenames if f.endswith(".py")]
+    return paths
+
+
+def _used_names(node):
+    """Identifiers a subtree uses, including those of a string constant
+    that is a whole Python script (tools run worker programs that way)."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and "import " in n.value:
+            try:
+                yield from _used_names(ast.parse(n.value))
+            except SyntaxError:
+                pass
+
+
+def test_every_public_package_definition_has_a_non_test_caller():
+    """No code without a caller: every public top-level function or class
+    of the package is used by non-test code. A use inside another package
+    definition counts only if that definition is used in turn, so a chain
+    whose only entry point is a test fails whole. A re-export from a
+    subpackage ``__init__`` counts as a use."""
+    public, inner, used = set(), {}, set()
+    for path in _product_sources():
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        for stmt in tree.body:
+            if path.startswith(PKG + os.sep) and isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                inner.setdefault(stmt.name, set()).update(_used_names(stmt))
+                if not stmt.name.startswith("_"):
+                    public.add(stmt.name)
+            else:
+                used.update(_used_names(stmt))
+    todo = list(used & inner.keys())
+    while todo:
+        for name in inner[todo.pop()] - used:
+            used.add(name)
+            if name in inner:
+                todo.append(name)
+    orphans = public - used - TEST_REFERENCE_IMPLS
+    assert not orphans, f"package definitions only tests call: {sorted(orphans)}"
 
 
 # list(queries()) under the committed CORRECTNESS_r01-r06 files:

@@ -1,24 +1,19 @@
-"""Funnel, SCD2 and bucketed-join tests.
+"""Funnel and SCD2 tests.
 
 Funnel semantics are pinned against a tiny hand-computed fixture plus a
 brute-force python reference on the sf0.001 events table; SCD2 against
 hand fixtures and an invariant audit (intervals tile, one current row
-per key); the bucketed join against the physical plan (no Exchange)."""
+per key)."""
 
 from __future__ import annotations
 
-import contextlib
-import io
 from datetime import datetime
 
 import pytest
 from pyspark.sql import Row, functions as F
 
-from biosd_feature_annotator_spark.operators.funnel import (
-    funnel_conversion,
-    funnel_depths,
-)
-from biosd_feature_annotator_spark.operators.scd import scd2_apply, scd2_history
+from biosd_feature_annotator_spark.operators.funnel import funnel_depths
+from biosd_feature_annotator_spark.operators.scd import scd2_history
 
 
 def _ts(s):
@@ -86,15 +81,6 @@ def test_funnel_greedy_equals_min_chaining_reference(spark):
         assert got[u] == depth, f"user {u}: spark {got[u]} != ref {depth}"
 
 
-def test_funnel_conversion_monotone(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    rows = funnel_conversion(ev, STEPS).orderBy("step").collect()
-    assert [r.step for r in rows] == [1, 2, 3]
-    reached = [r.users_reached for r in rows]
-    assert reached == sorted(reached, reverse=True)
-    assert all(0 <= r.conversion_from_prev <= 1 for r in rows)
-
-
 def test_scd2_history_collapses_and_tiles(spark):
     obs = spark.createDataFrame([
         Row(k="a", v=1, ts=_ts("2024-01-01T00:00:00"), i=0),
@@ -112,116 +98,6 @@ def test_scd2_history_collapses_and_tiles(spark):
         assert prev.effective_to == nxt.effective_from
     assert a[-1].is_current and a[-1].effective_to is None
     assert sum(r.is_current for r in rows) == 2  # exactly one per key
-
-
-def test_scd2_apply_merge_semantics(spark):
-    dim = scd2_history(
-        spark.createDataFrame([
-            Row(k="a", v=1, ts=_ts("2024-01-01T00:00:00"), i=0),
-            Row(k="a", v=2, ts=_ts("2024-01-05T00:00:00"), i=1),
-            Row(k="b", v=7, ts=_ts("2024-01-01T00:00:00"), i=2),
-        ]),
-        ["k"], "v", "ts", "i",
-    )
-    updates = spark.createDataFrame([
-        Row(k="a", v=3, ts=_ts("2024-02-01T00:00:00")),   # changed: close + insert
-        Row(k="b", v=7, ts=_ts("2024-02-01T00:00:00")),   # unchanged: no-op
-        Row(k="c", v=5, ts=_ts("2024-02-01T00:00:00")),   # brand-new key
-    ])
-    out = scd2_apply(dim, updates, ["k"], ["v"], "ts")
-    rows = sorted(out.collect(), key=lambda r: (r.k, r.effective_from))
-    by_key = {}
-    for r in rows:
-        by_key.setdefault(r.k, []).append(r)
-    assert [r.v for r in by_key["a"]] == [1, 2, 3]
-    assert by_key["a"][1].effective_to == _ts("2024-02-01T00:00:00")
-    assert not by_key["a"][1].is_current and by_key["a"][2].is_current
-    assert len(by_key["b"]) == 1 and by_key["b"][0].is_current  # untouched
-    assert len(by_key["c"]) == 1 and by_key["c"][0].is_current
-    # invariant: exactly one current row per key, intervals still tile
-    for k, vs in by_key.items():
-        assert sum(r.is_current for r in vs) == 1
-        for prev, nxt in zip(vs, vs[1:]):
-            assert prev.effective_to == nxt.effective_from
-
-
-def _plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from biosd_feature_annotator_spark.plans.bucketing import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    n = 8
-    left = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") % 97).alias("x")
-    )
-    right = spark.range(0, 10_000).select(
-        F.col("id").alias("k"), (F.col("id") % 31).alias("y")
-    )
-    write_bucketed(left.repartition(n, "k"), "t_bleft", "k", n,
-                   path=str(tmp_path / "bl"))
-    write_bucketed(right.repartition(n, "k"), "t_bright", "k", n,
-                   path=str(tmp_path / "br"))
-    try:
-        with _forced_smj(spark):
-            joined = read_bucketed(spark, "t_bleft").join(
-                read_bucketed(spark, "t_bright"), "k"
-            )
-            plan = _plan_of(joined)
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan  # co-located: zero shuffle
-            assert joined.count() == 10_000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bleft")
-        spark.sql("DROP TABLE IF EXISTS t_bright")
-
-
-@contextlib.contextmanager
-def _forced_smj(spark):
-    """Force the sort-merge path (broadcast would hide the exchange
-    question entirely) without leaking config to other tests."""
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-
-def test_bucketed_triples_aggregate_without_exchange(spark, tmp_path):
-    """Pipeline-level bucketing proof: materialize the flagship's triple
-    output as a subj-bucketed table and the follow-up entity-stats
-    aggregation (groupBy subj) plans with ZERO Exchange — the scan's
-    HashPartitioning(subj) feeds the aggregate directly. This is the
-    SURVEY sink spec's bucket(subj) layout paying off on the engine's
-    own output, not just on synthetic join inputs."""
-    import __spark_entry__ as e
-    from biosd_feature_annotator_spark.plans.bucketing import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    triples = e.entry(spark).select("subj", "pred", "obj", "confidence")
-    write_bucketed(triples.repartition(8, "subj"), "t_triples_b", "subj", 8,
-                   path=str(tmp_path / "tb"))
-    try:
-        stats = (
-            read_bucketed(spark, "t_triples_b")
-            .groupBy("subj")
-            .agg(F.count("*").alias("n"), F.max("confidence").alias("max_conf"))
-        )
-        plan = _plan_of(stats)
-        assert "Exchange" not in plan, plan
-        assert stats.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_triples_b")
 
 
 def test_fuzzy_pairs_semantics_and_block_cap(spark):

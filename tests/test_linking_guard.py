@@ -140,12 +140,13 @@ def test_nonfunctional_lexicon_never_emits_duplicates(spark):
 
 def test_ranked_w1_picks_min_term_id_on_conf_tie(spark):
     """Tokens-only context ('beta ... blocker' split apart): both terms are
-    MEDIUM 0.7 candidates; W1 must keep exactly one, tie-broken on term_id."""
+    MEDIUM 0.7 candidates; W1 must keep exactly one, tie-broken on term_id.
+    The ranked path is reached by annotate()'s automatic upgrade for a
+    non-functional dictionary."""
     lex = _multi_candidate_lexicon()
+    assert not lex.is_functional()
     tr = _transcripts(spark, ["beta therapy blocker administered"])
-    triples = annotate(
-        spark, tr, lex, build_graph=False, cache_mentions=False, ranked_linking=True
-    )["triples"]
+    triples = annotate(spark, tr, lex, build_graph=False, cache_mentions=False)["triples"]
     rows = triples.where("pred = 'hasDrug'").collect()
     assert len(rows) == 1
     assert rows[0].obj == "T_A" and rows[0].confidence == "MEDIUM"

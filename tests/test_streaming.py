@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from biosd_feature_annotator_spark.streaming.incremental import (
     annotate_stream,
     read_transcript_stream,
-    windowed_mention_rates,
 )
 from biosd_feature_annotator_spark.synth import synth_transcripts
 
@@ -28,7 +27,7 @@ def test_incremental_annotate(spark, lexicon, stream_dirs):
     stream = read_transcript_stream(spark, stream_dirs["in"])
     assert stream.isStreaming
     q = annotate_stream(
-        spark, stream, lexicon, stream_dirs["out"], stream_dirs["ck"], available_now=True
+        spark, stream, lexicon, stream_dirs["out"], stream_dirs["ck"]
     )
     q.awaitTermination(120)
     first = spark.read.parquet(stream_dirs["out"]).count()
@@ -44,7 +43,6 @@ def test_incremental_annotate(spark, lexicon, stream_dirs):
         lexicon,
         stream_dirs["out"],
         stream_dirs["ck"],
-        available_now=True,
     )
     q2.awaitTermination(120)
     second = spark.read.parquet(stream_dirs["out"]).count()
@@ -57,27 +55,9 @@ def test_incremental_annotate(spark, lexicon, stream_dirs):
         lexicon,
         stream_dirs["out"],
         stream_dirs["ck"],
-        available_now=True,
     )
     q3.awaitTermination(120)
     assert spark.read.parquet(stream_dirs["out"]).count() == second
-
-
-def test_windowed_rates(spark, stream_dirs, tmp_path):
-    stream = read_transcript_stream(spark, stream_dirs["in"])
-    rates = windowed_mention_rates(stream, "10 minutes")
-    q = (
-        rates.writeStream.format("memory")
-        .queryName("rates_tbl")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from rates_tbl").collect()
-    assert len(rows) > 0
-    assert all(r.n_turns > 0 and r.w_end > r.w_start for r in rows)
 
 
 def test_stream_event_window_counts_matches_batch(spark, tmp_path):
@@ -317,114 +297,38 @@ def test_stream_stream_join_across_micro_batches(spark, tmp_path):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
-def test_stream_funnel_matches_batch_multi_batch(spark, tmp_path):
-    """Streaming funnel state machine across a REAL 3-micro-batch
-    availableNow run equals the batch funnel fold row for row (the
-    events table is ts-sorted, so row-range file splits are time
-    splits — the operator's documented ordering contract)."""
-    from biosd_feature_annotator_spark.operators.funnel import funnel_depths
-    from biosd_feature_annotator_spark.streaming.incremental import (
-        stream_funnel_depths,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = stream_funnel_depths(
-        spark, f"{sf}/events.parquet", str(tmp_path / "out"),
-        str(tmp_path / "ck"), n_input_files=3, max_files_per_trigger=1,
-    )
-    batch_ids = {
-        r.batch_id
-        for r in spark.read.parquet(str(tmp_path / "out"))
-        .select("batch_id").distinct().collect()
-    }
-    assert len(batch_ids) >= 3, batch_ids
-    want = funnel_depths(
-        spark.read.parquet(f"{sf}/events.parquet"),
-        ["signup", "view", "purchase"],
-    )
-    g = sorted(map(tuple, got.collect()))
-    w = sorted(map(tuple, want.collect()))
-    assert g == w
-
-
-def test_stream_quantile_sketch_matches_batch_and_is_restart_safe(spark, tmp_path):
-    """The incrementally-merged sketch state after a REAL 3-micro-batch
-    run is row-identical to the batch state over the full input (merge
-    exactness end-to-end), and a RESTART against the same checkpoint
-    (fresh=False, no new files) replays nothing and leaves the state
-    untouched — the atomic rename + _applied marker plus the source's
-    file tracking make the maintenance loop idempotent."""
-    import json
-    import os
-
-    from biosd_feature_annotator_spark.operators.sketches import (
-        grid_quantile_state,
-    )
-    from biosd_feature_annotator_spark.streaming.incremental import (
-        stream_quantile_sketch,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    out, ck = str(tmp_path / "state"), str(tmp_path / "ck")
-    got = stream_quantile_sketch(
-        spark, f"{sf}/events.parquet", out, ck,
-        lo=0.0, hi=1000.0, n_buckets=1000, n_files=3,
-    )
-    want = grid_quantile_state(
-        spark.read.parquet(f"{sf}/events.parquet").where(F.col("value").isNotNull()),
-        ["event_type"], "value", 0.0, 1000.0, 1000,
-    )
-    g = sorted(map(tuple, got.collect()))
-    assert g == sorted(map(tuple, want.collect())) and len(g) > 0
-
-    with open(os.path.join(out, "_applied")) as fh:
-        applied = json.load(fh)["batch_id"]
-    assert applied >= 2  # three micro-batches really ran
-
-    again = stream_quantile_sketch(
-        spark, f"{sf}/events.parquet", out, ck,
-        lo=0.0, hi=1000.0, n_buckets=1000, fresh=False,
-    )
-    assert sorted(map(tuple, again.collect())) == g
-    with open(os.path.join(out, "_applied")) as fh:
-        assert json.load(fh)["batch_id"] == applied  # nothing re-applied
-
-
-def test_stream_quantile_sketch_recovers_interrupted_swap(spark, tmp_path):
-    """Simulate the two crash windows of the state swap: (a) crash
-    between `out → .bak` and `tmp → out` (state exists only as .bak) —
-    a restart must roll it back; (b) crash after commit but before .bak
-    cleanup (both exist) — a restart must keep the NEW state and drop
-    the stale .bak."""
+def test_stream_cms_counts_recovers_interrupted_swap(spark, tmp_path):
+    """Simulate the two crash windows of the state swap in
+    _fold_state_stream's commit: (a) crash between `out → .bak` and
+    `tmp → out` (state exists only as .bak) — a restart must roll it
+    back; (b) crash after commit but before .bak cleanup (both exist) —
+    a restart must keep the NEW state and drop the stale .bak."""
     import os
     import shutil
 
     from biosd_feature_annotator_spark.streaming.incremental import (
-        stream_quantile_sketch,
+        stream_cms_counts,
     )
 
     sf = "/root/testdata/sf0.001"
     out, ck = str(tmp_path / "state"), str(tmp_path / "ck")
-    got = stream_quantile_sketch(
-        spark, f"{sf}/events.parquet", out, ck,
-        lo=0.0, hi=1000.0, n_buckets=1000, n_files=2,
+    got = stream_cms_counts(
+        spark, f"{sf}/events.parquet", out, ck, depth=4, width=64, n_files=2,
     )
     g = sorted(map(tuple, got.collect()))
 
     # (a) mid-swap crash: only .bak exists
     os.rename(out, out + ".bak")
-    again = stream_quantile_sketch(
-        spark, f"{sf}/events.parquet", out, ck, fresh=False,
-        lo=0.0, hi=1000.0, n_buckets=1000,
+    again = stream_cms_counts(
+        spark, f"{sf}/events.parquet", out, ck, depth=4, width=64, fresh=False,
     )
     assert sorted(map(tuple, again.collect())) == g
     assert not os.path.isdir(out + ".bak")
 
     # (b) post-commit crash: stale .bak next to the committed state
     shutil.copytree(out, out + ".bak")
-    again2 = stream_quantile_sketch(
-        spark, f"{sf}/events.parquet", out, ck, fresh=False,
-        lo=0.0, hi=1000.0, n_buckets=1000,
+    again2 = stream_cms_counts(
+        spark, f"{sf}/events.parquet", out, ck, depth=4, width=64, fresh=False,
     )
     assert sorted(map(tuple, again2.collect())) == g
     assert not os.path.isdir(out + ".bak")

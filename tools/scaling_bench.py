@@ -388,9 +388,10 @@ Bloom-gated broadcast gram join, fingerprint-identical output
 (parity-tested against the pandas path on the synth AND golden corpora).
 It removes Arrow IPC and Python workers from the measurement entirely.
 Its lower efficiency here is understood, not hidden — and since r5 it is
-MEASURED, not argued: tools/jvm_stage_attribution.py tables every
-stage's wall and executor run time at both levels (see the r5
-attribution section below). The best-match reduction shuffle is ~5% of
+MEASURED, not argued: the r5 attribution tabled every stage's wall
+and executor run time at both levels (section below; `perfbench/run.py
+--trace 1` reports the `extract_jvm.*` stage metrics from the event
+log). The best-match reduction shuffle is ~5% of
 wall; ~75% of the gap is executor-runtime INFLATION (1.20-1.33×) in the
 two heavy codegen map branches — the masking chain and gram explode are
 memory-bandwidth-bound, so 4× the cores on ONE socket share the same

@@ -20,5 +20,3 @@ operator inventory and README.md for the scale design.
 """
 
 __version__ = "0.1.0"
-
-from .session import get_spark  # noqa: F401

@@ -1,56 +1,12 @@
-"""Per-conversation context stitching (SURVEY.md §2.11 grouped-map).
-
-The reference annotated each property value in isolation; transcript turns
-have conversational context — a bare "40" in an assistant turn usually
-answers the preceding user question ("age?"). This operator materializes
-that context with ``applyInPandas`` (grouped map): each conversation
-arrives as one pandas frame, already co-located by the pipeline's
-hash(conv_id) partitioning, so the groupBy here shuffles nothing new.
-
-Output adds:
-    prev_text / prev_role   — previous turn (lag)
-    ctx_question            — previous turn ends with '?'
-    ctx_age                 — this turn or the previous one carries an
-                              age cue (age/aged/old) → extractor routing
-                              can consult conversation-level age context
+"""Per-conversation profiles of a transcript table: its shape
+(conversation_stats), agent-loop repetition (conv_repetition) and tool
+chains (tool_paths). Each is keyed by conv_id, the pipeline's hash
+partitioning key.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame
-
-_AGE_RE = re.compile(r"\b(age|aged|old)\b", re.IGNORECASE)
-
-CONTEXT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, tool string, "
-    "ts timestamp, prev_text string, prev_role string, "
-    "ctx_question boolean, ctx_age boolean"
-)
-
-
-def _stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("turn_idx", kind="mergesort").reset_index(drop=True)
-    texts = pdf["text"].fillna("")
-    pdf["prev_text"] = texts.shift(1)
-    pdf["prev_role"] = pdf["role"].shift(1)
-    pdf["ctx_question"] = texts.shift(1).str.strip().str.endswith("?").fillna(False)
-    has_age = texts.map(lambda t: bool(_AGE_RE.search(t)))
-    pdf["ctx_age"] = has_age | has_age.shift(1).fillna(False)
-    return pdf
-
-
-def with_conversation_context(transcripts: DataFrame) -> DataFrame:
-    """Grouped-map context features; deterministic (stable sort on
-    turn_idx inside each group)."""
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    return (
-        transcripts.select(*cols)
-        .groupBy("conv_id")
-        .applyInPandas(_stitch, schema=CONTEXT_SCHEMA)
-    )
 
 
 def conversation_stats(transcripts: DataFrame) -> DataFrame:

@@ -13,7 +13,7 @@ pure DataFrame plan:
    (match_norm, match_kind). The dictionary is tiny relative to executor
    memory; at >broadcast-threshold dictionary sizes drop the hint and AQE
    falls back to sort-merge.
-3. W1 best-link: row_number over (subj, match_norm) ordered by
+3. W1 best-link: min_by over (subj, match_norm) ordered by
    (conf desc, term_id) — the deterministic "keep the best ranked
    prediction" step (ZOOMA kept the top prediction above threshold).
 4. P5 predicate routing: a when/otherwise chain, fully codegen'd —
@@ -111,10 +111,6 @@ def route_predicates(value_mentions: DataFrame) -> DataFrame:
     )
 
 
-def term_triples(mentions: DataFrame, lex_df: DataFrame) -> DataFrame:
-    return term_triples_from_linked(best_link(link_entities(mentions, lex_df)))
-
-
 def term_triples_from_linked(linked: DataFrame) -> DataFrame:
     return (
         linked.where(F.col("pred") != "(context)")
@@ -183,22 +179,6 @@ def structural_triples(transcripts: DataFrame) -> DataFrame:
         "turn_idx",
     )
     return said.unionByName(used)
-
-
-def assemble_triples(
-    transcripts: DataFrame, mentions: DataFrame, lex_df: DataFrame
-) -> DataFrame:
-    """U1: union of the three triple streams, stable column order.
-
-    Extraction triples (term+value) are deduplicated in ONE shuffle after
-    their union (duplicates arise when the same (subj, pred, obj) is hit
-    via different surfaces or repeated values in a turn); structural
-    triples are dup-free by construction and skip the shuffle."""
-    t = term_triples(mentions, lex_df)
-    v = value_triples(mentions)
-    s = structural_triples(transcripts)
-    extracted = t.unionByName(v).dropDuplicates(["subj", "pred", "obj"])
-    return extracted.unionByName(s).select(*TRIPLE_COLS)
 
 
 def alias_priors(

@@ -106,7 +106,6 @@ def run_annotate(
     only_parts: list[int] | None = None,
     resume: bool = False,
     build_graph: bool = True,
-    extraction: str = "python",
 ) -> DataFrame:
     """Annotate → partitioned triple sink + manifests. Returns the manifest
     rows written by THIS invocation (one per processed part; none when a
@@ -114,23 +113,23 @@ def run_annotate(
     to the store — the store is not read back.
 
     only_parts simulates a partial/crashed run in tests; resume=True skips
-    parts already marked done in the manifest (anti-join J4).
-    extraction: forwarded to plans.pipeline.annotate ("python" | "jvm").
+    parts already marked done in the manifest (anti-join J4) and then
+    rebuilds the nodes and edges of the whole run from the unfiltered
+    input.
     """
     t0 = time.time()
     src = with_part_id(transcripts, n_parts)
 
-    if resume:
-        done = read_manifests(spark, out_dir)
-        if done is not None:
-            done_parts = done.where(
-                (F.col("run_id") == run_id) & (F.col("status") == "done")
-            ).select("part_id").dropDuplicates()
-            src = src.join(done_parts, "part_id", "left_anti")
+    done = read_manifests(spark, out_dir) if resume else None
+    if done is not None:
+        done_parts = done.where(
+            (F.col("run_id") == run_id) & (F.col("status") == "done")
+        ).select("part_id").dropDuplicates()
+        src = src.join(done_parts, "part_id", "left_anti")
     if only_parts is not None:
         src = src.where(F.col("part_id").isin(only_parts))
 
-    plan = annotate(spark, src, lex, build_graph=build_graph, extraction=extraction)
+    plan = annotate(spark, src, lex, build_graph=build_graph and done is None)
     # part_id is a pure function of conv_id — recompute on the output
     # rather than joining it back through the pipeline
     triples = with_part_id(plan["triples"], n_parts)
@@ -181,6 +180,11 @@ def run_annotate(
     manifest.coalesce(1).write.mode("append").parquet(manifest_path(out_dir))
 
     if build_graph:
+        if done is not None:
+            # src holds only the parts left undone, and its anti-join
+            # re-reads the manifest store lazily, which by now marks every
+            # part done: the whole run's graph needs the unfiltered input
+            plan = annotate(spark, transcripts, lex)
         materialize_graph(plan, out_dir, run_id)
     return manifest
 

@@ -55,13 +55,14 @@ def annotate(
     extraction: "python" (the iterator-pandas-UDF extractor — default) or
     "jvm" (operators/extract_jvm — the whole-stage-codegen backend with
     zero Python workers; same triples on the engine's corpora, documented
-    edge divergences in its module docstring). The JVM backend is what the
-    scaling bench measures at N vs 4N cores: it removes Arrow IPC and
-    Python-worker contention from the scaling path."""
+    edge divergences in its module docstring). The campaign CLI runs the
+    Python extractor only; the JVM twin is kept for bench.py's frozen
+    ``extraction="jvm"`` arm, perfbench's traced ``extract_jvm`` layer and
+    tools/scaling_bench.py."""
     # the one mandated shuffle (BASELINE.json): conversation co-location.
     # repartition=0 skips it — correct when the source is already laid out
-    # by bucket(conv_id) (write_transcripts / the Iceberg partition spec),
-    # reusing the storage partitioning instead of re-shuffling 100 TB.
+    # by bucket(conv_id) (the Iceberg partition spec), reusing the storage
+    # partitioning instead of re-shuffling 100 TB.
     if repartition == 0:
         src = transcripts
     else:
@@ -104,8 +105,8 @@ def annotate(
     if ranked_linking:
         linked = best_link(linked)
         # ranked path = multi-candidate dictionary: restore the global
-        # triple-identity dedup too (assemble_triples' contract) — two
-        # surfaces may still rank to the same term in one turn.
+        # (subj, pred, obj) dedup too — two surfaces may still rank to
+        # the same term in one turn.
         extracted = (
             term_triples_from_linked(linked)
             .unionByName(value_triples(mentions))
@@ -136,95 +137,18 @@ def annotate(
     return out
 
 
-def prewarm_extraction(
-    spark: SparkSession,
-    lex: Lexicon,
-    background: bool = False,
-    like: DataFrame | None = None,
-):
-    """Pay the JVM extraction backend's one-time session costs UP FRONT —
-    before the first real query — by running the full annotate plan over a
-    one-row dummy corpus (r3 VERDICT ask #6).
+def prewarm_extraction(spark: SparkSession, lex: Lexicon, like: DataFrame) -> None:
+    """Pay the JVM extraction backend's one-time session costs before the
+    first timed query: Janino compilation of the grammar's whole-stage
+    codegen units, cached per JVM.
 
-    The backend's per-session fixed cost (~6-9 s at local[32]) is Janino
-    whole-stage-codegen compilation of the grammar expression trees plus
-    first-use py4j/parser warmup; both are cached per JVM, so after this
-    call the first production query runs at warm-path cost (measured:
-    first-real ≈ warm + 2 s on the committed corpus vs ≈ warm + 6 s
-    uncold — the residual is AQE planning the real input's scan shape,
-    which a dummy can't precompile). With background=True the warmup runs
-    on a daemon thread so a job overlaps compilation with input
-    listing/reading — the returned Thread lets callers join() before
-    timing-sensitive work. Spark sessions schedule concurrent actions
-    safely, so the only interaction is beneficial cache-filling."""
-    import datetime
-    import threading
-
-    from ..sources.transcripts import TRANSCRIPT_SCHEMA
-
-    def _run() -> None:
-        if like is not None:
-            # warm over a small slice of the REAL source relation: the
-            # generated classes embed the input plan's shape, so warming
-            # against the same relation leaves only per-literal stage-1
-            # units cold for the first production query. TWO passes: the
-            # first compiles the codegen units (Janino), the second runs
-            # them again so JIT tiering of the freshly-loaded classes
-            # also lands in warmup — measured (local[32], 5k-term
-            # lexicon, ~900-turn slice): first-real gap over warm drops
-            # from ~3 s (one pass) to ~1.7 s (two passes); the second
-            # pass costs only the per-query fixed cost (~3 s).
-            for _ in range(2):
-                annotate(spark, like, lex, build_graph=False, extraction="jvm")[
-                    "triples"
-                ].count()
-            return
-        # a few hundred rows, not one: AQE plans a near-empty input into
-        # DIFFERENT physical operators (empty-stats rewrites, eliminated
-        # shuffles) whose generated classes the real query then cannot
-        # reuse — measured: a 1-row warmup leaves ~60 codegen units cold.
-        # Realistic row counts give the same join/agg strategies as a
-        # real query and enough invocations for JIT tiering to start.
-        dummy = spark.createDataFrame(
-            [(
-                f"warmup-conv-{i:04d}", i % 8, "user",
-                "the sample weighs 5 kg at 37 celsius on 2020-01-01 "
-                "between 3 and 9 years for homo sapiens",
-                None, datetime.datetime(2020, 1, 1),
-            ) for i in range(512)],
-            TRANSCRIPT_SCHEMA,
-        )
-        # IMPORTANT: default repartition, NOT repartition=0 — the warmup
-        # must go through the pipeline's standard conv_id shuffle so the
-        # post-shuffle extraction stages (where all the expensive codegen
-        # lives) compile to the SAME generated classes the first real
-        # query needs; a fused single-stage dummy compiles different
-        # units and leaves the real ones cold.
-        annotate(spark, dummy, lex, build_graph=False, extraction="jvm")[
+    ``like`` is a small slice of the real source relation: the generated
+    classes embed the input plan's shape, so warming against the same
+    relation leaves only per-literal units cold. Two passes: the first
+    compiles, the second runs the fresh classes again so their JIT tiering
+    lands in the warm-up too (local[32], 5k-term lexicon, ~900-turn slice:
+    the first real query's gap over warm fell from ~3 s to ~1.7 s)."""
+    for _ in range(2):
+        annotate(spark, like, lex, build_graph=False, extraction="jvm")[
             "triples"
         ].count()
-
-    def _run_bg() -> None:
-        # a warmup failure must never take down the job, and if the main
-        # thread already stopped the session the in-flight action's py4j
-        # error is expected noise, not a defect — swallow it
-        try:
-            _run()
-        except Exception:
-            try:
-                stopped = spark.sparkContext._jsc is None
-            except Exception:
-                stopped = True
-            if not stopped:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "extraction prewarm failed (non-fatal)", exc_info=True
-                )
-
-    if background:
-        t = threading.Thread(target=_run_bg, name="extraction-prewarm", daemon=True)
-        t.start()
-        return t
-    _run()
-    return None

@@ -25,6 +25,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _local_threads(master: str, cores: int) -> int:
+    """The worker-thread count N of a ``local[N]`` or ``local[N,F]``
+    (F = max task failures) master; ``cores`` for ``local[*]`` and for
+    non-local masters."""
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
+    n = n.split(",")[0]
+    return cores if n in ("*", "") else int(n)
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "biosd_feature_annotator_spark",
@@ -40,8 +49,7 @@ def get_spark(
     master = master or f"local[{cores}]"
     if shuffle_partitions is None:
         # local[N] — match N; AQE coalesce trims small shuffles anyway.
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        shuffle_partitions = cores if n in ("*", "") else int(n)
+        shuffle_partitions = _local_threads(master, cores)
 
     b = (
         SparkSession.builder.master(master)

@@ -8,8 +8,7 @@ partitioned columnar table and relies on Catalyst pushdown:
 - conv_id scoping (S2) compiles to an IN filter that reaches the scan
   (partition pruning on a bucket(conv_id)-partitioned Iceberg table).
 - sampling (S3) is Spark's Bernoulli sample — seed-pinned for determinism.
-- a `where` predicate string is parsed by Catalyst and pushed to parquet
-  row-group stats (verify via .explain(): PushedFilters).
+- the too-long-text guard (P3) is a JVM-side length predicate.
 
 Input schema (mandated by BASELINE.json input_hint):
     conv_id string, turn_idx int, role string, text string,
@@ -105,17 +104,3 @@ def read_transcripts(
     if sample_frac is not None:
         df = df.sample(fraction=sample_frac, seed=42)
     return df
-
-
-def write_transcripts(df: DataFrame, path: str, n_buckets: int = 16) -> None:
-    """Local writer used by tests/bench: hash-bucket layout by conv_id —
-    the parquet emulation of Iceberg `bucket(N, conv_id)` partitioning
-    (SURVEY.md §1.2). Keeps whole conversations co-located so the
-    extraction stage never needs a shuffle to group turns."""
-    (
-        df.withColumn("conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)))
-        .repartition("conv_bucket")
-        .write.partitionBy("conv_bucket")
-        .mode("overwrite")
-        .parquet(path)
-    )

@@ -1,4 +1,1 @@
-from .incremental import (  # noqa: F401
-    read_transcript_stream,
-    annotate_stream,
-)
+from .incremental import annotate_stream  # noqa: F401

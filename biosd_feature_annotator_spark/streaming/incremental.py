@@ -24,16 +24,6 @@ from ..sources.lexicon import Lexicon
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
-def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
-    """T1: file-source stream over a transcript parquet directory (on a
-    cluster: readStream.table on the Iceberg table)."""
-    return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(path)
-    )
-
-
 def annotate_stream(
     spark: SparkSession,
     stream: DataFrame,
@@ -42,9 +32,9 @@ def annotate_stream(
     checkpoint: str,
 ):
     """T1+T5: each micro-batch goes through plans/pipeline.annotate via
-    foreachBatch (the standard way to lift plans containing ranking
-    windows onto a stream: best_link's row_number is not streamable), so
-    the stream links exactly like the batch path. It writes the
+    foreachBatch (the standard way to lift a plan with aggregations onto
+    a stream: best_link's min_by aggregate would otherwise need streaming
+    state), so the stream links exactly like the batch path. It writes the
     ``extracted`` triples only: term and value triples, no structural
     (saidBy/usesTool) ones, no conv_id repartition, no mention cache and
     no graph. Progress tracking is the streaming checkpoint (file-source

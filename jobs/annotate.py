@@ -59,9 +59,6 @@ def main() -> None:
                     help="P3 guard: drop turns whose text exceeds N chars")
     ap.add_argument("--synth-turns", type=int, default=None,
                     help="generate a deterministic synthetic input of ~N turns")
-    ap.add_argument("--extraction", choices=("python", "jvm"), default="python",
-                    help="extraction backend: iterator-pandas-UDF (default) "
-                         "or the zero-Python whole-stage-codegen twin")
     args = ap.parse_args()
 
     if args.purge:
@@ -79,15 +76,6 @@ def main() -> None:
 
     spark = get_spark(master=args.master, app_name=f"annotate-{args.run_id}")
     lex = load_lexicon(args.lexicon)
-    prewarm_thread = None
-    if args.extraction == "jvm":
-        # overlap the backend's one-time Janino/grammar compilation with
-        # input listing + reading (plans.pipeline.prewarm_extraction): by
-        # the time the real query launches, its codegen units are already
-        # in the session cache
-        from biosd_feature_annotator_spark.plans.pipeline import prewarm_extraction
-
-        prewarm_thread = prewarm_extraction(spark, lex, background=True)
     if args.synth_turns:
         from biosd_feature_annotator_spark.synth import synth_transcripts
 
@@ -113,7 +101,6 @@ def main() -> None:
         n_parts=args.n_parts,
         resume=args.resume,
         build_graph=not args.no_graph,
-        extraction=args.extraction,
     )
     # this invocation's parts only: a resume of a finished run reports 0.
     # The rows are a local frame already on the driver: sum them here.
@@ -121,11 +108,6 @@ def main() -> None:
     n_turns = sum(r.n_rows for r in parts)
     n_triples = sum(r.n_triples for r in parts)
     wall = time.time() - t0
-    if prewarm_thread is not None:
-        # don't let session teardown race the daemon thread's in-flight
-        # Spark actions (spurious py4j errors at exit); in practice the
-        # warmup finished long before the job did, so this is a no-op
-        prewarm_thread.join(timeout=120)
     print(
         json.dumps(
             {

@@ -7,10 +7,36 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
 from biosd_feature_annotator_spark.session import get_spark  # noqa: E402
 from biosd_feature_annotator_spark.sources.lexicon import load_lexicon  # noqa: E402
+from biosd_feature_annotator_spark.sources.transcripts import TRANSCRIPT_SCHEMA  # noqa: E402
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
+
+
+def write_transcripts(df, path: str, n_buckets: int = 16) -> None:
+    """Write transcripts hash-bucketed by conv_id — the parquet emulation
+    of an Iceberg ``bucket(N, conv_id)`` layout, whole conversations
+    co-located. read_transcripts drops the ``conv_bucket`` column."""
+    (
+        df.withColumn("conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)))
+        .repartition("conv_bucket")
+        .write.partitionBy("conv_bucket")
+        .mode("overwrite")
+        .parquet(path)
+    )
+
+
+def read_transcript_stream(spark, path: str):
+    """A file-source stream over a transcript parquet directory, at most
+    8 files per micro-batch."""
+    return (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 8)
+        .parquet(path)
+    )
 
 
 @pytest.fixture(scope="session")

@@ -1,46 +1,9 @@
-"""Grouped-map context stitching (applyInPandas) + entity stats."""
+"""Per-conversation profiles (operators/context) + entity stats."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from biosd_feature_annotator_spark.operators.context import with_conversation_context
 from biosd_feature_annotator_spark.operators.canonicalize import entity_stats
-from biosd_feature_annotator_spark.synth import golden_transcripts, synth_transcripts
-
-
-def test_context_stitching(spark):
-    rows = [
-        ("c1", 0, "user", "what is the age?", None, 1000),
-        ("c1", 1, "assistant", "40 years", None, 1037),
-        ("c1", 2, "user", "thanks", None, 1074),
-        ("c2", 0, "user", "hello there", None, 2000),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts_s long"
-    ).select("conv_id", "turn_idx", "role", "text", "tool", F.timestamp_seconds("ts_s").alias("ts"))
-    got = {(r.conv_id, r.turn_idx): r for r in with_conversation_context(df).collect()}
-    assert got[("c1", 1)].ctx_question and got[("c1", 1)].prev_role == "user"
-    assert got[("c1", 1)].ctx_age  # 'age' cue in previous turn
-    assert not got[("c1", 2)].ctx_question
-    assert got[("c2", 0)].prev_text is None and not got[("c2", 0)].ctx_question
-
-
-def test_context_is_deterministic_and_total(spark):
-    df = synth_transcripts(spark, 500)
-    out = with_conversation_context(df)
-    assert out.count() == df.count()
-    # lag correctness: prev_text of turn k equals text of turn k-1
-    a = out.alias("a")
-    b = df.alias("b")
-    bad = (
-        a.join(b, (F.col("a.conv_id") == F.col("b.conv_id"))
-               & (F.col("a.turn_idx") == F.col("b.turn_idx") + 1))
-        .where(F.coalesce(F.col("a.prev_text"), F.lit(""))
-               != F.coalesce(F.col("b.text"), F.lit("")))
-        .count()
-    )
-    assert bad == 0
+from biosd_feature_annotator_spark.synth import golden_transcripts
 
 
 def test_entity_stats(spark, lexicon):

@@ -9,6 +9,7 @@ import json
 import os
 
 import pytest
+from conftest import write_transcripts
 from pyspark.sql import functions as F
 
 from biosd_feature_annotator_spark.plans.pipeline import annotate
@@ -105,10 +106,7 @@ def test_g43_said_by(plan, spark):
 def test_g41_text_equality_invariant(plan, spark, tmp_path):
     """Per-turn text byte-equality under stable (conv_id, turn_idx) order
     across the storage round-trip + pipeline repartition (BASELINE.json)."""
-    from biosd_feature_annotator_spark.sources.transcripts import (
-        read_transcripts,
-        write_transcripts,
-    )
+    from biosd_feature_annotator_spark.sources.transcripts import read_transcripts
 
     src = golden_transcripts(spark)
     p = str(tmp_path / "t")

@@ -7,12 +7,37 @@ W1 window must pick the max-conf / min-term_id winner."""
 
 from __future__ import annotations
 
+from conftest import read_transcript_stream
 from pyspark.sql import functions as F
 
 from biosd_feature_annotator_spark.operators.extract import extract_mentions
-from biosd_feature_annotator_spark.operators.link import assemble_triples
+from biosd_feature_annotator_spark.operators.link import (
+    TRIPLE_COLS,
+    best_link,
+    link_entities,
+    structural_triples,
+    term_triples_from_linked,
+    value_triples,
+)
 from biosd_feature_annotator_spark.plans.pipeline import annotate
 from biosd_feature_annotator_spark.sources.lexicon import Lexicon, lexicon_df
+
+
+def term_triples(mentions, lex_df):
+    return term_triples_from_linked(best_link(link_entities(mentions, lex_df)))
+
+
+def assemble_triples(transcripts, mentions, lex_df):
+    """The generic reference path (U1): ranked best-link on every
+    dictionary, then ONE dropDuplicates over the union of term and value
+    triples (the same (subj, pred, obj) can be hit via different surfaces
+    or repeated values in a turn); structural triples are dup-free by
+    construction."""
+    t = term_triples(mentions, lex_df)
+    v = value_triples(mentions)
+    s = structural_triples(transcripts)
+    extracted = t.unionByName(v).dropDuplicates(["subj", "pred", "obj"])
+    return extracted.unionByName(s).select(*TRIPLE_COLS)
 
 
 def _transcripts(spark, texts):
@@ -242,11 +267,7 @@ def test_stream_links_like_annotate_on_multi_candidate_lexicon(spark, tmp_path):
     non-structural rows — one HIGH hasDrug triple, not one per candidate."""
     from collections import Counter
 
-    from biosd_feature_annotator_spark.operators.link import TRIPLE_COLS
-    from biosd_feature_annotator_spark.streaming import (
-        annotate_stream,
-        read_transcript_stream,
-    )
+    from biosd_feature_annotator_spark.streaming import annotate_stream
 
     lex = _multi_candidate_lexicon()
     tr = _transcripts(spark, ["patient on beta blocker since monday"])

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import write_transcripts
 from pyspark.sql import functions as F
 
 from biosd_feature_annotator_spark.plans.materialize import (
@@ -65,6 +66,31 @@ def test_resume_after_partial_run(spark, lexicon, transcripts, tmp_path):
     assert m2.groupBy("part_id").count().where("count > 1").count() == 0
     assert m2.count() == N_PARTS
     assert table_fp(read_triples(spark, out_part, "r")) == full_fp
+
+
+def _graph(spark, out):
+    return {
+        name: sorted(map(tuple, spark.read.parquet(
+            os.path.join(out, name, "run_id=r")).collect()))
+        for name in ("nodes", "edges")
+    }
+
+
+def test_resume_builds_the_whole_runs_graph(spark, lexicon, transcripts, tmp_path):
+    """Nodes and edges describe the whole run: a crash (only_parts) then
+    a resume writes the same nodes and edges rows as a one-shot run, and
+    so does a further resume that finds every part done."""
+    out_full, out_part = str(tmp_path / "full"), str(tmp_path / "partial")
+    run_annotate(spark, transcripts, lexicon, out_full, "r", N_PARTS)
+    want = _graph(spark, out_full)
+    assert want["nodes"] and want["edges"]
+
+    run_annotate(spark, transcripts, lexicon, out_part, "r", N_PARTS,
+                 only_parts=[0, 1, 2, 3])
+    run_annotate(spark, transcripts, lexicon, out_part, "r", N_PARTS, resume=True)
+    assert _graph(spark, out_part) == want
+    run_annotate(spark, transcripts, lexicon, out_part, "r", N_PARTS, resume=True)
+    assert _graph(spark, out_part) == want
 
 
 def test_resume_returns_only_this_invocations_rows(spark, lexicon, transcripts, tmp_path):
@@ -226,10 +252,7 @@ def test_max_text_len_guard(spark, tmp_path):
     import contextlib
     import io
 
-    from biosd_feature_annotator_spark.sources.transcripts import (
-        read_transcripts,
-        write_transcripts,
-    )
+    from biosd_feature_annotator_spark.sources.transcripts import read_transcripts
 
     rows = [
         ("c0", 0, "user", "short turn", None),
@@ -278,21 +301,6 @@ def test_diff_runs_added_and_removed(spark, lexicon, transcripts, tmp_path):
     rev = diff_runs(spark, out, "rB", "rA")
     assert rev.where("change = 'removed'").count() == by["added"]
     assert rev.where("change = 'added'").count() == 0
-
-
-def test_run_annotate_jvm_backend_parity(spark, lexicon, transcripts, tmp_path):
-    """The campaign sink produces the identical triple multiset with
-    either extraction backend (the CLI's --extraction switch)."""
-    out = str(tmp_path / "beout")
-    run_annotate(spark, transcripts, lexicon, out, "rpy",
-                 n_parts=N_PARTS, build_graph=False)
-    run_annotate(spark, transcripts, lexicon, out, "rjvm",
-                 n_parts=N_PARTS, build_graph=False, extraction="jvm")
-    key = ["subj", "pred", "obj", "confidence"]
-    a = read_triples(spark, out, "rpy").select(*key)
-    b = read_triples(spark, out, "rjvm").select(*key)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_apply_diff_round_trips_to_target(spark, lexicon, transcripts, tmp_path):

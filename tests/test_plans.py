@@ -8,10 +8,11 @@ import contextlib
 import io
 
 import pytest
+from conftest import write_transcripts
 from pyspark.sql import functions as F
 
 from biosd_feature_annotator_spark.sources.lexicon import lexicon_df
-from biosd_feature_annotator_spark.sources.transcripts import read_transcripts, write_transcripts
+from biosd_feature_annotator_spark.sources.transcripts import read_transcripts
 from biosd_feature_annotator_spark.synth import synth_transcripts
 
 SF = "/root/testdata/sf0.001"

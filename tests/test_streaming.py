@@ -4,12 +4,10 @@ catch-up semantics — the streaming analogue of manifest resume)."""
 from __future__ import annotations
 
 import pytest
+from conftest import read_transcript_stream
 from pyspark.sql import functions as F
 
-from biosd_feature_annotator_spark.streaming.incremental import (
-    annotate_stream,
-    read_transcript_stream,
-)
+from biosd_feature_annotator_spark.streaming.incremental import annotate_stream
 from biosd_feature_annotator_spark.synth import synth_transcripts
 
 

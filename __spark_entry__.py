@@ -28,7 +28,8 @@ where DuckDB returns BIGINT; doubles are rounded identically on both sides).
 Rounded-double tie margins are AUDITED, not assumed: tools/
 oracle_round_audit.py strips every round() from the oracle SQL and
 measures each column's distance to its nearest .5 tie boundary in ulps
-(ORACLE_AUDIT.md holds the per-SF table; ≥1000 ulps everywhere). Money
+(ORACLE_AUDIT.md holds the per-SF table; ≥1000 ulps everywhere, which
+tests/test_oracle_gates.py enforces at sf0.01). Money
 sums use exact DECIMAL arithmetic and MinHash emits integer Jaccard
 components, so the riskiest columns have no rounding at all.
 """
@@ -658,12 +659,11 @@ def q_emb_ivf_topk(spark, sf):
 def q_emb_pq_topk(spark, sf):
     """Product-quantization ADC top-k (similarity.pq_*): corpus vectors
     compressed to 4 one-byte codes (16 centroids per 16-dim subspace,
-    deterministic md5 codebooks — the oracle-checkable configuration;
-    train_pq_codebooks is the drop-in quality swap), queries score
-    candidates via a per-query distance table with a FIXED-ORDER 4-term
-    sum, so even the unrounded ranking is engine-comparable. DuckDB
-    recomputes code assignment, the distance tables and the ADC ranking
-    from the same centroid literals."""
+    deterministic md5 codebooks — the oracle-checkable configuration),
+    queries score candidates via a per-query distance table with a
+    FIXED-ORDER 4-term sum, so even the unrounded ranking is
+    engine-comparable. DuckDB recomputes code assignment, the distance
+    tables and the ADC ranking from the same centroid literals."""
     e = _t(spark, sf, "embeddings")
     q = e.where(F.col("vec_id") < 20)
     cbs = _sim.pq_seed_codebooks(m=4, k=16, dim=64)
@@ -6779,9 +6779,9 @@ def q_doc_repetition(spark, sf):
 
 def q_bpe_tokenize_docs(spark, sf):
     """Trained-BPE tokenization with the FROZEN merge table
-    (operators/bpe.py, BPE_MERGES_V1 — trained by tools/train_bpe.py on
-    this corpus; the DataFrame trainer is asserted merge-for-merge
-    against a pure-Python reference). Tokenization is per-row Catalyst
+    (operators/bpe.py, BPE_MERGES_V1 — trained on this corpus; the
+    pure-Python reference trainer in tests/test_bpe.py reproduces it
+    merge for merge). Tokenization is per-row Catalyst
     (spaced-symbol string + two literal replaces per merge, a provable
     fixpoint) — no explode, no shuffle, so it composes into a 100 TB
     scan as a projection. The oracle replays the identical frozen table

@@ -26,7 +26,7 @@ Star components around hot entities are the skew case BASELINE.json
 calls out. Both forms aggregate with plain groupBy: Spark's map-side
 partial aggregation already is the two-phase salted aggregation (each
 map task emits one row per key), so a hot term's reducer receives at
-most #map-tasks rows. salted_min is the explicit two-phase form.
+most #map-tasks rows.
 """
 
 from __future__ import annotations
@@ -64,19 +64,6 @@ def entity_stats(triples: DataFrame, with_exact: bool = False) -> DataFrame:
             F.abs(F.col("approx_subjects") - F.col("n_subjects"))
             <= 0.05 * F.col("n_subjects")
         ).alias("hll_within_tol"),
-    )
-
-
-def salted_min(df: DataFrame, key: str, val: str, n_salt: int = 8) -> DataFrame:
-    """Two-phase min aggregation (SURVEY.md J3): partial min on
-    (key, salt) — map-side combinable and skew-proof — then final min on
-    key. Result identical to df.groupBy(key).agg(min(val))."""
-    return (
-        df.withColumn("_salt", F.pmod(F.xxhash64(val), F.lit(n_salt)))
-        .groupBy(key, "_salt")
-        .agg(F.min(val).alias(val))
-        .groupBy(key)
-        .agg(F.min(val).alias(val))
     )
 
 

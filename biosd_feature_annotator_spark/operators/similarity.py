@@ -16,11 +16,10 @@ Two paths, same contract (query_id, neighbor_id, cos):
 
 - ``ivf_cosine_topk`` — the IVF shape: coarse assignment of every vector
   to its nearest centroid (cells), queries probe the ``n_probe`` nearest
-  cells, exact re-rank inside the probed cells. Centroids here are
-  deterministic md5-derived unit-free points (no training pass — the
-  point is the partitioning shape: candidate generation is an equi-join
-  on cell id, shuffle-partitionable by cell at 10^9 vectors; swap in
-  k-means centroids for recall tuning and nothing else changes).
+  cells, exact re-rank inside the probed cells. Centroids are
+  deterministic md5-derived unit-free points, so a DuckDB oracle can
+  replay the cell assignment; candidate generation is an equi-join on
+  cell id, shuffle-partitionable by cell at 10^9 vectors.
 """
 
 from __future__ import annotations
@@ -64,19 +63,6 @@ def _cos_pre(qv, cv, qn, cn) -> F.Column:
     order as ``cosine`` — bit-identical, one fold per pair instead of
     three."""
     return _dot(qv, cv) / (F.col(qn) * F.col(cn))
-
-
-def _lit_darray(values) -> F.Column:
-    """A double-array literal shipped as ONE CSV string and expanded by
-    Catalyst's ConstantFolding at optimization time. F.array(*64 F.lit)
-    costs ~0.5 ms of py4j per element at plan build AND leaves a 64-node
-    CreateArray in the tree; this is one py4j call and one Literal after
-    folding. repr() round-trips doubles exactly and Spark's string→double
-    cast is correctly rounded, so the folded values are bit-identical to
-    the direct literals (the SQL oracles embed the same repr values)."""
-    return F.split(F.lit(",".join(repr(float(x)) for x in values)), ",").cast(
-        "array<double>"
-    )
 
 
 # --------------------------------------------------------------- kernels
@@ -234,33 +220,6 @@ def cosine_topk(
     )
 
 
-def l2_topk(
-    queries: DataFrame, corpus: DataFrame, k: int = 5,
-    id_q: str = "vec_id", id_c: str = "vec_id", vec: str = "embedding",
-) -> DataFrame:
-    """Brute-force squared-L2 top-k (ascending distance) — the exact
-    baseline PQ-ADC recall is measured against (ADC approximates L2, not
-    cosine). Same broadcast-query shape as cosine_topk."""
-    q = queries.select(F.col(id_q).alias("query_id"), F.col(vec).alias("qv"))
-    c = corpus.select(F.col(id_c).alias("neighbor_id"), F.col(vec).alias("cv"))
-    d2 = F.aggregate(
-        F.zip_with(_vecd(F.col("qv")), _vecd(F.col("cv")),
-                   lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
-    scored = (
-        F.broadcast(q).crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", d2.alias("d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "d2", "rank")
-    )
-
-
 def _planes(n_planes: int, dim: int, seed: int = 7) -> list[list[float]]:
     """Deterministic pseudo-random unit-free hyperplanes from md5 —
     reproducible across sessions/parallelism (no RNG state)."""
@@ -363,17 +322,13 @@ def ivf_cosine_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5,
     id_q: str = "vec_id", id_c: str = "vec_id", vec: str = "embedding",
     n_cells: int = 8, n_probe: int = 2, dim: int = 64, seed: int = 11,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN: corpus vectors live in their single nearest cell, queries
     probe their n_probe nearest cells, exact cosine re-rank inside the
     probed cells. Candidate generation is an equi-join on cell id —
     shuffle-partitionable (or broadcast for small query sets), never an
-    N×Q product.
-
-    centroids: optional trained centroid table (train_ivf_centroids);
-    defaults to the deterministic seed points (the oracle-checkable form)."""
-    cents = centroids if centroids is not None else _planes(n_cells, dim, seed)
+    N×Q product. The centroids are the deterministic seed points."""
+    cents = _planes(n_cells, dim, seed)
     c = corpus.select(
         F.col(id_c).alias("neighbor_id"), F.col(vec).alias("cv"),
         _norm(F.col(vec)).alias("cn"),
@@ -420,7 +375,6 @@ def cosine_pairs_above(
 def semantic_dedup(
     df: DataFrame, threshold: float, id_col: str = "vec_id",
     vec: str = "embedding", n_cells: int = 8, dim: int = 64, seed: int = 11,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: every vector is assigned to
     its nearest coarse cell (ivf_assign), and a row is dropped iff a
@@ -436,11 +390,9 @@ def semantic_dedup(
     never an all-pairs product. Within-cell work is quadratic in CELL
     size only; at 10^9 vectors you raise n_cells so cells stay ~10^3-10^4
     (SemDeDup's published configuration is exactly this: k-means cells of
-    a few thousand, pairwise cosine inside each). The trained-centroid
-    path (train_ivf_centroids) balances cell populations and slots in
-    without changing the plan; the seed-centroid default is the
-    oracle-checkable form."""
-    cents = centroids if centroids is not None else _planes(n_cells, dim, seed)
+    a few thousand, pairwise cosine inside each). The cells here come
+    from the deterministic seed centroids, the oracle-checkable form."""
+    cents = _planes(n_cells, dim, seed)
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec).alias("v"),
@@ -464,100 +416,6 @@ def semantic_dedup(
     )
 
 
-def train_ivf_centroids(
-    df: DataFrame, n_cells: int = 8, dim: int = 64, rounds: int = 3,
-    vec: str = "embedding", seed: int = 11,
-) -> list[list[float]]:
-    """Spherical k-means for IVF centroids, expressed as DataFrame algebra
-    (Lloyd rounds): assign every vector to its nearest centroid
-    (ivf_assign), then recompute each centroid as the per-dimension mean
-    via posexplode → groupBy(cell, pos) → avg. Each round is one
-    aggregation job; the only driver-side transfer is the n_cells×dim
-    centroid table itself (metadata-sized, like the manifest collects). Empty cells keep their previous centroid. Seeded from the
-    same deterministic md5 points the untrained path uses, so
-    rounds=0 ≡ the untrained centroids and the swap is drop-in."""
-    cents = _planes(n_cells, dim, seed)
-    for _ in range(rounds):
-        assigned = df.select(
-            F.element_at(ivf_assign(F.col(vec), cents, 1), 1).alias("cell"),
-            F.posexplode(_vecd(F.col(vec))).alias("pos", "x"),
-        )
-        rows = (
-            assigned.groupBy("cell", "pos").agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        new = [list(c) for c in cents]
-        for r in rows:
-            new[r["cell"]][r["pos"]] = r["m"]
-        cents = new
-    return cents
-
-
-def synth_clustered_embeddings(
-    spark, n: int, dim: int = 64, k_centers: int = 8,
-    spread: float = 1.0, sigma: float = 0.5, seed: int = 23,
-) -> DataFrame:
-    """Deterministic mixture-of-Gaussians embedding fixture: k_centers
-    well-separated centers (the md5-derived points, scaled by ``spread``),
-    isotropic noise with per-coordinate std ``sigma``. Pure Catalyst and
-    RNG-state-free — noise is an Irwin-Hall(3) sum of xxhash64-derived
-    uniforms on [-1,1), so every (id, dim) coordinate is reproducible
-    across sessions and parallelism levels.
-
-    Purpose (r4 VERDICT ask #2): the driver's embeddings.parquet is
-    near-uniform, where IVF recall can only track the probed cell
-    fraction; real corpora are CLUSTERED, where a trained centroid table
-    captures whole neighborhoods per cell. This fixture makes that
-    demonstrable. The default spread/sigma is tuned so exact top-k is
-    same-cluster (measured 1.00 at n=2000, dim=64, k=8) yet the
-    within-cluster cone is wide enough that ARBITRARY centroids split
-    clusters across cells (untrained recall@3 ≈ 0.60 at probe 2/8)
-    while trained cluster-mean centroids hold them together
-    (recall@3 = 1.00 at probe 1) — see tools/ann_recall_report.py.
-
-    Returns (vec_id long, cluster int, embedding array<float>)."""
-    centers = _planes(k_centers, dim, seed)
-    cent_lit = F.array(*[_lit_darray(c) for c in centers])
-    cluster = F.pmod(F.col("id"), F.lit(k_centers)).cast("int")
-
-    def _u(d: F.Column, salt: int) -> F.Column:
-        # xxhash64 → uniform on [-1, 1); three salts summed → ~N(0,1)
-        return F.xxhash64(
-            F.concat_ws(
-                ":",
-                F.col("id").cast("string"),
-                d.cast("string"),
-                F.lit(f"s{salt}"),
-            )
-        ) / F.lit(float(2**63))
-
-    noise = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda d: _u(d, 1) + _u(d, 2) + _u(d, 3),
-    )
-    emb = F.zip_with(
-        F.element_at(cent_lit, cluster + 1),
-        noise,
-        lambda c, nz: (c * F.lit(spread) + nz * F.lit(sigma)).cast("float"),
-    )
-    return spark.range(n).select(
-        F.col("id").cast("long").alias("vec_id"),
-        cluster.alias("cluster"),
-        emb.alias("embedding"),
-    )
-
-
-def ann_recall(ann: DataFrame, exact: DataFrame) -> float:
-    """recall@k of an ANN result against the brute-force top-k on the same
-    queries: |ANN ∩ exact| / |exact| over (query_id, neighbor_id) pairs.
-    One small aggregate — report-time metric, not a hot-path operator."""
-    hit = ann.select("query_id", "neighbor_id").intersect(
-        exact.select("query_id", "neighbor_id")
-    )
-    n_exact = exact.count()
-    return (hit.count() / n_exact) if n_exact else 1.0
-
-
 def eval_topk(
     pred: DataFrame,
     truth: DataFrame,
@@ -567,12 +425,11 @@ def eval_topk(
     rank_col: str = "rank",
 ) -> DataFrame:
     """Distributed top-k retrieval evaluation → one row per truth query:
-    (query, n_hit, n_truth, recall_micro, mrr_micro). The per-query,
-    cluster-scale upgrade of ann_recall's two driver-side counts: when
-    the eval set is millions of queries (scoring an ANN index build, or
-    comparing two rankers), the metrics themselves must be a DataFrame,
-    not a float — so they can be sliced, joined to query metadata, and
-    regression-diffed between runs.
+    (query, n_hit, n_truth, recall_micro, mrr_micro). Per query rather
+    than one driver-side recall figure: when the eval set is millions of
+    queries (scoring an ANN index build, or comparing two rankers), the
+    metrics themselves must be a DataFrame, not a float — so they can be
+    sliced, joined to query metadata, and regression-diffed between runs.
 
     Exact integer arithmetic end to end (the repo's micro-quantization
     discipline): recall@k = (n_hit·1e6) div n_truth, MRR = 1e6 div
@@ -640,8 +497,7 @@ def pq_seed_codebooks(
 ) -> list[list[list[float]]]:
     """Deterministic md5-derived codebooks (k centroids per subspace of
     dim/m dims) — the oracle-checkable configuration, same philosophy as
-    the IVF seed centroids; train_pq_codebooks is the drop-in quality
-    swap (rounds=0 reproduces these exactly)."""
+    the IVF seed centroids."""
     sub = dim // m
     return [_planes(k, sub, seed + j) for j in range(m)]
 
@@ -707,7 +563,7 @@ def ivfpq_adc_topk(
     queries: DataFrame, corpus: DataFrame,
     codebooks: list[list[list[float]]],
     k: int = 3, n_cells: int = 8, n_probe: int = 2, dim: int = 64,
-    seed: int = 11, centroids: list[list[float]] | None = None,
+    seed: int = 11,
     id_q: str = "vec_id", id_c: str = "vec_id", vec: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ: the two memory-scale pieces composed the FAISS way —
@@ -725,7 +581,7 @@ def ivfpq_adc_topk(
     changes only the encode/table expressions, not the join shape."""
     m = len(codebooks)
     kc = len(codebooks[0])
-    cents = centroids if centroids is not None else _planes(n_cells, dim, seed)
+    cents = _planes(n_cells, dim, seed)
     c = corpus.select(
         F.col(id_c).alias("neighbor_id"),
         F.element_at(ivf_assign(F.col(vec), cents, 1), 1).alias("cell"),
@@ -755,66 +611,6 @@ def ivfpq_adc_topk(
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "adc", "rank")
     )
-
-
-def train_pq_codebooks(
-    df: DataFrame, m: int = 4, k: int = 16, dim: int = 64, rounds: int = 3,
-    vec: str = "embedding", seed: int = 31,
-) -> list[list[list[float]]]:
-    """Per-subspace Lloyd k-means in DataFrame algebra (same loop
-    discipline as train_ivf_centroids: each round one aggregation job,
-    the only driver transfer is the k×sub centroid table). rounds=0 ≡
-    pq_seed_codebooks — the swap is drop-in and changes only literals."""
-    sub = dim // m
-    out = []
-    for j in range(m):
-        cents = _planes(k, sub, seed + j)
-        sv = df.select(
-            F.slice(_vecd(F.col(vec)), j * sub + 1, sub).alias("_v")
-        )
-        for _ in range(rounds):
-            assigned = sv.select(
-                F.element_at(_pq_codes(F.col("_v"), [cents]), 1).alias("cell"), "_v"
-            )
-            rows = (
-                assigned.select("cell", F.posexplode("_v").alias("pos", "x"))
-                .groupBy("cell", "pos")
-                .agg(F.avg("x").alias("mu"))
-                .collect()
-            )
-            new = [list(c) for c in cents]
-            for r in rows:
-                new[r["cell"]][r["pos"]] = r["mu"]
-            cents = new
-        out.append(cents)
-    return out
-
-
-def pq_reconstruction_mse(
-    df: DataFrame, codebooks: list[list[list[float]]], vec: str = "embedding"
-) -> float:
-    """Mean squared reconstruction error of the PQ code (per-subspace
-    nearest centroid substituted for the true subvector) — the quality
-    metric a codebook training pass must reduce. Report-time metric."""
-    sub = len(codebooks[0][0])
-    coded = df.select(
-        _vecd(F.col(vec)).alias("_v"), _pq_codes(F.col(vec), codebooks).alias("_c")
-    )
-    err = None
-    for j, cb in enumerate(codebooks):
-        subv = F.slice(F.col("_v"), j * sub + 1, sub)
-        code = F.element_at(F.col("_c"), j + 1)
-        cent_lit = F.array(*[_lit_darray(c) for c in cb])
-        e = F.aggregate(
-            F.zip_with(
-                subv, F.element_at(cent_lit, code + 1),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0), lambda a, v: a + v,
-        )
-        err = e if err is None else err + e
-    row = coded.agg(F.avg(err).alias("mse")).collect()[0]
-    return float(row["mse"])
 
 
 def group_centroids_long(

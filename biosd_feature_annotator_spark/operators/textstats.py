@@ -37,7 +37,7 @@ def token_count(text) -> Column:
 def bpe_ish_token_count(text) -> Column:
     """Sub-word-ish token estimate: word pieces + digit runs + punctuation
     as separate tokens (a BPE-shaped regex, not a trained BPE). For a
-    REAL trained merge table see operators/bpe.py (train_bpe_merges /
+    REAL trained merge table see operators/bpe.py (BPE_MERGES_V1 /
     bpe_tokens) — this regex form is kept as the zero-setup
     estimator and for the doc_bpe_tokens oracle entry."""
     return F.coalesce(

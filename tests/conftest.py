@@ -39,6 +39,49 @@ def read_transcript_stream(spark, path: str):
     )
 
 
+def synth_clustered_embeddings(spark, n: int, dim: int = 64, k_centers: int = 8,
+                               sigma: float = 0.5):
+    """Deterministic mixture-of-Gaussians embeddings: k_centers
+    well-separated centers (similarity's md5-derived points) plus
+    isotropic noise with per-coordinate std ``sigma``. Pure Catalyst and
+    RNG-state-free — noise is an Irwin-Hall(3) sum of xxhash64-derived
+    uniforms on [-1,1), so every (id, dim) coordinate is reproducible
+    across sessions and parallelism levels. Exact top-k is same-cluster
+    by construction.
+
+    Returns (vec_id long, cluster int, embedding array<float>)."""
+    from biosd_feature_annotator_spark.operators.similarity import _planes
+
+    # each center ships as one CSV literal that Catalyst folds into a
+    # double array: one py4j call per center instead of one per element
+    centers = F.array(*[
+        F.split(F.lit(",".join(repr(x) for x in c)), ",").cast("array<double>")
+        for c in _planes(k_centers, dim, 23)
+    ])
+    cluster = F.pmod(F.col("id"), F.lit(k_centers)).cast("int")
+
+    def _u(d, salt: int):
+        # xxhash64 → uniform on [-1, 1); three salts summed → ~N(0,1)
+        return F.xxhash64(
+            F.concat_ws(":", F.col("id").cast("string"), d.cast("string"),
+                        F.lit(f"s{salt}"))
+        ) / F.lit(float(2**63))
+
+    noise = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda d: _u(d, 1) + _u(d, 2) + _u(d, 3),
+    )
+    emb = F.zip_with(
+        F.element_at(centers, cluster + 1), noise,
+        lambda c, nz: (c + nz * F.lit(sigma)).cast("float"),
+    )
+    return spark.range(n).select(
+        F.col("id").cast("long").alias("vec_id"),
+        cluster.alias("cluster"),
+        emb.alias("embedding"),
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

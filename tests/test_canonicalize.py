@@ -1,13 +1,10 @@
-"""A2/J3: connected components + salted aggregation."""
+"""A2: connected components and hot-entity canonicalization."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from biosd_feature_annotator_spark.operators.canonicalize import (
-    connected_components,
-    salted_min,
-)
+from biosd_feature_annotator_spark.operators.canonicalize import connected_components
 
 
 def comps(spark, edges):
@@ -33,20 +30,10 @@ def test_cc_chain_needs_iterations(spark):
 
 
 def test_cc_star_skew(spark):
-    # hot hub: 200 spokes — the skew case salting is for
+    # hot hub: 200 spokes — the hot-entity skew case
     edges = [("hub", f"s{i:03d}") for i in range(200)]
     got = comps(spark, edges)
     assert len(got) == 1 and len(got[0]) == 201
-
-
-def test_salted_min_equals_plain_min(spark):
-    df = spark.range(0, 10_000).select(
-        (F.col("id") % 7).cast("string").alias("k"),
-        F.concat(F.lit("v"), F.lpad((F.pmod(F.xxhash64("id"), F.lit(1000))).cast("string"), 4, "0")).alias("v"),
-    )
-    plain = {r.k: r.v for r in df.groupBy("k").agg(F.min("v").alias("v")).collect()}
-    salted = {r.k: r.v for r in salted_min(df, "k", "v", n_salt=16).collect()}
-    assert plain == salted
 
 
 # one hot term (T_HS) reached through its label, three synonyms and a

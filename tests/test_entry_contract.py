@@ -170,8 +170,6 @@ def test_each_query_is_declared_once():
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "biosd_feature_annotator_spark")
-# Pure-Python references the tests check the Spark kernels against.
-TEST_REFERENCE_IMPLS = {"py_bpe_tokens"}
 
 
 def _product_sources():
@@ -203,13 +201,14 @@ def _used_names(node):
 
 
 def test_every_public_package_definition_has_a_non_test_caller():
-    """No code without a caller: every public top-level function or class
-    of the package is used by non-test code. A use inside another package
-    definition counts only if that definition is used in turn, so a chain
-    whose only entry point is a test fails whole. A re-export from a
-    package ``__init__`` is not a use: it would keep alive whatever it
-    names."""
-    public, inner, used = set(), {}, set()
+    """No code without a caller: every top-level function or class of the
+    package, public or private, is used by non-test code. A use inside
+    another package definition counts only if that definition is used in
+    turn, so a chain whose only entry point is a test fails whole, and so
+    does a private helper left behind by a deleted caller. A re-export
+    from a package ``__init__`` is not a use: it would keep alive
+    whatever it names."""
+    inner, used = {}, set()
     for path in _product_sources():
         with open(path, encoding="utf-8") as fh:
             tree = ast.parse(fh.read(), path)
@@ -223,8 +222,6 @@ def test_every_public_package_definition_has_a_non_test_caller():
                 stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 inner.setdefault(stmt.name, set()).update(_used_names(stmt))
-                if not stmt.name.startswith("_"):
-                    public.add(stmt.name)
             else:
                 used.update(_used_names(stmt))
     todo = list(used & inner.keys())
@@ -233,7 +230,7 @@ def test_every_public_package_definition_has_a_non_test_caller():
             used.add(name)
             if name in inner:
                 todo.append(name)
-    orphans = public - used - TEST_REFERENCE_IMPLS
+    orphans = inner.keys() - used
     assert not orphans, f"package definitions only tests call: {sorted(orphans)}"
 
 

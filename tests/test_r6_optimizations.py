@@ -11,6 +11,7 @@ labels for the fused-probe connected components.
 from __future__ import annotations
 
 import pytest
+from conftest import synth_clustered_embeddings
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -216,20 +217,12 @@ def test_lsh_candidates_match_join_sizing_formulation(spark):
     assert _rows(got) == _rows(want)
 
 
-def _synth_emb(spark, n):
-    from biosd_feature_annotator_spark.operators.similarity import (
-        synth_clustered_embeddings,
-    )
-
-    return synth_clustered_embeddings(spark, n, dim=64)
-
-
 def test_cosine_topk_matches_inline_cosine_formulation(spark):
     """Brute-force top-k with hoisted norms == the inline-cosine form,
     raw doubles compared exactly."""
     from biosd_feature_annotator_spark.operators import similarity as s
 
-    e = _synth_emb(spark, 120)
+    e = synth_clustered_embeddings(spark, 120)
     q = e.where(F.col("vec_id") < 8)
     got = _rows(s.cosine_topk(q, e, k=5))
 
@@ -259,7 +252,7 @@ def test_semantic_dedup_matches_inline_cosine_formulation(spark):
     hoisted form is exactly what keeps the flags stable."""
     from biosd_feature_annotator_spark.operators import similarity as s
 
-    e = _synth_emb(spark, 200)
+    e = synth_clustered_embeddings(spark, 200)
     got = _rows(s.semantic_dedup(e, threshold=0.3, n_cells=8, dim=64))
 
     cents = s._planes(8, 64, 11)

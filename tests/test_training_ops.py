@@ -4,6 +4,7 @@ driver testdata (sf0.001) and small synthetic frames."""
 from __future__ import annotations
 
 import pytest
+from conftest import synth_clustered_embeddings
 from pyspark.sql import functions as F
 
 from biosd_feature_annotator_spark.operators import dedup, similarity, textstats
@@ -379,70 +380,14 @@ def test_ivf_topk_recall(emb):
     assert len(by_q) == len(exact)
 
 
-def test_ivf_kmeans_training_is_drop_in(spark):
-    """train_ivf_centroids: rounds=0 reproduces the untrained seed
-    centroids exactly (drop-in swap), trained centroids change only the
-    cell table (same plan shape, same output columns), and ann_recall is
-    1.0 for a result compared against itself."""
-    from biosd_feature_annotator_spark.operators import similarity as S
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    assert S.train_ivf_centroids(e, n_cells=4, dim=64, rounds=0) == S._planes(4, 64, 11)
-
-    cents = S.train_ivf_centroids(e, n_cells=4, dim=64, rounds=2)
-    assert len(cents) == 4 and all(len(c) == 64 for c in cents)
-    q = e.where("vec_id < 5")
-    trained = S.ivf_cosine_topk(q, e, k=3, n_cells=4, n_probe=2, dim=64,
-                                centroids=cents)
-    assert trained.columns == ["query_id", "neighbor_id", "cos", "rank"]
-    assert trained.count() > 0
-    assert S.ann_recall(trained, trained) == 1.0
-
-
-def test_ivf_trained_recall_on_clustered_embeddings(spark):
-    """The hedged claim from COVERAGE.md, demonstrated (r4 VERDICT ask
-    #2): on CLUSTERED embeddings (the realistic case — the driver's
-    near-uniform embeddings.parquet is the pathological one), k-means
-    training is the recall lever. Mixture-of-Gaussians fixture where
-    exact top-k is same-cluster by construction; untrained md5 centroids
-    split clusters across cells, trained cluster-mean centroids do not —
-    trained probe-1 recall must clear 0.9 AND strictly beat untrained
-    probe-2 (twice the probed fraction)."""
-    from biosd_feature_annotator_spark.operators import similarity as S
-
-    e = S.synth_clustered_embeddings(spark, 600, dim=32, k_centers=6).cache()
-    e.count()
-    q = e.where("vec_id < 30")
-    exact = S.cosine_topk(q, e, k=3).cache()
-    exact.count()
-    untrained_p2 = S.ann_recall(
-        S.ivf_cosine_topk(q, e, k=3, n_cells=6, n_probe=2, dim=32), exact
-    )
-    cents = S.train_ivf_centroids(e, n_cells=6, dim=32, rounds=3)
-    trained_p1 = S.ann_recall(
-        S.ivf_cosine_topk(q, e, k=3, n_cells=6, n_probe=1, dim=32,
-                          centroids=cents),
-        exact,
-    )
-    e.unpersist()
-    exact.unpersist()
-    assert trained_p1 >= 0.9, f"trained p1 recall {trained_p1}"
-    assert trained_p1 > untrained_p2, (
-        f"training must beat untrained at half the probes: "
-        f"trained_p1={trained_p1} untrained_p2={untrained_p2}"
-    )
-
-
 def test_pq_encode_and_adc_agree_with_bruteforce_on_codes(spark):
     """PQ plumbing invariants: codes are in range, deterministic, and a
     candidate sharing ALL codes with the query ranks by neighbor_id
-    (bitwise-equal ADC); rounds=0 training reproduces the seed
-    codebooks (drop-in swap)."""
+    (bitwise-equal ADC)."""
     from biosd_feature_annotator_spark.operators import similarity as S
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     cbs = S.pq_seed_codebooks(m=4, k=16, dim=64)
-    assert S.train_pq_codebooks(e, m=4, k=16, dim=64, rounds=0) == cbs
     codes = S.pq_encode(e, cbs).collect()
     assert len(codes) == e.count()
     assert all(len(r.codes) == 4 and all(0 <= c < 16 for c in r.codes)
@@ -453,22 +398,6 @@ def test_pq_encode_and_adc_agree_with_bruteforce_on_codes(spark):
     rows = top.collect()
     assert {r.query_id for r in rows} == {0, 1, 2, 3, 4}
     assert all(r.adc >= 0 for r in rows)
-
-
-def test_pq_training_reduces_reconstruction_error(spark):
-    """On clustered embeddings, Lloyd-trained codebooks must beat the
-    arbitrary seed codebooks on reconstruction MSE — the quality metric
-    PQ training exists for."""
-    from biosd_feature_annotator_spark.operators import similarity as S
-
-    e = S.synth_clustered_embeddings(spark, 400, dim=32, k_centers=4).cache()
-    e.count()
-    seed_cbs = S.pq_seed_codebooks(m=4, k=8, dim=32)
-    trained = S.train_pq_codebooks(e, m=4, k=8, dim=32, rounds=3)
-    mse_seed = S.pq_reconstruction_mse(e, seed_cbs)
-    mse_trained = S.pq_reconstruction_mse(e, trained)
-    e.unpersist()
-    assert mse_trained < mse_seed, (mse_trained, mse_seed)
 
 
 def test_decontaminate_flags_ngram_overlap(spark):
@@ -634,7 +563,7 @@ def test_semantic_dedup_drops_near_identical_in_cluster(spark):
     flagged frame covers every input row; rerun is identical."""
     from biosd_feature_annotator_spark.operators import similarity as S
 
-    e = S.synth_clustered_embeddings(
+    e = synth_clustered_embeddings(
         spark, 200, dim=32, k_centers=4, sigma=0.05
     ).cache()
     n = e.count()

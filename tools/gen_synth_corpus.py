@@ -8,8 +8,9 @@ it, DuckDB re-derives the expected triples per template in pure SQL
 (__spark_entry__.oracle_sql), so the comparison is non-circular.
 
 The file is committed so the oracle SQL can run even before the Spark
-query has executed (the driver may run either side first). Regenerate
-only if the synthesizer changes:
+query has executed (the driver may run either side first).
+tests/test_oracle_gates.py fails when the synthesizer drifts from the
+committed file. Regenerate only if the synthesizer changes:
 
     python tools/gen_synth_corpus.py
 """
@@ -25,14 +26,13 @@ sys.path.insert(0, REPO)
 OUT = os.path.join(REPO, "tests", "golden", "synth_corpus.parquet")
 
 
-def main() -> None:
+def corpus_table(spark):
+    """synth_transcripts(spark, 2000) ordered by (conv_id, turn_idx), as
+    the Arrow table the committed file holds."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from biosd_feature_annotator_spark.session import get_spark
     from biosd_feature_annotator_spark.synth import synth_transcripts
 
-    spark = get_spark(master="local[4]", app_name="gen-synth-corpus")
     pdf = (
         synth_transcripts(spark, 2000)
         .orderBy("conv_id", "turn_idx")
@@ -40,8 +40,18 @@ def main() -> None:
     )
     # Spark cannot read TIMESTAMP(NANOS) parquet — write microseconds
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), OUT)
-    print(f"wrote {len(pdf)} rows to {OUT}")
+    return pa.Table.from_pandas(pdf, preserve_index=False)
+
+
+def main() -> None:
+    import pyarrow.parquet as pq
+
+    from biosd_feature_annotator_spark.session import get_spark
+
+    spark = get_spark(master="local[4]", app_name="gen-synth-corpus")
+    table = corpus_table(spark)
+    pq.write_table(table, OUT)
+    print(f"wrote {table.num_rows} rows to {OUT}")
     spark.stop()
 
 

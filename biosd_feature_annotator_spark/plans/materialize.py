@@ -144,7 +144,10 @@ def run_annotate(
 
     # manifest: metrics from what was actually written (read-back = the
     # strongest lineage evidence) joined to input counts
-    written = spark.read.parquet(os.path.join(out_dir, "triples", f"run_id={run_id}"))
+    # the declared schema (part_id included) spares a schema-inference job
+    written = spark.read.schema(triples.schema).parquet(
+        os.path.join(out_dir, "triples", f"run_id={run_id}")
+    )
     if only_parts is not None or resume:
         processed = src.select("part_id").dropDuplicates()
         written = written.join(processed, "part_id", "left_semi")

@@ -6,6 +6,16 @@ you would set cluster-side too. The Iceberg catalog config is applied only
 when the runtime jar is present (SURVEY.md §7.3: not available in this
 sandbox — the parquet backend in plans/materialize.py keeps the same
 partition layout so the cluster path is one --packages flag away).
+
+Every Parquet file the engine writes (triple sink, manifests, nodes and
+edges, stream sinks, swapped stream state) is ZSTD at Spark's default
+level, Iceberg's own Parquet default since 1.4, instead of Spark's Snappy.
+On perfbench's seed-1 outputs that stores the same rows in ~25% fewer
+bytes (campaign_text, out_bytes_per_turn 15.2 -> 11.5) to ~28% fewer
+(campaign_entities, 34.6 -> 25.0; README has the bytes per table). Reads
+need no setting: Parquet records the codec per column chunk, so Snappy
+stores written before still read and resume. A session built without
+get_spark keeps its own codec. The shuffle codec stays Spark's lz4.
 """
 
 from __future__ import annotations
@@ -66,6 +76,7 @@ def get_spark(
         # 1000-executor DAGScheduler).
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )

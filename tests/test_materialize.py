@@ -93,6 +93,59 @@ def test_resume_builds_the_whole_runs_graph(spark, lexicon, transcripts, tmp_pat
     assert _graph(spark, out_part) == want
 
 
+def _codecs(out, table):
+    """The codec of every column chunk of every data file of one table."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    codecs = []
+    for f in glob.glob(os.path.join(out, table, "**", "*.parquet"), recursive=True):
+        md = pq.ParquetFile(f).metadata
+        codecs += [md.row_group(g).column(c).compression
+                   for g in range(md.num_row_groups) for c in range(md.num_columns)]
+    return codecs
+
+
+def test_every_sink_file_is_zstd(spark, lexicon, transcripts, tmp_path):
+    """get_spark's session writes the triples, the manifest, nodes and
+    edges with ZSTD."""
+    out = str(tmp_path / "zstd")
+    run_annotate(spark, transcripts, lexicon, out, "r", N_PARTS)
+    for table in ("triples", "manifests", "nodes", "edges"):
+        codecs = _codecs(out, table)
+        assert codecs and set(codecs) == {"ZSTD"}, (table, set(codecs))
+
+
+def test_resume_over_a_snappy_half_matches_a_one_shot_run(
+    spark, lexicon, transcripts, tmp_path
+):
+    """A store written partly under Spark's Snappy default, as stores
+    written before the ZSTD default are, still resumes: Parquet records
+    the codec per column chunk, so the reads mix codecs freely."""
+    out_full, out_mixed = str(tmp_path / "full"), str(tmp_path / "mixed")
+    run_annotate(spark, transcripts, lexicon, out_full, "r", N_PARTS)
+
+    key = "spark.sql.parquet.compression.codec"
+    codec = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    try:
+        run_annotate(spark, transcripts, lexicon, out_mixed, "r", N_PARTS,
+                     only_parts=[0, 1, 2, 3], build_graph=False)
+    finally:
+        spark.conf.set(key, codec)
+    run_annotate(spark, transcripts, lexicon, out_mixed, "r", N_PARTS,
+                 resume=True, build_graph=True)
+
+    assert {"SNAPPY", "ZSTD"} <= set(_codecs(out_mixed, "triples"))
+    triples = [sorted(map(tuple, read_triples(spark, out, "r").collect()))
+               for out in (out_full, out_mixed)]
+    assert triples[0] and triples[0] == triples[1]
+    assert _graph(spark, out_mixed) == _graph(spark, out_full)
+    parts = [r.part_id for r in read_manifests(spark, out_mixed).collect()]
+    assert sorted(parts) == list(range(N_PARTS))
+
+
 def test_resume_returns_only_this_invocations_rows(spark, lexicon, transcripts, tmp_path):
     """run_annotate returns the manifest rows it appended — not every row
     stored for the run — with the same fingerprints, counts and ts as the

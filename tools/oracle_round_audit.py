@@ -158,7 +158,18 @@ def margin_of(values, digits: int) -> tuple[float, float] | None:
     return None if best is None else (best, best_ulps)
 
 
-def audit(sf: str) -> list[tuple[str, str, int, float | None, int]]:
+def is_inner(digits: int, margin, output: bool) -> bool:
+    """A CTE-internal micro-quantizer: a digits=0 alias with no measurement
+    that is not an output column of the original oracle query, so there is
+    nothing to measure — its risk surfaces in whichever output column
+    consumes it. A missing output column is never inner."""
+    return margin is None and digits == 0 and not output
+
+
+def audit(sf: str) -> list[tuple[str, str, int, float | None, int, bool]]:
+    """(query, alias, digits, margin, rows, output) per audited alias;
+    ``output`` says whether the alias is an output column of the original
+    oracle query (its columns, read from a LIMIT 0 run)."""
     import __spark_entry__ as entrymod
 
     con = duckdb.connect()
@@ -173,15 +184,14 @@ def audit(sf: str) -> list[tuple[str, str, int, float | None, int]]:
         stripped, audited = deround(sql)
         if not audited:
             continue
+        outputs = {c.lower() for c in con.sql(sql).limit(0).columns}
         df = con.sql(stripped).df()
         cols = {c.lower(): c for c in df.columns}
         for alias, digits in audited:
             col = cols.get(alias)
-            if col is None:
-                rows.append((name, alias, digits, None, 0))
-                continue
-            vals = df[col].tolist()
-            rows.append((name, alias, digits, margin_of(vals, digits), len(vals)))
+            vals = [] if col is None else df[col].tolist()
+            rows.append((name, alias, digits, margin_of(vals, digits), len(vals),
+                         alias in outputs))
     return rows
 
 
@@ -191,12 +201,9 @@ def main() -> None:
     for sf in sfs:
         print(f"== {sf}")
         skipped_inner = 0
-        for name, alias, digits, m, n in audit(sf):
+        for name, alias, digits, m, n, output in audit(sf):
             tag = ""
-            if m is None and digits == 0:
-                # a CTE-internal micro-quantizer: not an output column of
-                # the final SELECT, so there is nothing to measure here —
-                # its risk surfaces in whichever OUTPUT column consumes it
+            if is_inner(digits, m, output):
                 skipped_inner += 1
                 continue
             if m is None:

@@ -14,9 +14,10 @@ unit was the transaction. The engine's unit is the *partition*:
   (bit_xor of row hashes), wall time. This is the parquet-backend stand-in
   for an Iceberg snapshot (SURVEY.md §7.3(1)); on a cluster the same code
   targets `df.writeTo(table).overwritePartitions()`.
-- resume: parts present in the manifest with status=done are anti-joined
-  out of the input (J4) — a crashed run re-processes only missing parts,
-  and re-writing a part is idempotent.
+- resume: the part ids present in the manifest with status=done are
+  collected (at most n_parts ints) and filtered out of the triple write
+  (J4) — a crashed run re-writes only missing parts, and re-writing a
+  part is idempotent.
 - purge (S7): drop one run's partition directories (Iceberg:
   DELETE WHERE run_id = ...).
 
@@ -54,20 +55,20 @@ MANIFEST_SCHEMA = (
 )
 
 
-def with_part_id(df: DataFrame, n_parts: int, key: str = "conv_id") -> DataFrame:
+def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn(
-        "part_id", F.pmod(F.xxhash64(key), F.lit(n_parts)).cast("int")
+        "part_id", F.pmod(F.xxhash64("conv_id"), F.lit(n_parts)).cast("int")
     )
 
 
-def fingerprint(df: DataFrame, cols: list[str], by: str = "part_id") -> DataFrame:
+def fingerprint(df: DataFrame, cols: list[str]) -> DataFrame:
     """Order-insensitive per-part content hash: bit_xor of per-row xxhash64.
     bit_xor never overflows (sum would, under ANSI mode) and is
     commutative — identical at any parallelism."""
     row_h = F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\0")) for c in cols])
     return (
         df.withColumn("_h", row_h)
-        .groupBy(by)
+        .groupBy("part_id")
         .agg(F.count("*").alias("n"), F.expr("bit_xor(_h)").alias("fp"))
     )
 
@@ -90,10 +91,9 @@ def materialize_graph(
     """S4: write nodes/edges (triples go through run_annotate's
     partitioned path)."""
     for name in ("nodes", "edges"):
-        if name in tables:
-            tables[name].write.mode("overwrite").parquet(
-                os.path.join(out_dir, name, f"run_id={run_id}")
-            )
+        tables[name].write.mode("overwrite").parquet(
+            os.path.join(out_dir, name, f"run_id={run_id}")
+        )
 
 
 def run_annotate(
@@ -103,7 +103,6 @@ def run_annotate(
     out_dir: str,
     run_id: str,
     n_parts: int = 32,
-    only_parts: list[int] | None = None,
     resume: bool = False,
     build_graph: bool = True,
 ) -> DataFrame:
@@ -112,27 +111,25 @@ def run_annotate(
     resume finds every part done), as a local frame of the rows appended
     to the store — the store is not read back.
 
-    only_parts simulates a partial/crashed run in tests; resume=True skips
-    parts already marked done in the manifest (anti-join J4) and then
-    rebuilds the nodes and edges of the whole run from the unfiltered
-    input.
+    resume=True skips the parts marked done in the manifest (J4). One
+    annotate plan serves triples and graph: with the graph it covers the
+    whole run and only the triple write skips the done parts; without it,
+    only the undone parts are extracted.
     """
     t0 = time.time()
-    src = with_part_id(transcripts, n_parts)
+    run = with_part_id(transcripts, n_parts)
+    m = read_manifests(spark, out_dir) if resume else None
+    done = [] if m is None else [r.part_id for r in m.where(
+        (F.col("run_id") == run_id) & (F.col("status") == "done")
+    ).select("part_id").distinct().collect()]
+    src = run.where(~F.col("part_id").isin(done)) if done else run
 
-    done = read_manifests(spark, out_dir) if resume else None
-    if done is not None:
-        done_parts = done.where(
-            (F.col("run_id") == run_id) & (F.col("status") == "done")
-        ).select("part_id").dropDuplicates()
-        src = src.join(done_parts, "part_id", "left_anti")
-    if only_parts is not None:
-        src = src.where(F.col("part_id").isin(only_parts))
-
-    plan = annotate(spark, src, lex, build_graph=build_graph and done is None)
+    plan = annotate(spark, run if build_graph else src, lex, build_graph=build_graph)
     # part_id is a pure function of conv_id — recompute on the output
     # rather than joining it back through the pipeline
     triples = with_part_id(plan["triples"], n_parts)
+    if done:
+        triples = triples.where(~F.col("part_id").isin(done))
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
@@ -143,14 +140,12 @@ def run_annotate(
     )
 
     # manifest: metrics from what was actually written (read-back = the
-    # strongest lineage evidence) joined to input counts
-    # the declared schema (part_id included) spares a schema-inference job
+    # strongest lineage evidence) joined to input counts; the left join
+    # from the input keeps only the parts this invocation processed.
+    # The declared schema (part_id included) spares a schema-inference job
     written = spark.read.schema(triples.schema).parquet(
         os.path.join(out_dir, "triples", f"run_id={run_id}")
     )
-    if only_parts is not None or resume:
-        processed = src.select("part_id").dropDuplicates()
-        written = written.join(processed, "part_id", "left_semi")
     t_fp = fingerprint(written, ["subj", "pred", "obj", "confidence"])
     i_fp = fingerprint(src, ["conv_id", "turn_idx", "text"])
     parts = (
@@ -183,20 +178,12 @@ def run_annotate(
     manifest.coalesce(1).write.mode("append").parquet(manifest_path(out_dir))
 
     if build_graph:
-        if done is not None:
-            # src holds only the parts left undone, and its anti-join
-            # re-reads the manifest store lazily, which by now marks every
-            # part done: the whole run's graph needs the unfiltered input
-            plan = annotate(spark, transcripts, lex)
         materialize_graph(plan, out_dir, run_id)
     return manifest
 
 
-def read_triples(spark: SparkSession, out_dir: str, run_id: str | None = None) -> DataFrame:
-    p = os.path.join(out_dir, "triples")
-    if run_id is not None:
-        return spark.read.parquet(os.path.join(p, f"run_id={run_id}"))
-    return spark.read.option("basePath", p).parquet(p)
+def read_triples(spark: SparkSession, out_dir: str, run_id: str) -> DataFrame:
+    return spark.read.parquet(os.path.join(out_dir, "triples", f"run_id={run_id}"))
 
 
 def diff_runs(
@@ -257,18 +244,17 @@ def _rewrite_manifests(spark: SparkSession, out_dir: str, keep) -> None:
     dirswap.swap_in(tmp, p)
 
 
-def purge_run(out_dir: str, run_id: str, spark: SparkSession | None = None) -> None:
-    """S7: drop one run's data (local parquet backend: remove partition
-    dirs; Iceberg backend: DELETE FROM ... WHERE run_id=...).
+def purge_run(out_dir: str, run_id: str, spark: SparkSession) -> None:
+    """S7: drop one run's data and manifest rows (local parquet backend:
+    remove partition dirs; Iceberg backend: DELETE FROM ... WHERE
+    run_id=...).
 
-    With a SparkSession the run's manifest rows are dropped too —
-    otherwise a later resume=True of the same run_id would anti-join every
-    part out against the stale status='done' rows and silently produce no
-    output while reporting success. The manifest rows go first: a crash
-    between the two steps leaves data with no manifest rows, which a
-    resume re-processes, never status='done' rows with no data."""
-    if spark is not None:
-        _rewrite_manifests(spark, out_dir, F.col("run_id") != run_id)
+    Stale status='done' rows would make a later resume=True of the same
+    run_id skip every part and silently produce no output while
+    reporting success. The manifest rows go first: a crash between the
+    two steps leaves data with no manifest rows, which a resume
+    re-processes, never status='done' rows with no data."""
+    _rewrite_manifests(spark, out_dir, F.col("run_id") != run_id)
     for name in ("triples", "nodes", "edges"):
         p = os.path.join(out_dir, name, f"run_id={run_id}")
         if os.path.exists(p):

@@ -50,7 +50,12 @@ def annotate(
     re-run the regex extraction once per consumer (measured 2-3× wall).
     MEMORY_AND_DISK so the 100 TB case degrades to local-disk spill; on a
     cluster a materialized intermediate table is the equivalent stage
-    checkpoint.
+    checkpoint. The stream passes False on purpose: uncached, a
+    micro-batch's plan runs MapInPandas twice, yet the persist costs more
+    at that size (720 synth turns, 4-core box: median 0.95 s per
+    ``extracted`` write with it, 0.57 s without, 10 alternating runs;
+    BENCH/one_plan_resume/probes.py). The option stays: its two callers
+    need different values.
 
     extraction: "python" (the iterator-pandas-UDF extractor — default) or
     "jvm" (operators/extract_jvm — the whole-stage-codegen backend with

@@ -37,8 +37,11 @@ def default_parallelism() -> int:
 
 def _local_threads(master: str, cores: int) -> int:
     """The worker-thread count N of a ``local[N]`` or ``local[N,F]``
-    (F = max task failures) master; ``cores`` for ``local[*]`` and for
-    non-local masters."""
+    (F = max task failures) master; 1 for a bare ``local``, which Spark
+    runs on one thread; ``cores`` for ``local[*]`` and for non-local
+    masters."""
+    if master == "local":
+        return 1
     n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
     n = n.split(",")[0]
     return cores if n in ("*", "") else int(n)

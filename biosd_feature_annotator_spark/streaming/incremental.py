@@ -6,7 +6,7 @@ they're stateless per turn, so the batch plan lifts to a stream untouched.
 ``trigger(availableNow=True)`` gives catch-up batch semantics with
 streaming checkpoints: the cluster cron-runs the job and it processes
 exactly the unseen files, then exits — the streaming analogue of the
-manifest/anti-join resume in plans/materialize.py.
+manifest resume in plans/materialize.py.
 """
 
 from __future__ import annotations
@@ -37,12 +37,14 @@ def annotate_stream(
     state), so the stream links exactly like the batch path. It writes the
     ``extracted`` triples only: term and value triples, no structural
     (saidBy/usesTool) ones, no conv_id repartition, no mention cache and
-    no graph. Progress tracking is the streaming checkpoint (file-source
-    offsets), so each file is processed exactly once across restarts; the
-    parquet append itself is at-least-once on crash mid-batch — on a
-    cluster the sink would be an Iceberg transactional append. The trigger
-    is availableNow: drain the unseen files, then stop. Returns the
-    StreamingQuery."""
+    no graph. Uncached, the batch's plan runs the extractor twice, which
+    still beats the persist at micro-batch sizes (see annotate's
+    ``cache_mentions``). Progress tracking is the streaming checkpoint
+    (file-source offsets), so each file is processed exactly once across
+    restarts; the parquet append itself is at-least-once on crash
+    mid-batch — on a cluster the sink would be an Iceberg transactional
+    append. The trigger is availableNow: drain the unseen files, then
+    stop. Returns the StreamingQuery."""
 
     def process_batch(batch_df, batch_id: int) -> None:
         annotate(

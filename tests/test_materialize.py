@@ -10,11 +10,13 @@ import pytest
 from conftest import write_transcripts
 from pyspark.sql import functions as F
 
+from biosd_feature_annotator_spark.plans import materialize
 from biosd_feature_annotator_spark.plans.materialize import (
     purge_run,
     read_manifests,
     read_triples,
     run_annotate,
+    with_part_id,
 )
 from biosd_feature_annotator_spark.synth import synth_transcripts
 
@@ -26,6 +28,12 @@ def transcripts(spark):
     df = synth_transcripts(spark, 800).persist()
     df.count()
     return df
+
+
+def crashed(transcripts):
+    """The input of a run that crashed after parts 0-3: running it fresh
+    leaves those four parts done, as the crash would."""
+    return with_part_id(transcripts, N_PARTS).where("part_id < 4").drop("part_id")
 
 
 def table_fp(df):
@@ -51,8 +59,7 @@ def test_resume_after_partial_run(spark, lexicon, transcripts, tmp_path):
 
     # crashed run: only parts 0-3 complete, then resume finishes the rest
     run_annotate(
-        spark, transcripts, lexicon, out_part, "r", N_PARTS,
-        only_parts=[0, 1, 2, 3], build_graph=False,
+        spark, crashed(transcripts), lexicon, out_part, "r", N_PARTS, build_graph=False,
     )
     m1 = read_manifests(spark, out_part)
     assert m1.where("status = 'done'").count() == 4
@@ -77,7 +84,7 @@ def _graph(spark, out):
 
 
 def test_resume_builds_the_whole_runs_graph(spark, lexicon, transcripts, tmp_path):
-    """Nodes and edges describe the whole run: a crash (only_parts) then
+    """Nodes and edges describe the whole run: a crash (parts 0-3) then
     a resume writes the same nodes and edges rows as a one-shot run, and
     so does a further resume that finds every part done."""
     out_full, out_part = str(tmp_path / "full"), str(tmp_path / "partial")
@@ -85,12 +92,40 @@ def test_resume_builds_the_whole_runs_graph(spark, lexicon, transcripts, tmp_pat
     want = _graph(spark, out_full)
     assert want["nodes"] and want["edges"]
 
-    run_annotate(spark, transcripts, lexicon, out_part, "r", N_PARTS,
-                 only_parts=[0, 1, 2, 3])
+    run_annotate(spark, crashed(transcripts), lexicon, out_part, "r", N_PARTS)
     run_annotate(spark, transcripts, lexicon, out_part, "r", N_PARTS, resume=True)
     assert _graph(spark, out_part) == want
     run_annotate(spark, transcripts, lexicon, out_part, "r", N_PARTS, resume=True)
     assert _graph(spark, out_part) == want
+
+
+def test_each_invocation_extracts_once(
+    spark, lexicon, transcripts, tmp_path, monkeypatch
+):
+    """run_annotate plans one annotate per invocation. A fresh run and a
+    resume with the graph extract every input row once; a resume without
+    the graph extracts only the undone parts' rows."""
+    calls = []
+    real = materialize.annotate
+
+    def counted(spark, df, *args, **kwargs):
+        calls.append(df.count())
+        return real(spark, df, *args, **kwargs)
+
+    monkeypatch.setattr(materialize, "annotate", counted)
+    n, n_done = transcripts.count(), crashed(transcripts).count()
+    assert 0 < n_done < n
+
+    run_annotate(spark, transcripts, lexicon, str(tmp_path / "fresh"), "r", N_PARTS)
+    assert calls == [n]
+    for build_graph, want in ((True, n), (False, n - n_done)):
+        out = str(tmp_path / f"graph_{build_graph}")
+        run_annotate(spark, crashed(transcripts), lexicon, out, "r", N_PARTS,
+                     build_graph=build_graph)
+        calls.clear()
+        run_annotate(spark, transcripts, lexicon, out, "r", N_PARTS, resume=True,
+                     build_graph=build_graph)
+        assert calls == [want], build_graph
 
 
 def _codecs(out, table):
@@ -130,8 +165,8 @@ def test_resume_over_a_snappy_half_matches_a_one_shot_run(
     codec = spark.conf.get(key)
     spark.conf.set(key, "snappy")
     try:
-        run_annotate(spark, transcripts, lexicon, out_mixed, "r", N_PARTS,
-                     only_parts=[0, 1, 2, 3], build_graph=False)
+        run_annotate(spark, crashed(transcripts), lexicon, out_mixed, "r", N_PARTS,
+                     build_graph=False)
     finally:
         spark.conf.set(key, codec)
     run_annotate(spark, transcripts, lexicon, out_mixed, "r", N_PARTS,
@@ -152,8 +187,7 @@ def test_resume_returns_only_this_invocations_rows(spark, lexicon, transcripts, 
     stored copies; a resume of a finished run appends and returns none."""
     out = str(tmp_path / "returned")
     first = run_annotate(
-        spark, transcripts, lexicon, out, "r", N_PARTS,
-        only_parts=[0, 1, 2, 3], build_graph=False,
+        spark, crashed(transcripts), lexicon, out, "r", N_PARTS, build_graph=False,
     )
     assert sorted(r.part_id for r in first.collect()) == [0, 1, 2, 3]
 
@@ -209,7 +243,7 @@ def test_purge(spark, lexicon, transcripts, tmp_path):
     out = str(tmp_path / "purge")
     run_annotate(spark, transcripts, lexicon, out, "a", 4, build_graph=False)
     run_annotate(spark, transcripts, lexicon, out, "b", 4, build_graph=False)
-    purge_run(out, "a")
+    purge_run(out, "a", spark=spark)
     assert not os.path.exists(os.path.join(out, "triples", "run_id=a"))
     assert read_triples(spark, out, "b").count() > 0
 

@@ -11,6 +11,7 @@ from biosd_feature_annotator_spark.session import _local_threads
     ("local[4]", 4),
     ("local[4,2]", 4),   # 2 = max task failures, not threads
     ("local[*]", 16),
+    ("local", 1),        # Spark's bare local master runs one thread
     ("yarn", 16),
 ])
 def test_shuffle_partitions_follow_the_local_thread_count(master, want):
